@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{count, lit}
 
 /** Per-round lineage truncation for iterative operators (PageRank,
   * connected components, any loop whose round-N plan would otherwise
@@ -28,8 +27,8 @@ import org.apache.spark.sql.functions.{count, lit}
   * scan of materialized partitions, not the loop's join chain
   * (CheckpointingSpec pins that, and that both modes produce identical
   * results). `eager` mirrors the Dataset API: eager materializes now;
-  * lazy defers to the caller's next action (the one-job-per-round
-  * pattern where a convergence count doubles as the materializer).
+  * lazy defers to the caller's next action. Iterative operators run
+  * their rounds through [[loop]]; [[truncate]] is for one-shot cuts.
   *
   * The checkpoint dir is SparkContext-global; this sets it only when this
   * helper hasn't already set the SAME dir for the context. The
@@ -76,34 +75,90 @@ object Checkpointing {
       df.checkpoint(eager)
   }
 
-  /** [[truncate]] + a bounded probe in ONE Spark job: truncates `df` and
-    * runs the given aggregation over the truncated frame, returning both.
-    * The iterative operators all pair an eager per-round truncation with a
-    * termination/budget probe (`isEmpty`, a count, a corruption flag) over
-    * the frame the truncation just materialized — two driver round-trips
-    * per round for one frame. In the localCheckpoint mode the checkpoint
-    * is marked LAZILY and the probe aggregation is the materializing
-    * action (an aggregate computes every partition, so the checkpoint is
-    * complete when it returns — the same guarantee eager's internal
-    * count() gives); in the reliable mode the write barrier stays its own
-    * job (the checkpoint IS a job there) and the probe scans the written
-    * partitions, so results are identical in both modes and the fold only
-    * changes how many jobs a round costs, never what it computes. */
-  def truncateProbe(df: DataFrame, reliableDir: Option[String],
-      aggs: Seq[Column]): (DataFrame, Row) = {
-    require(aggs.nonEmpty, "truncateProbe needs at least one aggregate")
-    val out = reliableDir match {
-      case None    => df.localCheckpoint(false)
-      case Some(_) => truncate(df, eager = true, reliableDir)
-    }
-    (out, out.agg(aggs.head, aggs.tail: _*).collect()(0))
+  /** What a [[loop]] does when its round cap arrives before its stop test
+    * fires: return the last round (the cap is part of the operator's
+    * meaning: a fixed round count, a truncated horizon) or refuse. */
+  sealed trait AtCap
+  object AtCap {
+    case object Return extends AtCap
+    final case class Refuse(error: () => Exception) extends AtCap
   }
 
-  /** [[truncateProbe]] specialized to the row count — the BFS/peel loops'
-    * exhaustion test, folded into the materialization job. */
-  def truncateCount(df: DataFrame,
-      reliableDir: Option[String]): (DataFrame, Long) = {
-    val (out, row) = truncateProbe(df, reliableDir, Seq(count(lit(1))))
-    (out, row.getLong(0))
+  /** One truncated frame of a [[loop]]: `index` 0 is the initial frame,
+    * `probe` the row the loop's probe columns aggregate over it, and
+    * `levels` every frame so far when the loop keeps levels (else just
+    * this one). */
+  final case class Round(frame: DataFrame, probe: Row, index: Int,
+      levels: IndexedSeq[DataFrame])
+
+  /** The one round loop of the iterative operators. Truncates `init` and
+    * then `step` of each round in `reliableDir`'s mode, until `stop`
+    * (previous probe row, this probe row) fires or `maxRounds` rounds
+    * have run, and returns `result` of the last round, eagerly truncated
+    * when `truncateResult`.
+    *
+    * Cost per frame, `probe` folded into the truncation:
+    *  - localCheckpoint: the checkpoint is marked lazily and the probe
+    *    aggregation is the action that fills it (an aggregate computes
+    *    every partition). Without probe columns the truncation is eager.
+    *    Either way the round costs no job beyond those of its own plan
+    *    (under AQE each of its broadcast and shuffle stages is one).
+    *  - reliable: the checkpoint write is a job of its own and the probe
+    *    a further job that scans the written files.
+    *  Results are identical in both modes.
+    *
+    * Frames: a round's predecessor is released as soon as the round is
+    * materialized, unless `keepLevels` (the BFS-style loops whose result
+    * is the union of every level). On return, every frame the result does
+    * not read is released; on any throw, the cap's refusal included,
+    * every frame is. Only localCheckpoint frames hold blocks; reliable
+    * checkpoint files stay in `reliableDir` for the caller to clean. */
+  def loop(init: DataFrame, reliableDir: Option[String], maxRounds: Int,
+      atCap: AtCap, probe: Seq[Column] = Nil, keepLevels: Boolean = false,
+      truncateResult: Boolean = false)(
+      step: Round => DataFrame,
+      stop: (Row, Row) => Boolean = (_, _) => false,
+      result: Round => DataFrame = _.frame): DataFrame = {
+    val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def round(df: DataFrame, index: Int): Round = {
+      val frame =
+        if (probe.nonEmpty && reliableDir.isEmpty) df.localCheckpoint(false)
+        else truncate(df, eager = true, reliableDir)
+      live += frame
+      val row =
+        if (probe.isEmpty) Row.empty
+        else frame.agg(probe.head, probe.tail: _*).collect()(0)
+      Round(frame, row, index, if (keepLevels) live.toVector else Vector(frame))
+    }
+    try {
+      var r = round(init, 0)
+      var stopped = false
+      while (!stopped && r.index < maxRounds) {
+        val prev = r
+        r = round(step(prev), prev.index + 1)
+        stopped = stop(prev.probe, r.probe)
+        if (!keepLevels) { release(prev.frame); live -= prev.frame }
+      }
+      atCap match {
+        case AtCap.Refuse(error) if !stopped => throw error()
+        case _ =>
+      }
+      val out =
+        if (truncateResult) truncate(result(r), eager = true, reliableDir)
+        else result(r)
+      val read = rdds(out).map(_.id).toSet
+      live.filterNot(f => rdds(f).exists(rdd => read(rdd.id))).foreach(release)
+      out
+    } catch {
+      case t: Throwable => live.foreach(release); throw t
+    }
   }
+
+  private def rdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+
+  private def release(frame: DataFrame): Unit =
+    rdds(frame).foreach(_.unpersist(blocking = false))
 }

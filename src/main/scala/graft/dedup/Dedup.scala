@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpointing
+import graft.core.Checkpointing.AtCap
 import graft.text.TextStats
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2.9 X1/X2):
@@ -729,7 +731,7 @@ object Dedup {
     * O(cluster diameter) rounds — near-dup clusters are shallow (diameter
     * ≤ 3-4 in practice), so a handful of rounds suffice. Each round is one
     * keyed shuffle; lineage truncation per round
-    * ([[graft.core.Checkpointing.truncate]]: `localCheckpoint` by default,
+    * ([[graft.core.Checkpointing.loop]]: `localCheckpoint` by default,
     * reliable `checkpoint` when `checkpointDir` is given — the multi-node
     * choice, since localCheckpoint pins partitions to executors and an
     * executor loss kills the lineage) keeps round N from replaying rounds
@@ -757,53 +759,44 @@ object Dedup {
     // Near-dup graphs are sparse: the active set is O(duplicates), so the
     // iteration joins run on duplicate-sized, usually broadcastable frames.
     val edgeNodes = edges.select(col("src").as(id)).distinct()
-    var labels = edgeNodes.select(col(id), col(id).as("component"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      // each node's candidate label: min over neighbors' labels
-      val fromNeighbors = edges
-        .join(labels.select(col(id).as("dst"), col("component")), "dst")
-        .groupBy(col("src").as(id))
-        .agg(min(col("component")).as("nbr_component"))
-      // The per-node changed flag rides inside the same frame, so the
-      // convergence check is a filter over the just-checkpointed data — no
-      // second label-vs-label join shuffle per round (which at corpus scale
-      // would double the per-round cost just to ask "did anything move?").
-      // The checkpoint is LAZY and the full (un-limited) count below is the
-      // round's ONE driver action: it computes every partition — materializing
-      // the checkpoint as a side effect — and returns the changed count, where
-      // an eager checkpoint plus a separate count ran two jobs per round.
-      val next = labels
-        .join(fromNeighbors, Seq(id), "left")
-        .select(col(id),
-          least(col("component"), coalesce(col("nbr_component"), col("component")))
-            .as("component"),
-          (col("nbr_component").isNotNull && col("nbr_component") < col("component"))
-            .as("__changed"))
-      val checkpointed =
-        graft.core.Checkpointing.truncate(next, eager = false, checkpointDir)
-      val changed = checkpointed.filter(col("__changed")).count()
-      labels = checkpointed.drop("__changed")
-      converged = changed == 0
-      i += 1
-    }
     val singletons = nodes.select(col(id))
       .join(edgeNodes, Seq(id), "left_anti")
       .select(col(id), col(id).as("component"))
-    // Materialize BEFORE unpersisting: the singletons branch reads edges, so
-    // dropping the caches first would silently re-run the (expensive) pair
-    // plan at the caller's first action.
-    labels = graft.core.Checkpointing.truncate(
-      labels.unionAll(singletons), eager = true, checkpointDir)
-    edges.unpersist()
-    p.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIterations rounds - " +
-          "a duplicate chain is longer than maxIterations; raise it " +
-          "(rounds needed = cluster diameter)")
-    labels
+    // The result is truncated BEFORE the caches drop: the singletons branch
+    // reads edges, so dropping them first would silently re-run the
+    // (expensive) pair plan at the caller's first action.
+    try Checkpointing.loop(
+        edgeNodes.select(col(id), col(id).as("component"),
+          lit(true).as("__changed")),
+        checkpointDir, maxIterations,
+        AtCap.Refuse(() => new IllegalStateException(
+          s"connectedComponents did not converge in $maxIterations rounds - " +
+            "a duplicate chain is longer than maxIterations; raise it " +
+            "(rounds needed = cluster diameter)")),
+        Seq(count(when(col("__changed"), lit(1)))), truncateResult = true)(
+      step = r => {
+        val labels = r.frame
+        // each node's candidate label: min over neighbors' labels
+        val fromNeighbors = edges
+          .join(labels.select(col(id).as("dst"), col("component")), "dst")
+          .groupBy(col("src").as(id))
+          .agg(min(col("component")).as("nbr_component"))
+        // The per-node changed flag rides inside the same frame, so the
+        // convergence probe is an aggregate over the round's own data —
+        // no second label-vs-label join shuffle per round (which at corpus
+        // scale would double the per-round cost just to ask "did anything
+        // move?").
+        labels
+          .join(fromNeighbors, Seq(id), "left")
+          .select(col(id),
+            least(col("component"), coalesce(col("nbr_component"), col("component")))
+              .as("component"),
+            (col("nbr_component").isNotNull && col("nbr_component") < col("component"))
+              .as("__changed"))
+      },
+      stop = (_, changed) => changed.getLong(0) == 0L,
+      result = _.frame.drop("__changed").unionAll(singletons))
+    finally { edges.unpersist(); p.unpersist() }
   }
 
   /** X40 — alternating large-star/small-star connected components (Kiveris
@@ -844,68 +837,53 @@ object Dedup {
       id: String,
       maxIterations: Int = 30,
       checkpointDir: Option[String] = None): DataFrame = {
-    def trunc(df: DataFrame, eager: Boolean) =
-      graft.core.Checkpointing.truncate(df, eager, checkpointDir)
     val canon = pairs.filter(col("id_a") =!= col("id_b"))
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .distinct()
-    var edges = trunc(canon, eager = true)
-    // the original edge endpoints — captured BEFORE contraction rewires
-    // edges, since a converged star drops interior chain nodes' edges only
-    // in the sense that every node still appears exactly once as a child
-    val edgeNodes = trunc(edges.select(col("u").as(id))
-      .unionAll(edges.select(col("v").as(id))).distinct(), eager = true)
-    def checksum(e: DataFrame): (Long, Long, Long) = {
-      val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))),
-        bit_xor(xxhash64(lit(0x9e3779b9L), col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    var sig = checksum(edges)
-    var converged = sig._1 == 0L
-    var i = 0
-    while (!converged && i < maxIterations) {
-      // LARGE-STAR: per center u (both directions), neighbors bigger than u
-      // re-link to the neighborhood minimum m ≤ u.
-      val nbrs = edges.select(col("u"), col("v"))
-        .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMins = nbrs.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      val afterLs = nbrs.filter(col("v") > col("u"))
-        .join(lsMins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // SMALL-STAR: per center u over its smaller neighbors (every canonical
-      // edge appears exactly once here, keyed by its bigger endpoint), the
-      // center and all of Γ⁻(u) re-link to m = min(Γ⁻(u)).
-      val ssMins = afterLs.groupBy("u").agg(min(col("v")).as("m"))
-      val afterSs = afterLs.join(ssMins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .unionAll(ssMins.select(col("u"), col("m").as("v")))
-        .distinct()
-      val afterSsT = trunc(afterSs, eager = false)
-      val nextSig = checksum(afterSsT) // materializes the lazy checkpoint
-      converged = nextSig == sig
-      sig = nextSig
-      edges = afterSsT
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIterations " +
-          "alternation rounds - raise maxIterations (rounds needed is " +
-          "logarithmic in component size)")
-    val singletons = nodes.select(col(id))
-      .join(edgeNodes, Seq(id), "left_anti")
-      .select(col(id), col(id).as("component"))
-    val roots = edges.select(col("v")).distinct()
-      .select(col("v").as(id), col("v").as("component"))
-    edges.select(col("u").as(id), col("v").as("component"))
-      .unionAll(roots)
-      .unionAll(singletons)
+    Checkpointing.loop(canon, checkpointDir, maxIterations,
+        AtCap.Refuse(() => new IllegalStateException(
+          s"connectedComponentsStar did not converge in $maxIterations " +
+            "alternation rounds - raise maxIterations (rounds needed is " +
+            "logarithmic in component size)")),
+        Seq(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))),
+          bit_xor(xxhash64(lit(0x9e3779b9L), col("u"), col("v")))))(
+      step = r => {
+        val edges = r.frame
+        // LARGE-STAR: per center u (both directions), neighbors bigger than
+        // u re-link to the neighborhood minimum m ≤ u.
+        val nbrs = edges.select(col("u"), col("v"))
+          .unionAll(edges.select(col("v").as("u"), col("u").as("v")))
+        val lsMins = nbrs.groupBy("u")
+          .agg(least(min(col("v")), col("u")).as("m"))
+        val afterLs = nbrs.filter(col("v") > col("u"))
+          .join(lsMins, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .distinct()
+        // SMALL-STAR: per center u over its smaller neighbors (every
+        // canonical edge appears exactly once here, keyed by its bigger
+        // endpoint), the center and all of Γ⁻(u) re-link to m = min(Γ⁻(u)).
+        val ssMins = afterLs.groupBy("u").agg(min(col("v")).as("m"))
+        afterLs.join(ssMins, "u")
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .unionAll(ssMins.select(col("u"), col("m").as("v")))
+          .distinct()
+      },
+      // the (count, two salted XORs) checksum repeating: a fixed point
+      stop = _ == _,
+      result = r => {
+        // contraction keeps every edge endpoint (each node still links to
+        // its component minimum), so the stars cover the original
+        // endpoints and the singletons are the nodes they do not cover
+        val stars = r.frame.select(col("u").as(id), col("v").as("component"))
+          .unionAll(r.frame.select(col("v")).distinct()
+            .select(col("v").as(id), col("v").as("component")))
+        stars.unionAll(nodes.select(col(id))
+          .join(stars.select(col(id)), Seq(id), "left_anti")
+          .select(col(id), col(id).as("component")))
+      })
   }
 
   /** X1b — LINE-level exact dedup (the C4/RefinedWeb boilerplate-removal

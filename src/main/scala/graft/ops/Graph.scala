@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpointing
+import graft.core.Checkpointing.AtCap
+
 /** Iterative link-graph analytics (X32) — the web-corpus curation signal
   * family: quality weighting by link structure (Common-Crawl-style pipelines
   * rank hosts by centrality before sampling), influence propagation over
@@ -20,6 +23,30 @@ import org.apache.spark.sql.functions._
   * per step; at the default scale=1e12 the drift is noise.
   */
 object Graph {
+
+  /** `(src, dst)` as longs with NULL endpoints dropped, self-loops dropped
+    * unless `selfLoops`, mirrored when `mirror`, deduped. */
+  private def canonicalEdges(edges: DataFrame, mirror: Boolean,
+      selfLoops: Boolean = true): DataFrame = {
+    require(edges.columns.contains("src") && edges.columns.contains("dst"),
+      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
+    val present = col("src").isNotNull && col("dst").isNotNull
+    val fwd = edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter(if (selfLoops) present else present && col("src") =!= col("dst"))
+    (if (mirror) fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
+      else fwd).distinct()
+  }
+
+  /** Runs `body` over [[canonicalEdges]] partitioned on `src` and persisted
+    * for the call: the layout every round's join by `src` reuses. */
+  private def withEdges[T](edges: DataFrame, mirror: Boolean,
+      selfLoops: Boolean = true)(body: DataFrame => T): T = {
+    val e = canonicalEdges(edges, mirror, selfLoops)
+      .repartition(col("src"))
+      .persist()
+    try body(e) finally e.unpersist()
+  }
 
   /** PageRank (Page, Brin, Motwani, Winograd 1999, "The PageRank citation
     * ranking") over a directed edge list `(src, dst)`, `iterations` rounds
@@ -54,7 +81,7 @@ object Graph {
     * per-round plan is join → partial-aggregated sum on `dst` → map-only
     * rank update — two node/edge-sized shuffles, no corpus-sized driver
     * state (the only driver scalar is N, one count). Each round ends in a
-    * lineage truncation ([[graft.core.Checkpointing.truncate]]) so round N
+    * lineage truncation ([[graft.core.Checkpointing.loop]]) so round N
     * never replays rounds 1..N−1: `localCheckpoint` by default (zero IO —
     * but partitions pin to executors, and a lost executor kills the loop),
     * or a reliable `checkpoint` when `checkpointDir` names a fault-tolerant
@@ -77,68 +104,52 @@ object Graph {
     // the largest products formed — keep them far from Long overflow
     require(scale <= Long.MaxValue / dampDen / 2,
       s"scale $scale too large for dampDen $dampDen (long overflow)")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src")) // the layout every iteration's join reuses
-      .persist()
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id")))
-      .distinct()
-      .persist()
-    // the finally matters: a mid-iteration job failure (or the empty-graph
-    // require) must not strand edge-sized caches in executor storage for
-    // the session lifetime — the last round's EAGER checkpoint means the
-    // returned frame is already materialized before the caches drop
-    try {
-      val n = nodes.count() // materializes both caches; the one driver scalar
-      require(n > 0, "pageRank needs at least one edge after null/dup removal")
+    withEdges(edges, mirror = false) { e =>
+      val nodes = e.select(col("src").as("id"))
+        .unionAll(e.select(col("dst").as("id")))
+        .distinct()
+        .persist()
       // out-degrees ride the same src layout as the edges they'll join
       val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
       // loop-invariant: the (edge, out-degree) join never changes across
       // rounds — materialize it once instead of re-joining every iteration
       val ed = e.join(deg, "src").persist()
+      // the finally matters: a mid-iteration job failure (or the empty-graph
+      // require) must not strand edge-sized caches in executor storage for
+      // the session lifetime — the last round's truncation means the
+      // returned frame is already materialized before the caches drop
       try {
+        val n = nodes.count() // materializes both caches; the one driver scalar
+        require(n > 0, "pageRank needs at least one edge after null/dup removal")
         val base = (scale * (dampDen - dampNum)) / (dampDen * n)
-        var ranks = nodes.select(col("id"), lit(scale / n).as("pr"))
-        var i = 0
-        while (i < iterations) {
+        Checkpointing.loop(nodes.select(col("id"), lit(scale / n).as("pr")),
+            checkpointDir, iterations, AtCap.Return)(step = r => {
+          val ranks = r.frame
           val incoming = ed
             .join(ranks.select(col("id").as("src"), col("pr")), "src")
             .select(col("dst").as("id"), expr("pr DIV outdeg").as("contrib"))
             .groupBy("id")
             .agg(sum(col("contrib")).as("inc"))
-          val next =
-            if (redistributeDangling) {
-              // this round's dangling mass: ranks of nodes with no
-              // out-edge — a node-sized anti-join reduced to ONE row,
-              // broadcast into the update (total mass ≤ scale, so the
-              // products below stay inside the overflow budget)
-              val dang = ranks
-                .join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-                .agg(coalesce(sum(col("pr")), lit(0L)).as("__dmass"))
-              nodes.join(incoming, Seq("id"), "left")
-                .crossJoin(broadcast(dang))
-                .select(col("id"),
-                  (lit(base) + expr(s"($dampNum * (coalesce(inc, 0L)" +
-                    s" + (__dmass DIV $n))) DIV $dampDen")).as("pr"))
-            } else
-              nodes.join(incoming, Seq("id"), "left")
-                .select(col("id"),
-                  (lit(base) + expr(s"($dampNum * coalesce(inc, 0L)) DIV $dampDen"))
-                    .as("pr"))
-          ranks = graft.core.Checkpointing.truncate(next, eager = true,
-            checkpointDir)
-          i += 1
-        }
-        ranks
-      } finally { deg.unpersist(); ed.unpersist() }
-    } finally {
-      nodes.unpersist()
-      e.unpersist()
+          if (redistributeDangling) {
+            // this round's dangling mass: ranks of nodes with no
+            // out-edge — a node-sized anti-join reduced to ONE row,
+            // broadcast into the update (total mass ≤ scale, so the
+            // products below stay inside the overflow budget)
+            val dang = ranks
+              .join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
+              .agg(coalesce(sum(col("pr")), lit(0L)).as("__dmass"))
+            nodes.join(incoming, Seq("id"), "left")
+              .crossJoin(broadcast(dang))
+              .select(col("id"),
+                (lit(base) + expr(s"($dampNum * (coalesce(inc, 0L)" +
+                  s" + (__dmass DIV $n))) DIV $dampDen")).as("pr"))
+          } else
+            nodes.join(incoming, Seq("id"), "left")
+              .select(col("id"),
+                (lit(base) + expr(s"($dampNum * coalesce(inc, 0L)) DIV $dampDen"))
+                  .as("pr"))
+        })
+      } finally { nodes.unpersist(); deg.unpersist(); ed.unpersist() }
     }
   }
 
@@ -184,72 +195,57 @@ object Graph {
     require(scale >= 1000000L, s"scale must be >= 1e6, got $scale")
     require(scale <= Long.MaxValue / dampDen / 2,
       s"scale $scale too large for dampDen $dampDen (long overflow)")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
     require(seeds.columns.contains("id"),
       s"seed frame needs an (id) column, got ${seeds.columns.mkString(", ")}")
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .persist()
-    val sd = seeds.select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct()
-    // seed flag rides the node universe: edge endpoints ∪ seeds
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id")))
-      .unionAll(sd)
-      .distinct()
-      .join(sd.select(col("id"), lit(1L).as("__seed")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__seed"), lit(0L)).as("__seed"))
-      .persist()
-    try {
-      val sCount = nodes.filter(col("__seed") === 1L).count()
-      require(sCount > 0,
-        "personalizedPageRank needs at least one non-null seed")
-      nodes.count()
+    withEdges(edges, mirror = false) { e =>
+      val sd = seeds.select(col("id").cast("long").as("id"))
+        .filter(col("id").isNotNull).distinct()
+      // seed flag rides the node universe: edge endpoints ∪ seeds
+      val nodes = e.select(col("src").as("id"))
+        .unionAll(e.select(col("dst").as("id")))
+        .unionAll(sd)
+        .distinct()
+        .join(sd.select(col("id"), lit(1L).as("__seed")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__seed"), lit(0L)).as("__seed"))
+        .persist()
       val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
       // loop-invariant (the pageRank stance): edge ⋈ out-degree once
       val ed = e.join(deg, "src").persist()
       try {
+        val sCount = nodes.filter(col("__seed") === 1L).count()
+        require(sCount > 0,
+          "personalizedPageRank needs at least one non-null seed")
+        nodes.count()
         val base = (scale * (dampDen - dampNum)) / (dampDen * sCount)
-        var ranks = nodes.select(col("id"),
-          when(col("__seed") === 1L, lit(scale / sCount)).otherwise(lit(0L))
-            .as("pr"))
-        var i = 0
-        while (i < iterations) {
+        val seedBase = when(col("__seed") === 1L, lit(base)).otherwise(lit(0L))
+        Checkpointing.loop(
+            nodes.select(col("id"),
+              when(col("__seed") === 1L, lit(scale / sCount)).otherwise(lit(0L))
+                .as("pr")),
+            checkpointDir, iterations, AtCap.Return)(step = r => {
+          val ranks = r.frame
           val incoming = ed
             .join(ranks.select(col("id").as("src"), col("pr")), "src")
             .select(col("dst").as("id"), expr("pr DIV outdeg").as("contrib"))
             .groupBy("id")
             .agg(sum(col("contrib")).as("inc"))
           val joined = nodes.join(incoming, Seq("id"), "left")
-          val next =
-            if (redistributeDangling) {
-              val dang = ranks
-                .join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-                .agg(coalesce(sum(col("pr")), lit(0L)).as("__dmass"))
-              joined.crossJoin(broadcast(dang))
-                .select(col("id"),
-                  (when(col("__seed") === 1L, lit(base)).otherwise(lit(0L)) +
-                    expr(s"($dampNum * (coalesce(inc, 0L) + (CASE WHEN " +
-                      s"__seed = 1 THEN __dmass DIV $sCount ELSE 0 END)))" +
-                      s" DIV $dampDen")).as("pr"))
-            } else
-              joined.select(col("id"),
-                (when(col("__seed") === 1L, lit(base)).otherwise(lit(0L)) +
-                  expr(s"($dampNum * coalesce(inc, 0L)) DIV $dampDen"))
-                  .as("pr"))
-          ranks = graft.core.Checkpointing.truncate(next, eager = true,
-            checkpointDir)
-          i += 1
-        }
-        ranks
-      } finally { deg.unpersist(); ed.unpersist() }
-    } finally {
-      nodes.unpersist()
-      e.unpersist()
+          if (redistributeDangling) {
+            val dang = ranks
+              .join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
+              .agg(coalesce(sum(col("pr")), lit(0L)).as("__dmass"))
+            joined.crossJoin(broadcast(dang))
+              .select(col("id"),
+                (seedBase +
+                  expr(s"($dampNum * (coalesce(inc, 0L) + (CASE WHEN " +
+                    s"__seed = 1 THEN __dmass DIV $sCount ELSE 0 END)))" +
+                    s" DIV $dampDen")).as("pr"))
+          } else
+            joined.select(col("id"),
+              (seedBase + expr(s"($dampNum * coalesce(inc, 0L)) DIV $dampDen"))
+                .as("pr"))
+        })
+      } finally { nodes.unpersist(); deg.unpersist(); ed.unpersist() }
     }
   }
 
@@ -300,80 +296,73 @@ object Graph {
       s"iterations must be in [1, 50], got $iterations")
     require(scale >= 1000000L && scale <= Long.MaxValue / 2,
       s"scale must be in [1e6, Long.MaxValue/2], got $scale")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
     val d = org.apache.spark.sql.types.DecimalType(38, 0)
-    val eBase = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    // eByDst and nodes derive from the PERSISTED eBySrc — materializing
-    // each from eBase re-ran the distinct once per frame (three full
-    // canonicalization shuffles for one edge set)
-    val eBySrc = eBase.repartition(col("src")).persist()
-    val eByDst = eBySrc.repartition(col("dst")).persist()
-    val nodes = eBySrc.select(col("src").as("id"))
-      .unionAll(eBySrc.select(col("dst").as("id")))
-      .distinct()
-      .persist()
-    // per-node degrees, fixed across rounds: the L1 totals collapse to
-    // Σ_v mass(v)·degree(v) (Σ_dst Σ_{src→dst} h[src] regroups by src),
-    // so each round's total needs only this node-sized frame — the
-    // former scalar subquery re-ran the whole edge join + aggregation
-    // a second time inside the broadcast subtree, doubling every round
-    val outDeg = eBySrc.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("__deg")).persist()
-    val inDeg = eByDst.groupBy(col("dst").as("id"))
-      .agg(count(lit(1)).as("__deg")).persist()
-    try {
-      val n = nodes.count()
-      require(n > 0, "hits needs at least one edge after null/dup removal")
-      require(scale >= 1000L * n,
-        s"scale $scale < 1000·n ($n nodes) — init mass would floor to " +
-          "zero; raise scale")
-      // floored L1 renormalization: positive operands, so the DECIMAL
-      // remainder-subtract is the same floor DuckDB's // takes
-      def renorm(raw: String, tot: String): String =
-        s"""CAST(CASE WHEN $tot > 0 THEN
-           |  (CAST(coalesce($raw, 0) AS DECIMAL(38,0)) * $scale
-           |   - (CAST(coalesce($raw, 0) AS DECIMAL(38,0)) * $scale) % $tot)
-           |  / $tot ELSE 0 END AS BIGINT)""".stripMargin
-      var hub = nodes.select(col("id"), lit(scale / n).as("h"))
-      var auth: DataFrame = null
-      var i = 0
-      while (i < iterations) {
-        val aRaw = eBySrc
-          .join(hub.select(col("id").as("src"), col("h")), "src")
-          .groupBy(col("dst").as("id")).agg(sum("h").as("__araw"))
-        val aTot = hub.join(outDeg, "id")
-          .agg(coalesce(sum(col("h").cast(d) * col("__deg")),
-            lit(0).cast(d)).as("__asum"))
-        auth = graft.core.Checkpointing.truncate(
+    withEdges(edges, mirror = false) { eBySrc =>
+      // eByDst and nodes derive from the PERSISTED eBySrc, so the
+      // canonicalizing distinct runs once for the three frames
+      val eByDst = eBySrc.repartition(col("dst")).persist()
+      val nodes = eBySrc.select(col("src").as("id"))
+        .unionAll(eBySrc.select(col("dst").as("id")))
+        .distinct()
+        .persist()
+      // per-node degrees, fixed across rounds: the L1 totals collapse to
+      // Σ_v mass(v)·degree(v) (Σ_dst Σ_{src→dst} h[src] regroups by src),
+      // so each round's total needs only this node-sized frame, not a
+      // second edge join + aggregation inside the broadcast subtree
+      val outDeg = eBySrc.groupBy(col("src").as("id"))
+        .agg(count(lit(1)).as("__deg")).persist()
+      val inDeg = eByDst.groupBy(col("dst").as("id"))
+        .agg(count(lit(1)).as("__deg")).persist()
+      try {
+        val n = nodes.count()
+        require(n > 0, "hits needs at least one edge after null/dup removal")
+        require(scale >= 1000L * n,
+          s"scale $scale < 1000·n ($n nodes) — init mass would floor to " +
+            "zero; raise scale")
+        // floored L1 renormalization: positive operands, so the DECIMAL
+        // remainder-subtract is the same floor DuckDB's // takes
+        def renorm(raw: String, tot: String): String =
+          s"""CAST(CASE WHEN $tot > 0 THEN
+             |  (CAST(coalesce($raw, 0) AS DECIMAL(38,0)) * $scale
+             |   - (CAST(coalesce($raw, 0) AS DECIMAL(38,0)) * $scale) % $tot)
+             |  / $tot ELSE 0 END AS BIGINT)""".stripMargin
+        // auth from the previous hubs: (id, a)
+        def authHalf(hub: DataFrame): DataFrame = {
+          val aRaw = eBySrc
+            .join(hub.select(col("id").as("src"), col("h")), "src")
+            .groupBy(col("dst").as("id")).agg(sum("h").as("__araw"))
+          val aTot = hub.join(outDeg, "id")
+            .agg(coalesce(sum(col("h").cast(d) * col("__deg")),
+              lit(0).cast(d)).as("__asum"))
           nodes.join(aRaw, Seq("id"), "left")
             .crossJoin(broadcast(aTot))
-            .select(col("id"), expr(renorm("__araw", "__asum")).as("a")),
-          eager = true, checkpointDir)
-        val hRaw = eByDst
-          .join(auth.select(col("id").as("dst"), col("a")), "dst")
-          .groupBy(col("src").as("id")).agg(sum("a").as("__hraw"))
-        val hTot = auth.join(inDeg, "id")
-          .agg(coalesce(sum(col("a").cast(d) * col("__deg")),
-            lit(0).cast(d)).as("__hsum"))
-        hub = graft.core.Checkpointing.truncate(
-          nodes.join(hRaw, Seq("id"), "left")
+            .select(col("id"), expr(renorm("__araw", "__asum")).as("a"))
+        }
+        // hubs from this round's auths, carrying them: (id, h, a)
+        def hubHalf(auth: DataFrame): DataFrame = {
+          val hRaw = eByDst
+            .join(auth.select(col("id").as("dst"), col("a")), "dst")
+            .groupBy(col("src").as("id")).agg(sum("a").as("__hraw"))
+          val hTot = auth.join(inDeg, "id")
+            .agg(coalesce(sum(col("a").cast(d) * col("__deg")),
+              lit(0).cast(d)).as("__hsum"))
+          auth.join(hRaw, Seq("id"), "left")
             .crossJoin(broadcast(hTot))
-            .select(col("id"), expr(renorm("__hraw", "__hsum")).as("h")),
-          eager = true, checkpointDir)
-        i += 1
+            .select(col("id"), expr(renorm("__hraw", "__hsum")).as("h"),
+              col("a"))
+        }
+        // each half-round is one loop round: frames at even indices hold
+        // hubs (index 0 the start), odd ones auths
+        Checkpointing.loop(nodes.select(col("id"), lit(scale / n).as("h")),
+            checkpointDir, 2 * iterations, AtCap.Return)(
+          step = r => if (r.index % 2 == 0) authHalf(r.frame) else hubHalf(r.frame),
+          result = _.frame.select(col("id"), col("h").as("hub"), col("a").as("auth")))
+      } finally {
+        nodes.unpersist()
+        eByDst.unpersist()
+        outDeg.unpersist()
+        inDeg.unpersist()
       }
-      hub.join(auth, "id")
-        .select(col("id"), col("h").as("hub"), col("a").as("auth"))
-    } finally {
-      nodes.unpersist()
-      eBySrc.unpersist()
-      eByDst.unpersist()
-      outDeg.unpersist()
-      inDeg.unpersist()
     }
   }
 
@@ -494,9 +483,8 @@ object Graph {
     * shuffle; per round = one keyed join + distinct + one anti-join
     * against visited, lineage-truncated ([[graft.core.Checkpointing]],
     * same knob as [[pageRank]]) so round k never replays rounds 1..k−1.
-    * The loop stops at the first EMPTY frontier (one cheap emptiness
-    * probe per round on the already-materialized truncated frame — a
-    * node-sized driver scalar, the BFS termination test every
+    * The loop stops at the first EMPTY frontier (a row count folded into
+    * the round's truncation — the BFS termination test every
     * implementation needs) or at `maxDepth`, the hard cap that bounds
     * the round count on adversarial diameters. Unreached nodes are
     * ABSENT from the output ("not reachable" ≠ "distance 0").
@@ -506,56 +494,31 @@ object Graph {
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 200,
       s"maxDepth must be in [1, 200], got $maxDepth")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
     require(sources.columns.contains("id"),
       s"source frame needs an (id) column, got ${sources.columns.mkString(", ")}")
-    val fwd = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = (if (undirected)
-        fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      else fwd)
-      .distinct()
-      .repartition(col("src"))
-      .persist()
-    try {
-      // Levels buffer (the harmonicCentrality stance): each level is
-      // truncated ONCE and `visited` is a LAZY union of the materialized
-      // level frames — the former per-round union-and-retruncate re-wrote
-      // the whole accumulated frame every level, O(depth²) materialized
-      // bytes. The per-round exhaustion test rides the SAME job that
-      // materializes the level (truncateCount), so a round costs ONE
-      // driver action instead of three.
-      val (init, nInit) = graft.core.Checkpointing.truncateCount(
-        sources.select(col("id").cast("long").as("id"))
-          .filter(col("id").isNotNull).distinct()
-          .select(col("id"), lit(0).as("dist")),
-        checkpointDir)
-      require(nInit > 0, "bfsLevels: empty source set")
-      val levels = scala.collection.mutable.ArrayBuffer(init)
-      def visited = levels.reduce(_ unionAll _)
-      var frontier = init
-      var depth = 0
-      var exhausted = false
-      while (depth < maxDepth && !exhausted) {
-        val (next, n) = graft.core.Checkpointing.truncateCount(
-          frontier.select(col("id").as("src"))
+    withEdges(edges, mirror = undirected) { e =>
+      // Levels buffer: each level is truncated ONCE and `visited` is a
+      // LAZY union of the materialized levels — re-truncating the
+      // accumulated union every round would re-write O(depth²) bytes.
+      Checkpointing.loop(
+          sources.select(col("id").cast("long").as("id"))
+            .filter(col("id").isNotNull).distinct()
+            .select(col("id"), lit(0).as("dist")),
+          checkpointDir, maxDepth, AtCap.Return, Seq(count(lit(1))),
+          keepLevels = true)(
+        step = r => {
+          require(r.index > 0 || r.probe.getLong(0) > 0L,
+            "bfsLevels: empty source set")
+          r.frame.select(col("id").as("src"))
             .join(e, "src")
             .select(col("dst").as("id")).distinct()
-            .join(visited.select("id"), Seq("id"), "left_anti")
-            .select(col("id"), lit(depth + 1).as("dist")),
-          checkpointDir)
-        if (n == 0) exhausted = true
-        else {
-          levels += next
-          frontier = next
-          depth += 1
-        }
-      }
-      visited
-    } finally e.unpersist()
+            .join(r.levels.reduce(_ unionAll _).select("id"), Seq("id"),
+              "left_anti")
+            .select(col("id"), lit(r.index + 1).as("dist"))
+        },
+        stop = (_, level) => level.getLong(0) == 0L,
+        result = _.levels.reduce(_ unionAll _))
+    }
   }
 
   /** X117 — weighted single-source shortest paths: [[bfsLevels]]'s loop
@@ -614,46 +577,40 @@ object Graph {
       .repartition(col("src"))
       .persist()
     try {
-      val (init, nInit) = graft.core.Checkpointing.truncateCount(
-        sources.select(col("id").cast("long").as("id"))
-          .filter(col("id").isNotNull).distinct()
-          .select(col("id"), lit(0L).as("dist")),
-        checkpointDir)
-      require(nInit > 0, "sssp: empty source set")
-      var dist = init
-      var frontier = init
-      var iters = 0
-      var exhausted = false
-      while (iters < maxIters && !exhausted) {
-        val cand = frontier.select(col("id").as("src"), col("dist"))
-          .join(e, "src")
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("dist") + col("w")).as("cd"))
-        // LAZY truncate + improved-count over the truncated frame: the
-        // count computes every partition — materializing the round's
-        // checkpoint — AND answers the no-improvement convergence test,
-        // one driver action per round where eager + isEmpty ran two (the
-        // connectedComponents fold, shared via truncateProbe's rationale).
-        val (merged, row) = graft.core.Checkpointing.truncateProbe(
-          dist.join(cand, Seq("id"), "full")
-            .select(col("id"),
-              least(coalesce(col("dist"), lit(Long.MaxValue)),
-                coalesce(col("cd"), lit(Long.MaxValue))).as("dist"),
-              (col("cd").isNotNull &&
-                (col("dist").isNull || col("cd") < col("dist")))
-                .as("__imp")),
-          checkpointDir,
-          Seq(count(when(col("__imp"), lit(1)))))
-        if (row.getLong(0) == 0L) exhausted = true
-        else {
-          dist = merged.select("id", "dist")
-          frontier = merged.filter(col("__imp")).select("id", "dist")
-          iters += 1
-        }
-      }
-      dist
+      Checkpointing.loop(
+          sources.select(col("id").cast("long").as("id"))
+            .filter(col("id").isNotNull).distinct()
+            .select(col("id"), lit(0L).as("dist"), lit(true).as("__imp")),
+          checkpointDir, maxIters, AtCap.Return, improvedCount)(
+        step = r => {
+          require(r.index > 0 || r.probe.getLong(0) > 0L,
+            "sssp: empty source set")
+          relax(e, r.frame)
+        },
+        stop = (_, improved) => improved.getLong(0) == 0L,
+        result = _.frame.select("id", "dist"))
     } finally e.unpersist()
   }
+
+  /** One synchronous min-plus round over `(id, dist, __imp)` frames: the
+    * nodes that improved last round relax their out-edges, each node
+    * keeps the minimum, `__imp` marks strict improvements and `__old` the
+    * distance an improvement replaced. */
+  private def relax(e: DataFrame, d: DataFrame): DataFrame = {
+    val cand = d.filter(col("__imp")).select(col("id").as("src"), col("dist"))
+      .join(e, "src")
+      .groupBy(col("dst").as("id"))
+      .agg(min(col("dist") + col("w")).as("cd"))
+    d.select("id", "dist").join(cand, Seq("id"), "full")
+      .select(col("id"),
+        least(coalesce(col("dist"), lit(Long.MaxValue)),
+          coalesce(col("cd"), lit(Long.MaxValue))).as("dist"),
+        (col("cd").isNotNull &&
+          (col("dist").isNull || col("cd") < col("dist"))).as("__imp"),
+        col("dist").as("__old"))
+  }
+
+  private val improvedCount = Seq(count(when(col("__imp"), lit(1))))
 
   /** The canonical shortest-path-TREE parent for every reached node:
     * given final distances, `parent(v) = min{ u : dist(u) + w(u,v) =
@@ -715,16 +672,8 @@ object Graph {
       checkpointDir: Option[String] = None): DataFrame = {
     val dist = bfsLevels(edges, sources, maxDepth, undirected, checkpointDir)
       .select(col("id"), col("dist").cast("long").as("dist"))
-    val fwd = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = (if (undirected)
-        fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      else fwd)
-      .distinct()
-      .select(col("src"), col("dst"), lit(1L).as("w"))
-    withParents(dist, e)
+    withParents(dist, canonicalEdges(edges, mirror = undirected)
+      .select(col("src"), col("dst"), lit(1L).as("w")))
   }
 
   /** X144 — negative-cycle detection, the variant [[sssp]]'s doc defers
@@ -800,56 +749,21 @@ object Graph {
         s"$nNodes nodes need ${nNodes - 1} Bellman-Ford rounds > " +
           s"maxIters=$maxIters — cannot certify within the budget; " +
           "REFUSED rather than a silent partial verdict")
-      val (init, nInit) = graft.core.Checkpointing.truncateCount(
-        src.select(col("id"), lit(0L).as("dist")), checkpointDir)
-      require(nInit > 0, "negativeCycleWitnesses: empty source set")
-      var dist = init
-      var frontier = init
-      // one round of synchronous min-plus relaxation: (new dist table,
-      // strictly-improved rows, improved count). The sssp fold: the
-      // improved count rides the job that materializes the round's
-      // checkpoint, one driver action per round instead of two.
-      def relax(d: DataFrame, f: DataFrame): (DataFrame, DataFrame, Long) = {
-        val cand = f.select(col("id").as("src"), col("dist"))
-          .join(e, "src")
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("dist") + col("w")).as("cd"))
-        val (merged, row) = graft.core.Checkpointing.truncateProbe(
-          d.join(cand, Seq("id"), "full")
-            .select(col("id"),
-              least(coalesce(col("dist"), lit(Long.MaxValue)),
-                coalesce(col("cd"), lit(Long.MaxValue))).as("dist"),
-              (col("cd").isNotNull &&
-                (col("dist").isNull || col("cd") < col("dist")))
-                .as("__imp")),
-          checkpointDir, Seq(count(when(col("__imp"), lit(1)))))
-        (merged.select("id", "dist"), merged.filter(col("__imp")),
-          row.getLong(0))
-      }
-      var iters = 0L
-      var converged = false
-      while (iters < nNodes - 1 && !converged) {
-        val (next, improved, nImp) = relax(dist, frontier)
-        if (nImp == 0L) converged = true
-        else {
-          dist = next
-          frontier = improved.select("id", "dist")
-          iters += 1
-        }
-      }
-      if (converged)
-        // the convergence certificate: an empty witness frame
-        dist.select(col("id"), col("dist").as("dist_stable"),
-          col("dist").as("dist_witness")).limit(0)
-      else {
-        // the witness round: improvements after the full |V|−1 budget
-        val stable = dist
-        val (_, improved, _) = relax(stable, frontier)
-        improved.select(col("id"), col("dist").as("dist_witness"))
-          .join(stable.select(col("id"), col("dist").as("dist_stable")),
-            "id")
-          .select("id", "dist_stable", "dist_witness")
-      }
+      // |V|−1 Bellman-Ford rounds, then the witness round. A round that
+      // improves nothing is convergence: its empty witness set is the
+      // certificate, and no later round could change it.
+      Checkpointing.loop(
+          src.select(col("id"), lit(0L).as("dist"), lit(true).as("__imp")),
+          checkpointDir, nNodes.toInt, AtCap.Return, improvedCount)(
+        step = r => {
+          require(r.index > 0 || r.probe.getLong(0) > 0L,
+            "negativeCycleWitnesses: empty source set")
+          relax(e, r.frame)
+        },
+        stop = (_, improved) => improved.getLong(0) == 0L,
+        result = _.frame.filter(col("__imp") && col("__old").isNotNull)
+          .select(col("id"), col("__old").as("dist_stable"),
+            col("dist").as("dist_witness")))
     } finally e.unpersist()
   }
 
@@ -884,54 +798,24 @@ object Graph {
     require(k >= 1 && k <= 1000000, s"k must be in [1, 1e6], got $k")
     require(maxIters >= 1 && maxIters <= 1000,
       s"maxIters must be in [1, 1000], got $maxIters")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
-    val fwd = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    val e = fwd.unionAll(fwd.select(col("dst").as("src"),
-        col("src").as("dst")))
-      .distinct()
-      .repartition(col("src"))
-      .persist()
-    try {
-      // truncateCount: the surviving-node count rides the job that
-      // materializes each round's checkpoint — one driver action per peel
-      // round instead of the former eager-truncate + count pair.
-      val (init, n0) = graft.core.Checkpointing.truncateCount(
-        e.select(col("src").as("id")).distinct(), checkpointDir)
-      var live = init
-      var n = n0
-      var iters = 0
-      var stable = n == 0
-      var degrees: DataFrame = null
-      while (!stable) {
-        require(iters < maxIters,
-          s"k-core peel exceeded $maxIters rounds — k=$k is mis-chosen " +
-            "for this graph's degeneracy; raise maxIters deliberately")
-        val deg = e
-          .join(live.select(col("id").as("src")), "src")
-          .join(live.select(col("id").as("dst")), "dst")
+    withEdges(edges, mirror = true, selfLoops = false) { e =>
+      // a peel round that keeps every node is the fixpoint; one that keeps
+      // none is the empty core
+      Checkpointing.loop(e.select(col("src").as("id")).distinct(),
+          checkpointDir, maxIters,
+          AtCap.Refuse(() => new IllegalArgumentException(
+            s"k-core peel exceeded $maxIters rounds — k=$k is mis-chosen " +
+              "for this graph's degeneracy; raise maxIters deliberately")),
+          Seq(count(lit(1))))(
+        step = r => e
+          .join(r.frame.select(col("id").as("src")), "src")
+          .join(r.frame.select(col("id").as("dst")), "dst")
           .groupBy(col("src").as("id"))
           .agg(count(lit(1)).as("degree"))
-        val (next, m) = graft.core.Checkpointing.truncateCount(
-          deg.filter(col("degree") >= k), checkpointDir)
-        if (m == n) { stable = true; degrees = next }
-        else if (m == 0) { stable = true; degrees = null }
-        else { live = next.select("id"); n = m; iters += 1 }
-      }
-      if (degrees == null)
-        live.sparkSession.createDataFrame(
-          live.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("degree",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      else degrees.select(col("id"), col("degree"))
-    } finally e.unpersist()
+          .filter(col("degree") >= k),
+        stop = (live, kept) =>
+          kept.getLong(0) == live.getLong(0) || kept.getLong(0) == 0L)
+    }
   }
 
   /** X136 — deterministic label-propagation community detection
@@ -971,16 +855,7 @@ object Graph {
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIters >= 1 && maxIters <= 1000,
       s"maxIters must be in [1, 1000], got $maxIters")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
-    val fwd = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    val mirrored = fwd.unionAll(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val mirrored = canonicalEdges(edges, mirror = true, selfLoops = false)
     val nodes = mirrored.select(col("src").as("id")).distinct()
     // closed neighborhood: the self-vote rides as one (v, v) edge row,
     // so each round references the label frame exactly ONCE (the same
@@ -990,40 +865,32 @@ object Graph {
       .repartition(col("dst"))
       .persist()
     try {
-      val (init, nInit) = graft.core.Checkpointing.truncateCount(
-        nodes.select(col("id"), col("id").as("label")), checkpointDir)
-      var labels = init
-      var iters = 0
-      var converged = nInit == 0
-      while (!converged) {
-        require(iters < maxIters,
-          s"label propagation did not converge in $maxIters rounds — " +
-            "synchronous updates are oscillating on this graph; raise " +
-            "maxIters deliberately or pre-filter with kCore")
-        // The changed flag rides the round frame itself (one node-sized
-        // join against the previous labels INSIDE the materializing job),
-        // so the convergence probe — formerly its own join + limit(1)
-        // job per round — is answered by the same aggregation that
-        // materializes the round's checkpoint: one driver action/round.
-        val (next, row) = graft.core.Checkpointing.truncateProbe(
-          e.join(labels.withColumnRenamed("id", "dst")
-              .withColumnRenamed("label", "__nl"), "dst")
-            .groupBy(col("src").as("id"), col("__nl"))
-            .agg(count(lit(1)).as("__c"))
-            // most frequent label, ties to the smallest: min on the
-            // struct (−count, label) needs no window Exchange
-            .groupBy("id")
-            .agg(min(struct((-col("__c")).as("__nc"),
-              col("__nl").as("l"))).as("__m"))
-            .select(col("id"), col("__m.l").as("label"))
-            .join(labels.withColumnRenamed("label", "__old"), "id")
-            .select(col("id"), col("label"),
-              (col("label") =!= col("__old")).as("__chg")),
-          checkpointDir, Seq(count(when(col("__chg"), lit(1)))))
-        if (row.getLong(0) == 0L) converged = true
-        else { labels = next.select("id", "label"); iters += 1 }
-      }
-      labels.select("id", "label")
+      Checkpointing.loop(
+          nodes.select(col("id"), col("id").as("label"), lit(true).as("__chg")),
+          checkpointDir, maxIters,
+          AtCap.Refuse(() => new IllegalArgumentException(
+            s"label propagation did not converge in $maxIters rounds — " +
+              "synchronous updates are oscillating on this graph; raise " +
+              "maxIters deliberately or pre-filter with kCore")),
+          Seq(count(when(col("__chg"), lit(1)))))(
+        // the changed flag rides the round frame itself (one node-sized
+        // join against the previous labels), so the probe needs no join
+        step = r => e
+          .join(r.frame.select(col("id").as("dst"), col("label").as("__nl")),
+            "dst")
+          .groupBy(col("src").as("id"), col("__nl"))
+          .agg(count(lit(1)).as("__c"))
+          // most frequent label, ties to the smallest: min on the
+          // struct (−count, label) needs no window Exchange
+          .groupBy("id")
+          .agg(min(struct((-col("__c")).as("__nc"),
+            col("__nl").as("l"))).as("__m"))
+          .select(col("id"), col("__m.l").as("label"))
+          .join(r.frame.select(col("id"), col("label").as("__old")), "id")
+          .select(col("id"), col("label"),
+            (col("label") =!= col("__old")).as("__chg")),
+        stop = (_, changed) => changed.getLong(0) == 0L,
+        result = _.frame.select("id", "label"))
     } finally e.unpersist()
   }
 
@@ -1094,7 +961,7 @@ object Graph {
     *
     * Scale shape: the tree persists node-sized and PRE-PARTITIONED on
     * id; each round is one keyed join of the TARGET-sized route frame
-    * against it plus two `limit(1)` probes (corruption, liveness),
+    * against it plus one probe aggregate (corruption, liveness),
     * lineage-truncated via [[graft.core.Checkpointing]]; route arrays
     * are ≤ maxHops+1 longs. Never edge-sized, never all-routes-at-once
     * in the driver. Output: `(target, route_len, route)`. */
@@ -1118,53 +985,44 @@ object Graph {
       require(dup.isEmpty,
         s"walkPaths: node ${dup.headOption.map(_.get(0))} appears more " +
           "than once in the paths frame — corrupted paths frame")
-      val (state0, nTargets) = graft.core.Checkpointing.truncateCount(
-        targets.select(col("id").cast("long").as("target"))
-          .filter(col("target").isNotNull).distinct()
-          .withColumn("__cur", col("target"))
-          .withColumn("__route", array().cast("array<bigint>")),
-        checkpointDir)
-      var state = state0
-      var hops = 0
-      var live = nTargets > 0
-      while (live && hops <= maxHops) {
-        // ONE job per round: the corruption verdict rides as a flag INTO
-        // the round frame, the truncation is LAZY, and the probe
-        // aggregation below is the action that materializes it — the
-        // corruption verdict, the any-cursor-live flag, and the
-        // checkpoint write all share one driver action (they were an
-        // eager truncate plus two separate limit(1) jobs).
-        // A LIVE cursor the tree doesn't know is fine at the HEAD
-        // (unreached target) but corruption mid-route — the walkPath
-        // contract; finished rows (NULL cursor) also join nothing and
-        // must not trip this.
-        val (next, probe) = graft.core.Checkpointing.truncateProbe(
-          state.join(tree, state("__cur") === tree("__tid"), "left")
-            .select(col("target"),
-              when(col("__tid").isNotNull, col("__par")).as("__cur"),
-              when(col("__tid").isNotNull,
-                  concat(array(col("__cur")), col("__route")))
-                .otherwise(col("__route")).as("__route"),
-              (col("__cur").isNotNull && col("__tid").isNull &&
-                size(col("__route")) > 0).as("__bad"),
-              col("__cur").as("__prev")),
-          checkpointDir,
+      // A LIVE cursor the tree doesn't know is fine at the HEAD
+      // (unreached target) but corruption mid-route — the walkPath
+      // contract; finished rows (NULL cursor) also join nothing and
+      // must not trip this. The verdict rides the round frame as a flag
+      // and the probe reads it with the any-cursor-live flag.
+      Checkpointing.loop(
+          targets.select(col("id").cast("long").as("target"))
+            .filter(col("target").isNotNull).distinct()
+            .withColumn("__cur", col("target"))
+            .withColumn("__route", array().cast("array<bigint>"))
+            .withColumn("__bad", lit(false))
+            .withColumn("__prev", lit(null).cast("long")),
+          checkpointDir, maxHops + 1,
+          AtCap.Refuse(() => new IllegalArgumentException(
+            s"walkPaths exceeded $maxHops hops — cycle in the parent tree?")),
           Seq(max(when(col("__bad"), struct(col("__prev")))).as("__badPrev"),
             max(when(col("__cur").isNotNull, lit(1)).otherwise(lit(0)))
-              .as("__live")))
-        require(probe.isNullAt(0),
-          s"walkPaths: parent ${Option(probe.getStruct(0)).map(_.get(0))} " +
-            "missing from the tree — corrupted paths frame")
-        state = next.select("target", "__cur", "__route")
-        live = !probe.isNullAt(1) && probe.getInt(1) == 1
-        hops += 1
-      }
-      require(!live,
-        s"walkPaths exceeded $maxHops hops — cycle in the parent tree?")
-      state.select(col("target"),
-        size(col("__route")).cast("long").as("route_len"),
-        when(size(col("__route")) > 0,
-          concat_ws("->", col("__route"))).as("route"))
+              .as("__live")))(
+        step = r => r.frame
+          .join(tree, r.frame("__cur") === tree("__tid"), "left")
+          .select(col("target"),
+            when(col("__tid").isNotNull, col("__par")).as("__cur"),
+            when(col("__tid").isNotNull,
+                concat(array(col("__cur")), col("__route")))
+              .otherwise(col("__route")).as("__route"),
+            (col("__cur").isNotNull && col("__tid").isNull &&
+              size(col("__route")) > 0).as("__bad"),
+            col("__cur").as("__prev")),
+        stop = (_, probe) => {
+          require(probe.isNullAt(0),
+            s"walkPaths: parent ${Option(probe.getStruct(0)).map(_.get(0))} " +
+              "missing from the tree — corrupted paths frame")
+          probe.isNullAt(1) || probe.getInt(1) == 0
+        },
+        result = _.frame.select(col("target"),
+          size(col("__route")).cast("long").as("route_len"),
+          when(size(col("__route")) > 0,
+            concat_ws("->", col("__route"))).as("route")))
     } finally tree.unpersist()
   }
 
@@ -1210,21 +1068,9 @@ object Graph {
       s"maxDepth must be in [1, 200], got $maxDepth")
     require(maxSeeds >= 1 && maxSeeds <= 100000,
       s"maxSeeds must be in [1, 1e5], got $maxSeeds")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
     require(seeds.columns.contains("id"),
       s"seed frame needs an (id) column, got ${seeds.columns.mkString(", ")}")
-    val fwd = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = (if (undirected)
-        fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      else fwd)
-      .distinct()
-      .repartition(col("src"))
-      .persist()
-    try {
+    withEdges(edges, mirror = undirected) { e =>
       val seedFrame = seeds.select(col("id").cast("long").as("seed"))
         .filter(col("seed").isNotNull).distinct()
         .persist()
@@ -1235,53 +1081,34 @@ object Graph {
           s"harmonicCentrality: $nSeeds seeds > $maxSeeds — the " +
             "frontier is seeds×nodes sized; score candidate hubs, not " +
             "the corpus (all-pairs centrality is a different problem)")
-        // Levels buffer: each BFS level is truncated ONCE; `visited` is a
-        // LAZY union of the materialized level frames. The former
-        // union-and-retruncate-per-round re-wrote the whole accumulated
-        // frame every level — O(depth²) materialized bytes; the lazy
-        // union scans the same blocks without ever re-writing them. The
-        // exhaustion test rides the materializing job (truncateCount):
-        // one driver action per level, not two.
-        val levels = scala.collection.mutable.ArrayBuffer(
-          graft.core.Checkpointing.truncate(
+        // Levels buffer (the bfsLevels stance): `visited` is a LAZY union
+        // of the levels, each truncated once.
+        Checkpointing.loop(
             seedFrame.select(col("seed"), col("seed").as("id"),
               lit(0).as("dist")),
-            eager = true, checkpointDir))
-        def visited = levels.reduce(_ unionAll _)
-        var frontier = levels.head
-        var depth = 0
-        var exhausted = false
-        while (depth < maxDepth && !exhausted) {
-          val (next, n) = graft.core.Checkpointing.truncateCount(
-            frontier.select(col("seed"), col("id").as("src"))
-              .join(e, "src")
-              .select(col("seed"), col("dst").as("id")).distinct()
-              .join(visited.select("seed", "id"), Seq("seed", "id"),
-                "left_anti")
-              .select(col("seed"), col("id"), lit(depth + 1).as("dist")),
-            checkpointDir)
-          if (n == 0) exhausted = true
-          else {
-            levels += next
-            frontier = next
-            depth += 1
-          }
-        }
-        seedFrame.join(
-            visited.filter(col("dist") > 0)
-              .groupBy(col("seed"), col("dist"))
-              .agg(count(lit(1)).as("__c"))
-              .groupBy("seed")
-              .agg(sum(col("__c")).as("n_reached"),
-                sum(col("__c") * expr("1000000 DIV dist"))
-                  .as("harmonic_micro")),
-            Seq("seed"), "left")
-          .select(col("seed"),
-            coalesce(col("n_reached"), lit(0L)).as("n_reached"),
-            coalesce(col("harmonic_micro"), lit(0L)).as("harmonic_micro"))
-          .localCheckpoint(true)
+            checkpointDir, maxDepth, AtCap.Return, Seq(count(lit(1))),
+            keepLevels = true, truncateResult = true)(
+          step = r => r.frame.select(col("seed"), col("id").as("src"))
+            .join(e, "src")
+            .select(col("seed"), col("dst").as("id")).distinct()
+            .join(r.levels.reduce(_ unionAll _).select("seed", "id"),
+              Seq("seed", "id"), "left_anti")
+            .select(col("seed"), col("id"), lit(r.index + 1).as("dist")),
+          stop = (_, level) => level.getLong(0) == 0L,
+          result = r => seedFrame.join(
+              r.levels.reduce(_ unionAll _).filter(col("dist") > 0)
+                .groupBy(col("seed"), col("dist"))
+                .agg(count(lit(1)).as("__c"))
+                .groupBy("seed")
+                .agg(sum(col("__c")).as("n_reached"),
+                  sum(col("__c") * expr("1000000 DIV dist"))
+                    .as("harmonic_micro")),
+              Seq("seed"), "left")
+            .select(col("seed"),
+              coalesce(col("n_reached"), lit(0L)).as("n_reached"),
+              coalesce(col("harmonic_micro"), lit(0L)).as("harmonic_micro")))
       } finally seedFrame.unpersist()
-    } finally e.unpersist()
+    }
   }
 
   /** X176 — SAMPLED betweenness centrality (Brandes, J. Math. Soc.
@@ -1330,22 +1157,10 @@ object Graph {
       s"maxDepth must be in [1, 200], got $maxDepth")
     require(maxSeeds >= 1 && maxSeeds <= 100000,
       s"maxSeeds must be in [1, 1e5], got $maxSeeds")
-    require(edges.columns.contains("src") && edges.columns.contains("dst"),
-      s"edge frame needs (src, dst) columns, got ${edges.columns.mkString(", ")}")
     require(seeds.columns.contains("id"),
       s"seed frame needs an (id) column, got ${seeds.columns.mkString(", ")}")
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val fwd = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = (if (undirected)
-        fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      else fwd)
-      .distinct()
-      .repartition(col("src"))
-      .persist()
-    try {
+    withEdges(edges, mirror = undirected) { e =>
       val seedFrame = seeds.select(col("id").cast("long").as("seed"))
         .filter(col("seed").isNotNull).distinct()
         .persist()
@@ -1357,110 +1172,77 @@ object Graph {
             "frontier is seeds×nodes sized; sample sources, don't " +
             "enumerate them (exact all-pairs Brandes is O(V·E) and a " +
             "different operator)")
-        // FORWARD: (seed, id, dist, sigma) — σ exact integer path counts.
-        // Levels buffer (the harmonicCentrality stance): each level is
-        // truncated ONCE and `visited` is a LAZY union of the
-        // materialized level frames — the former per-round
-        // union-and-retruncate re-wrote the whole accumulated frame
-        // every level, O(depth²) materialized bytes for zero new
-        // information. The exhaustion test AND the σ-budget probe both
-        // ride the materializing job (truncateProbe): the former shape
-        // paid an isEmpty job per level plus one more full visited scan
-        // after the loop just to ask "did any σ pass 1e15?".
-        val levels = scala.collection.mutable.ArrayBuffer(
-          graft.core.Checkpointing.truncate(
+        val sigmaCap = lit(1000000000000000L).cast(d38)
+        // FORWARD: (seed, id, dist, sigma) — σ exact integer path counts,
+        // levels buffered as in bfsLevels. The σ-budget probe rides the
+        // truncation with the exhaustion test.
+        Checkpointing.loop(
             seedFrame.select(col("seed"), col("seed").as("id"),
               lit(0).as("dist"), lit(1L).cast(d38).as("sigma")),
-            eager = true, checkpointDir))
-        def visited = levels.reduce(_ unionAll _)
-        var frontier = levels.head
-        var depth = 0
-        var exhausted = false
-        // σ at level 0 is exactly 1 — inside any budget
-        var sigmaOver = false
-        val sigmaCap = lit(1000000000000000L).cast(d38)
-        while (depth < maxDepth && !exhausted) {
-          val (next, row) = graft.core.Checkpointing.truncateProbe(
-            frontier.select(col("seed"), col("id").as("src"),
-                col("sigma"))
-              .join(e, "src")
-              .groupBy(col("seed"), col("dst").as("id"))
-              .agg(sum(col("sigma")).as("sigma"))
-              .join(visited.select("seed", "id"), Seq("seed", "id"),
-                "left_anti")
-              .select(col("seed"), col("id"), lit(depth + 1).as("dist"),
-                col("sigma")),
-            checkpointDir,
-            Seq(count(lit(1)), count(when(col("sigma") > sigmaCap, lit(1)))))
-          if (row.getLong(1) > 0L) sigmaOver = true
-          if (row.getLong(0) == 0L) exhausted = true
-          else {
-            levels += next
-            frontier = next
-            depth += 1
-          }
-        }
-        {
-          require(!sigmaOver,
-            "betweennessSampled: a path count exceeds 1e15 — the " +
-              "DECIMAL(38) backward-product headroom; this graph's " +
-              "path multiplicity needs a different estimator")
-          val dmax = depth
-          // BACKWARD: δ accumulated level by level from the deepest up.
-          // Each per-level frame is (seed, id, sigma, delta): a node's
-          // ONE dist is its level index (the anti-join guarantees first
-          // visit only), so carrying σ forward and indexing levels by d
-          // replaces BOTH re-attach joins of the former shape — the
-          // wside σ join and the final dist-filter join — with plain
-          // column selects; values are identical because (seed, id) ↦
-          // (dist, σ) is a function.
-          var deltas = levels(dmax)
-            .select(col("seed"), col("id"), col("sigma"),
-              lit(0L).cast(d38).as("delta"))
-          val deltaLevels =
-            scala.collection.mutable.ArrayBuffer((dmax, deltas))
-          var d = dmax - 1
-          while (d >= 0) {
-            val level = levels(d)
-            // the successor side: the previous level's deltas (exactly
-            // the depth-d+1 nodes) with their σ_w carried in-frame
-            val wside = deltas
-              .select(col("seed"), col("id").as("dst"),
-                col("delta").as("__dw"), col("sigma").as("__sw"))
-            val contrib = level
-              .select(col("seed"), col("id"), col("sigma"))
-              .join(e.select(col("src").as("id"), col("dst")), Seq("id"))
-              .join(wside, Seq("seed", "dst"))
-              // the stated floor: (σ_v·(1e6+δ_w) − mod) / σ_w — all
-              // operands non-negative exact integers
-              .withColumn("__t", expr(
-                """CAST((sigma * (1000000 + __dw)
-                  |  - (sigma * (1000000 + __dw)) % __sw)
-                  | / __sw AS DECIMAL(38,0))""".stripMargin))
-              .groupBy(col("seed"), col("id"))
-              .agg(sum(col("__t")).as("__delta"))
-            val nextDeltas = graft.core.Checkpointing.truncate(
-              level.select(col("seed"), col("id"), col("sigma"))
-                .join(contrib, Seq("seed", "id"), "left")
-                .select(col("seed"), col("id"), col("sigma"),
-                  coalesce(col("__delta"), lit(0L).cast(d38))
-                    .as("delta")),
-              eager = true, checkpointDir)
-            deltas = nextDeltas
-            deltaLevels += ((d, nextDeltas))
-            d -= 1
-          }
-          // per-node rollup over seeds; the seed's own position (dist
-          // 0) never scores — level 0 is simply left out of the union
-          deltaLevels.collect { case (dist, f) if dist > 0 => f }
-            .reduceOption(_ unionAll _)
-            .getOrElse(deltas.filter(lit(false)))
-            .groupBy("id")
-            .agg(sum(col("delta")).cast("long").as("betweenness_micro"))
-            .localCheckpoint(true)
-        }
+            checkpointDir, maxDepth, AtCap.Return,
+            Seq(count(lit(1)), count(when(col("sigma") > sigmaCap, lit(1)))),
+            keepLevels = true)(
+          step = r => r.frame
+            .select(col("seed"), col("id").as("src"), col("sigma"))
+            .join(e, "src")
+            .groupBy(col("seed"), col("dst").as("id"))
+            .agg(sum(col("sigma")).as("sigma"))
+            .join(r.levels.reduce(_ unionAll _).select("seed", "id"),
+              Seq("seed", "id"), "left_anti")
+            .select(col("seed"), col("id"), lit(r.index + 1).as("dist"),
+              col("sigma")),
+          stop = (_, level) => {
+            require(level.getLong(1) == 0L,
+              "betweennessSampled: a path count exceeds 1e15 — the " +
+                "DECIMAL(38) backward-product headroom; this graph's " +
+                "path multiplicity needs a different estimator")
+            level.getLong(0) == 0L
+          },
+          result = fwd => {
+            // BACKWARD: δ accumulated level by level from the deepest up
+            // (an empty deepest level scores like the one above it). Each
+            // per-level frame is (seed, id, sigma, delta): a node's ONE
+            // dist is its level index (the anti-join guarantees first
+            // visit only), so carrying σ forward and indexing levels by d
+            // needs no re-attach join — (seed, id) ↦ (dist, σ) is a
+            // function.
+            val levels = fwd.levels
+            Checkpointing.loop(
+                levels.last.select(col("seed"), col("id"), col("sigma"),
+                  lit(0L).cast(d38).as("delta")),
+                checkpointDir, levels.size - 1, AtCap.Return,
+                keepLevels = true, truncateResult = true)(
+              step = r => {
+                val level = levels(levels.size - 2 - r.index)
+                  .select(col("seed"), col("id"), col("sigma"))
+                // the successor side: the previous level's deltas (exactly
+                // the next-deeper nodes) with their σ_w carried in-frame
+                val wside = r.frame
+                  .select(col("seed"), col("id").as("dst"),
+                    col("delta").as("__dw"), col("sigma").as("__sw"))
+                val contrib = level
+                  .join(e.select(col("src").as("id"), col("dst")), Seq("id"))
+                  .join(wside, Seq("seed", "dst"))
+                  // the stated floor: (σ_v·(1e6+δ_w) − mod) / σ_w — all
+                  // operands non-negative exact integers
+                  .withColumn("__t", expr(
+                    """CAST((sigma * (1000000 + __dw)
+                      |  - (sigma * (1000000 + __dw)) % __sw)
+                      | / __sw AS DECIMAL(38,0))""".stripMargin))
+                  .groupBy(col("seed"), col("id"))
+                  .agg(sum(col("__t")).as("__delta"))
+                level.join(contrib, Seq("seed", "id"), "left")
+                  .select(col("seed"), col("id"), col("sigma"),
+                    coalesce(col("__delta"), lit(0L).cast(d38)).as("delta"))
+              },
+              // per-node rollup over seeds; the seed's own position (dist
+              // 0, the last level up) never scores
+              result = _.levels.dropRight(1).reduce(_ unionAll _)
+                .groupBy("id")
+                .agg(sum(col("delta")).cast("long").as("betweenness_micro")))
+          })
       } finally seedFrame.unpersist()
-    } finally e.unpersist()
+    }
   }
 
   /** X159 — modularity of a community assignment (Newman & Girvan,

@@ -1,26 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
+import graft.tools.Harness.{json, r3}
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same tz as Verify: the events fixture's tz-naive timestamps are
-      // cast NTZ→TIMESTAMP at read, which is only value-stable under UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep catalog-registered staging tables (q149 writeBucketed) from
-      // littering a spark-warehouse/ dir into the repo working directory
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up JVM/codegen/parquet-reader paths so the first timed query
-    // doesn't absorb ~4s of one-time initialization.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
 
     // Sorted execution order: Map iteration order is arbitrary, which makes
     // per-query timings incomparable across rounds (the first query touching
@@ -30,38 +16,14 @@ object Bench {
     // they now go into the persisted full-results file below.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
-    // Environment sentinel: a deterministic fixed-work integer loop, timed
-    // single-thread and all-core at suite start AND end, plus loadavg. The
-    // box's speed has swung ±40% across rounds and classifying a "regression"
-    // as environmental has so far needed multi-session A/B forensics
-    // (r06/r10); with the calibration in the artifact the comparison divides
-    // out the box: q_time/cal_st is round-comparable even when wall time
-    // isn't. xorshift64 with the sum fed to a sink so the JIT can't elide it.
-    def spin(iters: Long): Long = {
-      var x = 0x9e3779b97f4a7c15L; var acc = 0L; var i = 0L
-      while (i < iters) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; acc += x; i += 1
-      }
-      acc
-    }
-    val sink = new java.util.concurrent.atomic.AtomicLong
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def calibrate(): (Double, Double, Double) = {
-      spin(10000000L) // JIT warm
-      val st = timed(sink.addAndGet(spin(400000000L)))
-      val n = cpus.toInt
-      val mt = timed {
-        val ts = (1 to n).map(_ => new Thread(() =>
-          sink.addAndGet(spin(400000000L)): Unit))
-        ts.foreach(_.start()); ts.foreach(_.join())
-      }
-      val load = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      (st, mt, load)
-    }
-    val cal0 = calibrate()
+    // Environment sentinel: the calibration spin, timed single-thread and
+    // all-core at suite start AND end, plus loadavg. The box's speed has
+    // swung ±40% across rounds and classifying a "regression" as
+    // environmental has so far needed multi-session A/B forensics
+    // (r06/r10); with the calibration in the artifact the comparison
+    // divides out the box: q_time/cal_st is round-comparable even when
+    // wall time isn't.
+    val cal0 = Harness.calibrate()
     // Per-chunk environment sentinel: the start/end calibration pair can
     // flag a box whose speed CHANGED across the suite but cannot SEE a
     // mid-suite stall (the r16 q161-q165 run-2 blowup stayed "box
@@ -71,47 +33,11 @@ object Bench {
     // the queries it slowed. Bursts run BETWEEN query timing windows, so
     // they never inflate a query time; ~14 bursts/run ≈ 3s wall each.
     val SentinelChunk = 25
-    def sentinelBurst(): Double = timed(sink.addAndGet(spin(100000000L)))
-    def runQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // Block-state hygiene: queries that localCheckpoint intermediate
-      // frames (the q141/q142 lifecycle family) leave their blocks in
-      // the BlockManager forever — by run 2 the accumulated litter
-      // shifts memory pressure and the two runs no longer execute
-      // against the same state (the family's 2-4x run-to-run spread
-      // every round since r11). Snapshot the persistent-RDD set before
-      // each query and drop ONLY what the query added, after its
-      // timing window closes; shared artifacts pre-date the snapshot
-      // (prewarm builds them), so they are never touched.
-      // Known limit: this drop is RDD-level — it frees the blocks of
-      // localCheckpoint/persist litter (the observed leak mode) but a
-      // frame leaked via Dataset.persist also registers a CacheManager
-      // plan entry, which a later plan-identical query would silently
-      // re-materialize. CacheManager is private[sql] so the entry can't
-      // be evicted from here; operator finally-blocks unpersist their
-      // Datasets, and no query has been observed to leak one.
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      // noop sink: forces full computation of every output column (count()
-      // would let Catalyst prune projections, under-measuring map-heavy
-      // queries) without any write I/O in the timing.
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          errors.getOrElseUpdate(name, String.valueOf(e.getMessage).take(300))
-          false
-        }
-      // A crashed query must not masquerade as a fast one: report -1.
-      val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      val persistedAfter = spark.sparkContext.getPersistentRDDs
-      // blocking: operator finally-blocks already unpersist async; a
-      // lazy drop here would let litter from query N overlap query
-      // N+1's persists (the sf3 OOM mode Scaling hit) — the drop sits
-      // outside the timing window, so the synchronous wait is free
-      (persistedAfter.keySet -- persistedBefore).foreach(id =>
-        persistedAfter(id).unpersist(blocking = true))
-      t
-    }
+    def sentinelBurst(): Double = Harness.spin(100000000L)
+    // A crashed query must not masquerade as a fast one: report -1.
+    def runQuery(name: String, fn: Harness.Query): Double =
+      Harness.run(spark, sfDir, name, fn).fold(
+        msg => { errors.getOrElseUpdate(name, msg.take(300)); -1.0 }, identity)
     def runSuite(): (Seq[(String, Double)], Seq[Double]) = {
       val sentinels = scala.collection.mutable.ArrayBuffer[Double]()
       val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
@@ -124,33 +50,15 @@ object Bench {
     }
 
     // TWO full runs (the box jitters ±40%; a single run lies): headline
-    // numbers are the per-query MIN across runs, both runs recorded. Shared
-    // artifacts are cleared between runs so run 2 measures the same work.
-    // Each run PRE-WARMS the shared artifacts and times the build as its
-    // own line: otherwise the first consumer (whichever query the sorted
-    // order lands it on — q135/q136 in r11/r12) absorbs the whole build
-    // and the per-query table attributes it to the wrong operator.
-    def prewarm(): Double =
-      timed(graft.queries.LlmOps.prewarmSharedArtifacts(spark, sfDir))
-    // Run decoupling (Scaling's SPARK_GRAFT_DECOUPLE recipe, now the
-    // Bench default — VERDICT r17 ask #2): the RDD-delta unpersist in
-    // runQuery drops BLOCKS, but a Dataset.persist inside an operator
-    // also registers a CacheManager entry whose plan — and, through it,
-    // run 1's shuffle map outputs — survives into run 2 (the Profile
-    // q305 run-4 experiment: repeats measured 4.6x faster than cold with
-    // ZERO persistent RDDs; clearing the CacheManager restored the cold
-    // cost). Clearing the plan cache between runs, OUTSIDE every timing
-    // window, makes min-of-2 read two independent runs instead of a
-    // cold run and a subsidized repeat; the shared artifacts are
-    // re-warmed right after so run 2 still starts artifact-warm.
-    def decoupleRuns(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.queries.Artifacts.clear()
-    }
-    val art1 = prewarm()
+    // numbers are the per-query MIN across runs, both runs recorded. Each
+    // run is decoupled from the last and PRE-WARMS the shared artifacts,
+    // timing the build as its own line: otherwise the first consumer
+    // (whichever query the sorted order lands it on — q135/q136 in
+    // r11/r12) absorbs the whole build and the per-query table attributes
+    // it to the wrong operator.
+    val art1 = Harness.decouple(spark, sfDir)
     val (run1, sent1) = runSuite()
-    decoupleRuns()
-    val art2 = prewarm()
+    val art2 = Harness.decouple(spark, sfDir)
     val (run2, sent2) = runSuite()
     val artBest = math.min(art1, art2)
     // Asymmetry tie-breaker: any query whose two runs disagree by >30%
@@ -159,10 +67,8 @@ object Bench {
     // of 3. One excursion (box stall or litter) can no longer set a
     // headline number, and the bracketing bursts evidence whether the
     // blowup reproduces under a measured-quiet box. Each rerun is
-    // decoupled like the full runs (plan cache cleared + artifacts
-    // re-warmed OUTSIDE its timing window), so the median reads three
-    // independent executions rather than two colds and a subsidized
-    // repeat.
+    // decoupled like the full runs, so the median reads three
+    // independent executions.
     val asym = run1.zip(run2).collect {
       case ((n, a), (_, b)) if a >= 0 && b >= 0 &&
         math.max(a, b) > 1.3 * math.min(a, b) &&
@@ -170,8 +76,7 @@ object Bench {
     }
     val byName = SparkEntry.queries
     val run3 = asym.map { n =>
-      decoupleRuns()
-      prewarm()
+      Harness.decouple(spark, sfDir)
       val s0 = sentinelBurst()
       val t = runQuery(n, byName(n))
       val s1 = sentinelBurst()
@@ -194,7 +99,6 @@ object Bench {
     // Rounded to ms: the driver captures only a bounded tail of stdout, and
     // an over-long line gets its head truncated -> unparseable (BENCH_r03
     // came back "parsed": null because both full runs were inlined here).
-    def r3(v: Double): Double = math.round(v * 1000).toDouble / 1000
     def fmt(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     def tot(rs: Seq[(String, Double)]): Double =
@@ -207,7 +111,7 @@ object Bench {
     // end-of-suite calibration: start/end disagreement flags a box whose
     // speed CHANGED mid-suite (the r10 failure mode — neither number alone
     // would have shown it)
-    val cal1 = calibrate()
+    val cal1 = Harness.calibrate()
     def calJson: String =
       s"""{"st0":${r3(cal0._1)},"mt0":${r3(cal0._2)},"load0":${r3(cal0._3)},""" +
         s""""st1":${r3(cal1._1)},"mt1":${r3(cal1._2)},"load1":${r3(cal1._3)}}"""
@@ -237,12 +141,9 @@ object Bench {
     // timings in numeric query order (the one-line map was lexicographic,
     // so q100+ — exactly the queries the round just added — sorted into
     // its truncated head in BENCH_r06; numeric-ascending chunks put the
-    // newest queries nearest the end of stdout), then the complete
-    // one-line per-query map (VERDICT r18 ask #2 — PERF_r18's per_query
-    // came back empty because this line used to print FIRST and scrolled
-    // out of the tail; ~9 KB, parseable whenever the tail holds it), then
-    // the short headline trailer as the final line, which always fits
-    // even when the giant line's head is cut.
+    // newest queries nearest the end of stdout), then the short headline
+    // trailer as the final line. A one-line map of all queries (~9 KB)
+    // can never fit the 2,000-char tail; BENCH_FULL*.json carries it.
     def qnum(name: String): Int = {
       val d = name.takeWhile(_ != '_').filter(_.isDigit)
       if (d.isEmpty) Int.MaxValue else d.toInt
@@ -253,25 +154,18 @@ object Bench {
       println(s"""{"metric":"timings","chunk":${i + 1},"chunks":${chunks.size},""" +
         s""""queries":${fmt(c)}}""")
     }
-    println(s"""{"metric":"total","value":${r3(tot(best) + artBest)},"unit":"sec","queries":${fmt(best)},""" +
-      s""""artifacts_s":${r3(artBest)},""" +
-      s""""failed":$failed,"flaky":$flaky,"runs":2,"agg":"min+med3asym","sf":"$sfDir"}""")
     summaryLine()
     // The driver's artifact is a bounded stdout TAIL — truncation-lossy by
     // construction ("parsed": null in r06/r07). Persist the complete result
     // (both raw runs, the min-of-2 map, and every failure's message) to a
     // stable file in the repo so post-mortems never depend on scrollback.
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val errJson = errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
+    val errJson = errors.map { case (k, v) => s"${json(k)}:${json(v)}" }
       .mkString("{", ",", "}")
     // run3 entries carry their bracketing sentinel bursts so a rerun that
     // ALSO blew up is attributable: quiet sentinels + slow rerun = the
     // query (or its litter), excursed sentinel = the box, measured.
     val run3Json = run3.map { case (n, t, s0, s1) =>
-      s"""${jq(n)}:{"t":${r3(t)},"s0":${r3(s0)},"s1":${r3(s1)}}"""
+      s"""${json(n)}:{"t":${r3(t)},"s0":${r3(s0)},"s1":${r3(s1)}}"""
     }.mkString("{", ",", "}")
     val full = s"""{"total_s":${r3(tot(best) + artBest)},""" +
       s""""queries_s":${tot(best)},"artifacts_s":${r3(artBest)},""" +

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import Harness.r3
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only DENSITY-ramp probe (VERDICT r14 ask #2's second half): the
@@ -30,22 +31,14 @@ import org.apache.spark.sql.functions._
   * SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.Density"`. */
 object Density {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
 
     def timed[A](f: => A): (Double, A) = {
       val t0 = System.nanoTime(); val a = f
       ((System.nanoTime() - t0) / 1e9, a)
     }
-    def r3(v: Double): Double = math.round(v * 1000).toDouble / 1000
     def emit(probe: String, level: String, sec: Double, rows: Long,
         capped: Boolean): Unit =
       println(s"""{"metric":"density","probe":"$probe","level":"$level",""" +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only plan dumper: writes `.explain("formatted")` for named queries to
@@ -15,32 +14,20 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <suffix> <name-or-prefix>...")
     val suffix = args(0)
-    val wanted = args.drop(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val hits = Harness.select(args.toSeq.drop(1))
+    val sfDir = Harness.sfDir
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val all = graft.queries.Relational.queries ++ graft.queries.LlmOps.queries
-    val hits = all.filter(q => wanted.exists(w => q.name.startsWith(w)))
-    require(hits.nonEmpty, s"no queries match ${wanted.mkString(", ")}")
-    hits.foreach { q =>
+    hits.foreach { case (name, fn) =>
       try {
-        val df = q.fn(spark, sfDir)
+        val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outDir, s"${q.name}_$suffix.txt"), txt)
-        println(s"[explain] wrote ${q.name}_$suffix.txt (${txt.length} chars)")
+          java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"), txt)
+        println(s"[explain] wrote ${name}_$suffix.txt (${txt.length} chars)")
       } catch { case e: Throwable =>
-        System.err.println(s"[explain] ${q.name} FAILED: ${e.getMessage}")
+        System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
       }
     }
     spark.stop()

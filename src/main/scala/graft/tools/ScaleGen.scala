@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only sf-multiplier for the SCALING study: writes an N× copy of a
@@ -45,14 +45,7 @@ object ScaleGen {
     val Array(src, out, copiesS) = args
     val copies = copiesS.toInt
     require(copies >= 1 && copies <= 100, s"copies in [1,100], got $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // one row per copy index, cross-joined to stamp shard ids
     val ks = spark.range(copies).select(col("id").cast("long").as("__k"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import Harness.r3
 
 /** Dev-only scaling-exponent runner (VERDICT r13 ask #1): times a NAMED
   * subset of `SparkEntry.queries` against one fixture dir and prints a
@@ -8,98 +8,37 @@ import org.apache.spark.sql.SparkSession
   * ScaleGen'd sf1 — and the ratio t(sf1)/t(sf0.1) is the measured
   * volume exponent recorded in SCALING.md.
   *
-  * Mirrors Bench's measurement discipline: noop sink (full column
-  * computation, no write IO), shared-artifact pre-warm timed separately,
-  * per-query MIN across `SPARK_GRAFT_RUNS` runs (default 2), calibration
-  * spin so cross-session numbers can divide out the box.
+  * Bench's measurement discipline: per-query MIN of 2 runs, each run
+  * decoupled and artifact-warm (the rebuild timed separately) and timed by
+  * [[Harness.run]], plus the calibration spin so cross-session numbers can
+  * divide out the box.
   *
   * Run: `SPARK_GRAFT_SF_DIR=<dir> SPARK_GRAFT_CPUS=32 sbt "runMain
   * graft.tools.Scaling q27_near_dup q132_pagerank ..."`. */
 object Scaling {
+  val Runs = 2
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Scaling <queryName>...")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val unknown = args.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val hits = Harness.select(args.toSeq)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    val calSt = Harness.calibrate()._1
 
-    def spin(iters: Long): Long = {
-      var x = 0x9e3779b97f4a7c15L; var acc = 0L; var i = 0L
-      while (i < iters) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; acc += x; i += 1
-      }
-      acc
-    }
-    val sink = new java.util.concurrent.atomic.AtomicLong
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    spin(10000000L)
-    val calSt = timed(sink.addAndGet(spin(400000000L)))
-
-    def r3(v: Double): Double = math.round(v * 1000).toDouble / 1000
-    val artTimes = (1 to runs).map { _ =>
-      graft.queries.Artifacts.clear()
-      timed(graft.queries.LlmOps.prewarmSharedArtifacts(spark, sfDir))
-    }
-    // SPARK_GRAFT_DECOUPLE=1: fully decouple repeat runs of one query.
-    // The RDD-delta unpersist below drops BLOCKS, but a Dataset.persist
-    // inside an operator (capGroupSize) also registers a CacheManager
-    // entry whose plan — and, through it, run 1's shuffle map outputs —
-    // survives into run 2: q305's repeat runs measured 4.6× faster than
-    // cold with ZERO persistent RDDs, and clearing the CacheManager
-    // restored the cold cost (the Profile q305 run-4 experiment). In
-    // decouple mode every run clears the plan cache and re-warms the
-    // shared artifacts OUTSIDE the timing window, so min-agg reads
-    // independent runs instead of a subsidized repeat.
-    val decouple = sys.env.get("SPARK_GRAFT_DECOUPLE").contains("1")
-    val results = args.toSeq.map { name =>
-      val fn = graft.SparkEntry.queries(name)
-      val times = (1 to runs).map { _ =>
-        if (decouple) {
-          spark.sharedState.cacheManager.clearCache()
-          graft.queries.Artifacts.clear()
-          graft.queries.LlmOps.prewarmSharedArtifacts(spark, sfDir)
-        }
-        // Bench's block-state hygiene, with a BLOCKING drop: operator
-        // finally-blocks unpersist asynchronously, so at sf3 two
-        // back-to-back runs transiently hold TWO copies of a 36M-row
-        // edge persist — enough to OOM the fourth big-graph execution
-        // in one JVM. Synchronous release between runs (outside the
-        // timing window) keeps every run's memory state identical.
-        val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-        val t =
-          try timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[scaling] $name FAILED: ${e.getMessage}")
-              -1.0
-          }
-        val persistedAfter = spark.sparkContext.getPersistentRDDs
-        (persistedAfter.keySet -- persistedBefore).foreach(id =>
-          persistedAfter(id).unpersist(blocking = true))
-        t
-      }
+    val results = hits.map { case (name, fn) =>
+      val (arts, times) = (1 to Runs).map { _ =>
+        (Harness.decouple(spark, sfDir),
+          Harness.run(spark, sfDir, name, fn).getOrElse(-1.0))
+      }.unzip
       val best = if (times.exists(_ < 0)) -1.0 else times.min
       println(s"""{"metric":"scaling","query":"$name","sf":"$sfDir","sec":${r3(best)},"runs":[${times.map(r3).mkString(",")}]}""")
-      name -> best
+      (best, arts.min)
     }
-    println(s"""{"metric":"scaling_summary","sf":"$sfDir","cpus":$cpus,""" +
-      s""""cal_st":${r3(calSt)},"artifacts_s":${r3(artTimes.min)},""" +
-      s""""total_s":${r3(results.map(_._2).filter(_ >= 0).sum)},""" +
-      s""""failed":${results.count(_._2 < 0)}}""")
+    println(s"""{"metric":"scaling_summary","sf":"$sfDir","cpus":${Harness.cpus},""" +
+      s""""cal_st":${r3(calSt)},"artifacts_s":${r3(results.map(_._2).min)},""" +
+      s""""total_s":${r3(results.map(_._1).filter(_ >= 0).sum)},""" +
+      s""""failed":${results.count(_._1 < 0)}}""")
     spark.stop()
   }
 }

@@ -1,80 +1,37 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable
-
-/** Dev-only generic query profiler: runs named queries under the noop sink
-  * with a stage listener and prints, per query, wall time plus the top
-  * stages by executor run time with task counts and shuffle bytes — the
-  * guide §1 "where is the time going" readout without the UI. Run:
+/** Dev-only generic query profiler: runs named queries (exact names or
+  * prefixes) under the noop sink and prints, per query, wall time, the
+  * jobs it started (driver actions: the loop operators' cost currency,
+  * each a scheduling round-trip a real cluster pays) plus the top stages
+  * by executor run time with task counts and shuffle bytes — the
+  * "where is the time going" readout without the UI. Run:
   * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *    sbt "runMain graft.tools.Stages q338 q227"` */
 object Stages {
-  case class St(id: Int, name: String, tasks: Int, runMs: Long,
-      cpuMs: Long, shRead: Long, shWrite: Long, input: Long, gcMs: Long)
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Stages <name-or-prefix>...")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    graft.queries.LlmOps.prewarmSharedArtifacts(spark, sfDir)
-
-    val stages = mutable.ArrayBuffer[St]()
-    // job count per query = driver actions — the loop operators' cost
-    // currency (each job is a scheduling round-trip a real cluster pays)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        stages.synchronized {
-          stages += St(si.stageId, si.name.takeWhile(_ != '\n').take(90),
-            si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000,
-            m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten, m.inputMetrics.bytesRead,
-            m.jvmGCTime)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    val all = graft.queries.Relational.queries ++ graft.queries.LlmOps.queries
-    val hits = all.filter(q => args.exists(w => q.name.startsWith(w)))
-    require(hits.nonEmpty, s"no queries match ${args.mkString(", ")}")
-    hits.foreach { q =>
-      stages.synchronized(stages.clear())
-      jobs.set(0)
-      val t0 = System.nanoTime()
-      try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        println(s"[stages] ${q.name} FAILED: ${e.getMessage}") }
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain
-      val ss = stages.synchronized(stages.toVector)
-      println(f"%n=== ${q.name} wall=$wall%.2f s, ${jobs.get} jobs, " +
-        f"${ss.size} stages, " +
-        f"sum(run)=${ss.map(_.runMs).sum / 1000.0}%.1f core-s, " +
-        f"sum(cpu)=${ss.map(_.cpuMs).sum / 1000.0}%.1f core-s ===")
-      ss.sortBy(-_.runMs).take(18).foreach { s =>
-        println(f"  run=${s.runMs / 1000.0}%7.2f cpu=${s.cpuMs / 1000.0}%7.2f " +
-          f"gc=${s.gcMs / 1000.0}%5.2f tasks=${s.tasks}%4d " +
-          f"in=${s.input / 1048576}%5dMB shR=${s.shRead / 1024}%7dKB " +
-          f"shW=${s.shWrite / 1024}%7dKB  [${s.id}] ${s.name}")
+    val hits = Harness.select(args.toSeq)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    Harness.decouple(spark, sfDir)
+    val counter = new Harness.JobCounter(spark)
+    hits.foreach { case (name, fn) =>
+      val (res, count) = counter.count(Harness.run(spark, sfDir, name, fn))
+      val ss = count.stages
+      val head = res.fold(msg => s"FAILED: $msg", wall => f"wall=$wall%.2f s")
+      println(f"%n=== $name $head, ${count.jobs} jobs, ${ss.size} stages, " +
+        f"sum(run)=${ss.map(_.taskMetrics.executorRunTime).sum / 1000.0}%.1f core-s, " +
+        f"sum(cpu)=${ss.map(_.taskMetrics.executorCpuTime).sum / 1e9}%.1f core-s ===")
+      ss.sortBy(-_.taskMetrics.executorRunTime).take(18).foreach { s =>
+        val m = s.taskMetrics
+        println(f"  run=${m.executorRunTime / 1000.0}%7.2f " +
+          f"cpu=${m.executorCpuTime / 1e9}%7.2f gc=${m.jvmGCTime / 1000.0}%5.2f " +
+          f"tasks=${s.numTasks}%4d in=${m.inputMetrics.bytesRead / 1048576}%5dMB " +
+          f"shR=${m.shuffleReadMetrics.totalBytesRead / 1024}%7dKB " +
+          f"shW=${m.shuffleWriteMetrics.bytesWritten / 1024}%7dKB  " +
+          f"[${s.stageId}] ${s.name.takeWhile(_ != '\n').take(90)}")
       }
     }
     spark.stop()

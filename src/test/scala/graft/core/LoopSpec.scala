@@ -1,15 +1,11 @@
 package graft.core
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
 import graft.dedup.Dedup
 import graft.ops.Graph
+import graft.tools.Harness
 
 /** Pins what the iterative operators leave behind and what a round costs:
   * a refused or non-converged call releases every round frame it
@@ -64,50 +60,10 @@ class LoopSpec extends SparkSpec {
     }
   }
 
-  /** Counts started jobs per job group. [[jobs]] first runs a one-task
-    * fence job under its own group and waits for its end: the listener
-    * bus is ordered, so every earlier job has been counted by then. */
-  private final class JobCounter extends SparkListener {
-    private val groupOf = new ConcurrentHashMap[Int, String]()
-    private val started = new ConcurrentHashMap[String, AtomicInteger]()
-    private val fences = new ConcurrentHashMap[String, CountDownLatch]()
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val g = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      groupOf.put(e.jobId, g)
-      started.computeIfAbsent(g, _ => new AtomicInteger()).incrementAndGet()
-    }
-
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      Option(groupOf.get(e.jobId)).flatMap(g => Option(fences.get(g)))
-        .foreach(_.countDown())
-
-    def jobs(group: String): Int = {
-      val fence = group + "-fence"
-      val latch = new CountDownLatch(1)
-      fences.put(fence, latch)
-      val sc = spark.sparkContext
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(latch.await(60, TimeUnit.SECONDS), s"fence $fence never ended")
-      Option(started.get(group)).map(_.get).getOrElse(0)
-    }
-  }
-
   test("kCore and labelPropagation: a fixed job count per round plus a " +
       "fixed set-up (localCheckpoint)") {
-    val counter = new JobCounter
-    val sc = spark.sparkContext
-    sc.addSparkListener(counter)
-    var runs = 0
-    def jobsOf(call: => DataFrame): Int = {
-      runs += 1
-      val group = s"loopspec-$runs"
-      sc.setJobGroup(group, "loop under test")
-      try call finally sc.clearJobGroup()
-      counter.jobs(group)
-    }
+    val counter = new Harness.JobCounter(spark)
+    def jobsOf(call: => DataFrame): Int = counter.count(call)._2.jobs
     try {
       // k = 2 peels a path from both ends: n/2 rounds, the last one empty.
       // K4 plus the pendant chain 4-5-6 drops 6, then 5, then is stable.
@@ -132,6 +88,6 @@ class LoopSpec extends SparkSpec {
           (rounds, jobs) <- runsOf)
         assert(jobs == setUp + perRound * rounds,
           s"$name: $rounds rounds ran $jobs jobs, not $setUp + ${perRound}·rounds")
-    } finally sc.removeSparkListener(counter)
+    } finally counter.close()
   }
 }

@@ -3,8 +3,7 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
-import graft.queries.{LlmOps, Relational}
+import graft.{SparkEntry, SparkSpec}
 
 /** Physical-plan shape assertions for the properties the 100 TB design
   * depends on. A query can be value-correct and still carry a plan that
@@ -24,7 +23,7 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   private def q(name: String): DataFrame =
-    (Relational.queries ++ LlmOps.queries).find(_.name == name).get.fn(spark, sf)
+    SparkEntry.queries(name)(spark, sf)
 
   test("q02: filter and projection push into the parquet scan") {
     val p = plan(q("q02_filter_project"))

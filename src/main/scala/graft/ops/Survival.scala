@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.core.StepTable
+import graft.core.StepTable.Broken
 
 /** X104 — Kaplan-Meier survival curves (Kaplan & Meier, JASA 1958): the
   * time-to-event primitive behind churn/retention-duration analysis with
@@ -41,28 +44,25 @@ import org.apache.spark.sql.functions._
   * (events + at-risk totals), ONE keyed window for the risk-set counts
   * (cumulative departures — a group's sort is bounded by its distinct
   * DURATIONS, not its subjects), then the sequential folds run
-  * DRIVER-side over the step table — which is (groups × distinct event
-  * times)-sized, never subject-sized; `maxSteps` refuses a duration
-  * column with key-like cardinality (the [[Markov.stationary]] bounded-
-  * collect stance: pass bucketed durations, not raw micros). */
+  * DRIVER-side over the step table, a [[StepTable]] — which is
+  * (groups × distinct event times)-sized, never subject-sized;
+  * `maxSteps` refuses a duration column with key-like cardinality (the
+  * [[Markov.stationary]] bounded-collect stance: pass bucketed
+  * durations, not raw micros). */
 object Survival {
 
-  /** The (group, t, at-risk, events) step table every face consumes —
-    * one keyed aggregation + one keyed window, collected bounded.
-    * `eventsOnly` keeps only d > 0 rows (the KM steps); the log-rank
-    * risk walk needs every departure row. */
-  private def stepRows(df: DataFrame, group: Column, duration: Column,
-      event: Column, maxSteps: Int, eventsOnly: Boolean)
-      : Seq[(String, Long, Long, Long, Long)] = {
+  /** The (group, t, at-risk, events, departures) step table every face
+    * consumes — one keyed aggregation + one keyed window, a bounded
+    * [[StepTable]]. `eventsOnly` keeps only d > 0 rows (the KM steps) and
+    * the negative-duration rows the refusal reads; the log-rank risk walk
+    * needs every departure row. */
+  private def stepTable(df: DataFrame, group: Column, duration: Column,
+      event: Column, maxSteps: Int, eventsOnly: Boolean): StepTable = {
     require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
     val base = df.select(
         coalesce(group.cast("string"), lit("(null)")).as("__g"),
         duration.cast("long").as("__t"), event.cast("boolean").as("__e"))
       .filter(col("__t").isNotNull && col("__e").isNotNull)
-    val neg = base.filter(col("__t") < 0).limit(1).collect()
-    require(neg.isEmpty,
-      "negative duration — time-to-event is an elapsed span; fix the " +
-        "construction upstream")
     val perT = base.groupBy(col("__g"), col("__t"))
       .agg(sum(when(col("__e"), 1L).otherwise(0L)).as("__d"),
         count(lit(1)).as("__all"))
@@ -73,35 +73,42 @@ object Survival {
       .withColumn("__before", coalesce(sum(col("__all"))
         .over(w.rowsBetween(Long.MinValue, -1)), lit(0L)))
       .withColumn("__n", sum(col("__all")).over(wg) - col("__before"))
-      .filter(if (eventsOnly) col("__d") > 0 else lit(true))
+      .filter(if (eventsOnly) col("__d") > 0 || col("__t") < 0 else lit(true))
       .select(col("__g"), col("__t"), col("__n"), col("__d"), col("__all"))
-    val rows = steps.orderBy("__g", "__t").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    StepTable(steps, Seq("__g", "__t"), maxSteps,
       s"more than $maxSteps survival steps — a duration column with " +
         "key-like cardinality is raw time, not a bucketed span; bucket " +
-        "upstream")
-    rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-      r.getLong(3), r.getLong(4))).toSeq
+        "upstream",
+      Broken(col("__t") < 0,
+        "negative duration — time-to-event is an elapsed span; fix the " +
+          "construction upstream"))
   }
+
+  /** `(t, n_risk, d_events)` of a [[stepTable]] row. */
+  private def step(r: Row): (Long, Long, Long) =
+    (r.getLong(1), r.getLong(2), r.getLong(3))
+
+  /** The whole step table, for the log-rank faces' pooled walk:
+    * `(grp, t, n_risk, d_events, departures)` rows. */
+  private def stepRows(df: DataFrame, group: Column, duration: Column,
+      event: Column, maxSteps: Int): Seq[(String, Long, Long, Long, Long)] =
+    stepTable(df, group, duration, event, maxSteps, eventsOnly = false)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4)))
 
   /** One row per (group, event time): `(grp, t, n_risk, d_events,
     * s_micro)` — survival AFTER the deaths at `t`. NULL groups form the
     * real group "(null)" (the X88 stance); NULL durations/events drop. */
   def kaplanMeier(df: DataFrame, group: Column, duration: Column,
       event: Column, maxSteps: Int = 100000): DataFrame = {
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = true)
-    val out = Vector.newBuilder[(String, Long, Long, Long, Long)]
-    var curG: String = null
-    var s = 1000000L
-    rows.foreach { case (g, t, n, d, _) =>
-      if (g != curG) { curG = g; s = 1000000L }
-      s = s * (n - d) / n // non-negative floor, engine-replayable
-      out += ((g, t, n, d, s))
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "t", "n_risk", "d_events", "s_micro")
+    stepTable(df, group, duration, event, maxSteps, eventsOnly = true)
+      .fold("grp", "t", "n_risk", "d_events", "s_micro") { (g, rows) =>
+        var s = 1000000L
+        rows.map(step).map { case (t, n, d) =>
+          s = s * (n - d) / n // non-negative floor, engine-replayable
+          (g, t, n, d, s)
+        }
+      }
   }
 
   /** X116 — [[kaplanMeier]] with Greenwood standard errors and the
@@ -124,34 +131,28 @@ object Survival {
       event: Column, zMicro: Long = 1959964L,
       maxSteps: Int = 100000): DataFrame = {
     require(zMicro > 0, s"zMicro must be positive, got $zMicro")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = true)
     val zd = zMicro.toDouble / 1e6
-    val out = Vector.newBuilder[
-      (String, Long, Long, Long, Long, Option[Long], Option[Long], Option[Long])]
-    var curG: String = null
-    var s = 1000000L
-    var gw = 0L // Σ d·1e9 DIV (n·(n−d)), floored per term
-    var poisoned = false
-    rows.foreach { case (g, t, n, d, _) =>
-      if (g != curG) { curG = g; s = 1000000L; gw = 0L; poisoned = false }
-      s = s * (n - d) / n
-      if (n == d) poisoned = true
-      if (poisoned) out += ((g, t, n, d, s, None, None, None))
-      else {
-        // BigInt: n·(n−d) overflows Long past ~4.3e9 at risk
-        gw += (BigInt(d) * 1000000000L / (BigInt(n) * (n - d))).toLong
-        val r = math.sqrt(gw.toDouble / 1e9)
-        val se = math.round(s.toDouble * r)
-        val margin = math.round(zd * (s.toDouble * r))
-        out += ((g, t, n, d, s, Some(se),
-          Some(math.max(0L, s - margin)), Some(math.min(1000000L, s + margin))))
+    stepTable(df, group, duration, event, maxSteps, eventsOnly = true)
+      .fold("grp", "t", "n_risk", "d_events", "s_micro",
+        "se_micro", "lo_micro", "hi_micro") { (g, rows) =>
+        var s = 1000000L
+        var gw = 0L // Σ d·1e9 DIV (n·(n−d)), floored per term
+        var poisoned = false
+        rows.map(step).map { case (t, n, d) =>
+          s = s * (n - d) / n
+          if (n == d) poisoned = true
+          if (poisoned) (g, t, n, d, s, None, None, None)
+          else {
+            // BigInt: n·(n−d) overflows Long past ~4.3e9 at risk
+            gw += (BigInt(d) * 1000000000L / (BigInt(n) * (n - d))).toLong
+            val r = math.sqrt(gw.toDouble / 1e9)
+            val se = math.round(s.toDouble * r)
+            val margin = math.round(zd * (s.toDouble * r))
+            (g, t, n, d, s, Some(se), Some(math.max(0L, s - margin)),
+              Some(math.min(1000000L, s + margin)))
+          }
+        }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "t", "n_risk", "d_events", "s_micro",
-      "se_micro", "lo_micro", "hi_micro")
   }
 
   /** X145 — the log(−log S) (complementary log-log) Kaplan-Meier band
@@ -181,35 +182,28 @@ object Survival {
       event: Column, zMicro: Long = 1959964L,
       maxSteps: Int = 100000): DataFrame = {
     require(zMicro > 0, s"zMicro must be positive, got $zMicro")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = true)
     val zd = zMicro.toDouble / 1e6
-    val out = Vector.newBuilder[
-      (String, Long, Long, Long, Long, Option[Long], Option[Long], Option[Long])]
-    var curG: String = null
-    var s = 1000000L
-    var gw = 0L
-    rows.foreach { case (g, t, n, d, _) =>
-      if (g != curG) { curG = g; s = 1000000L; gw = 0L }
-      s = s * (n - d) / n
-      if (n != d)
-        gw += (BigInt(d) * 1000000000L / (BigInt(n) * (n - d))).toLong
-      if (s == 0L) out += ((g, t, n, d, s, None, None, None))
-      else {
-        // the one stated chain: ln, sqrt, divide, exp, exp, multiply
-        val sd = s.toDouble / 1e6
-        val lnS = math.log(sd) // < 0: s < 1e6 from the first event row
-        val se = math.sqrt(gw.toDouble / 1e9) / -lnS
-        val lo = math.round(1e6 * math.exp(math.exp(zd * se) * lnS))
-        val hi = math.round(1e6 * math.exp(math.exp(-zd * se) * lnS))
-        out += ((g, t, n, d, s, Some(math.round(1e6 * se)),
-          Some(lo), Some(hi)))
+    stepTable(df, group, duration, event, maxSteps, eventsOnly = true)
+      .fold("grp", "t", "n_risk", "d_events", "s_micro",
+        "se_cll_micro", "lo_micro", "hi_micro") { (g, rows) =>
+        var s = 1000000L
+        var gw = 0L
+        rows.map(step).map { case (t, n, d) =>
+          s = s * (n - d) / n
+          if (n != d)
+            gw += (BigInt(d) * 1000000000L / (BigInt(n) * (n - d))).toLong
+          if (s == 0L) (g, t, n, d, s, None, None, None)
+          else {
+            // the one stated chain: ln, sqrt, divide, exp, exp, multiply
+            val sd = s.toDouble / 1e6
+            val lnS = math.log(sd) // < 0: s < 1e6 from the first event row
+            val se = math.sqrt(gw.toDouble / 1e9) / -lnS
+            val lo = math.round(1e6 * math.exp(math.exp(zd * se) * lnS))
+            val hi = math.round(1e6 * math.exp(math.exp(-zd * se) * lnS))
+            (g, t, n, d, s, Some(math.round(1e6 * se)), Some(lo), Some(hi))
+          }
+        }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "t", "n_risk", "d_events", "s_micro",
-      "se_cll_micro", "lo_micro", "hi_micro")
   }
 
   /** X145 — the log-transformed Nelson-Aalen band the [[nelsonAalen]]
@@ -231,30 +225,24 @@ object Survival {
     require(maxSteps >= 1 && maxSteps <= 1000000,
       s"maxSteps must be in [1, 1e6] (pico-sum Long headroom: " +
         s"v <= maxSteps*1e12), got $maxSteps")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = true)
     val zd = zMicro.toDouble / 1e6
-    val out = Vector.newBuilder[
-      (String, Long, Long, Long, Long, Long, Option[Long], Option[Long])]
-    var curG: String = null
-    var h = 0L
-    var v = 0L
-    rows.foreach { case (g, t, n, d, _) =>
-      if (g != curG) { curG = g; h = 0L; v = 0L }
-      h += (BigInt(d) * 1000000L / n).toLong
-      v += (BigInt(d) * 1000000000000L / (BigInt(n) * n)).toLong
-      if (h == 0L) out += ((g, t, n, d, h, v, None, None))
-      else {
-        val ratio = math.sqrt(v.toDouble / 1e12) / (h.toDouble / 1e6)
-        val lo = math.round(h.toDouble * math.exp(-zd * ratio))
-        val hi = math.round(h.toDouble * math.exp(zd * ratio))
-        out += ((g, t, n, d, h, v, Some(lo), Some(hi)))
+    stepTable(df, group, duration, event, maxSteps, eventsOnly = true)
+      .fold("grp", "t", "n_risk", "d_events", "h_micro",
+        "var_pico", "lo_micro", "hi_micro") { (g, rows) =>
+        var h = 0L
+        var v = 0L
+        rows.map(step).map { case (t, n, d) =>
+          h += (BigInt(d) * 1000000L / n).toLong
+          v += (BigInt(d) * 1000000000000L / (BigInt(n) * n)).toLong
+          if (h == 0L) (g, t, n, d, h, v, None, None)
+          else {
+            val ratio = math.sqrt(v.toDouble / 1e12) / (h.toDouble / 1e6)
+            val lo = math.round(h.toDouble * math.exp(-zd * ratio))
+            val hi = math.round(h.toDouble * math.exp(zd * ratio))
+            (g, t, n, d, h, v, Some(lo), Some(hi))
+          }
+        }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "t", "n_risk", "d_events", "h_micro",
-      "var_pico", "lo_micro", "hi_micro")
   }
 
   /** X116 — two-group log-rank test (Mantel 1966; Peto & Peto 1972):
@@ -285,8 +273,7 @@ object Survival {
       event: Column, maxSteps: Int = 100000,
       maxRisk: Long = 10000000L): DataFrame = {
     require(maxRisk >= 2, s"maxRisk must be >= 2, got $maxRisk")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = false)
+    val rows = stepRows(df, group, duration, event, maxSteps)
     val groups = rows.map(_._1).distinct.sorted
     require(groups.length == 2,
       s"logRank needs exactly two groups, got ${groups.length} " +
@@ -364,8 +351,7 @@ object Survival {
     require(maxRisk >= 2, s"maxRisk must be >= 2, got $maxRisk")
     require(maxGroups >= 2 && maxGroups <= 100,
       s"maxGroups must be in [2, 100], got $maxGroups")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = false)
+    val rows = stepRows(df, group, duration, event, maxSteps)
     val groups = rows.map(_._1).distinct.sorted
     require(groups.length >= 2,
       s"logRankK needs at least two groups, got ${groups.length}")
@@ -425,29 +411,22 @@ object Survival {
     require(maxSteps >= 1 && maxSteps <= 1000000,
       s"maxSteps must be in [1, 1e6] (pico-sum Long headroom: " +
         s"v <= maxSteps*1e12), got $maxSteps")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = true)
     val zd = zMicro.toDouble / 1e6
-    val out = Vector.newBuilder[
-      (String, Long, Long, Long, Long, Long, Long, Long, Long)]
-    var curG: String = null
-    var h = 0L
-    var v = 0L
-    rows.foreach { case (g, t, n, d, _) =>
-      if (g != curG) { curG = g; h = 0L; v = 0L }
-      h += (BigInt(d) * 1000000L / n).toLong
-      v += (BigInt(d) * 1000000000000L / (BigInt(n) * n)).toLong
-      // the one stated double chain per row (presentation only)
-      val se = math.sqrt(v.toDouble / 1e12)
-      val seMicro = math.round(se * 1e6)
-      val margin = math.round(zd * (se * 1e6))
-      out += ((g, t, n, d, h, v, seMicro,
-        math.max(0L, h - margin), h + margin))
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "t", "n_risk", "d_events", "h_micro",
-      "var_pico", "se_micro", "lo_micro", "hi_micro")
+    stepTable(df, group, duration, event, maxSteps, eventsOnly = true)
+      .fold("grp", "t", "n_risk", "d_events", "h_micro", "var_pico",
+        "se_micro", "lo_micro", "hi_micro") { (g, rows) =>
+        var h = 0L
+        var v = 0L
+        rows.map(step).map { case (t, n, d) =>
+          h += (BigInt(d) * 1000000L / n).toLong
+          v += (BigInt(d) * 1000000000000L / (BigInt(n) * n)).toLong
+          // the one stated double chain per row (presentation only)
+          val se = math.sqrt(v.toDouble / 1e12)
+          val seMicro = math.round(se * 1e6)
+          val margin = math.round(zd * (se * 1e6))
+          (g, t, n, d, h, v, seMicro, math.max(0L, h - margin), h + margin)
+        }
+      }
   }
 
   /** X138 — the PROPER K-sample log-rank statistic (Peto & Peto 1972;
@@ -488,8 +467,7 @@ object Survival {
     require(maxRisk >= 2, s"maxRisk must be >= 2, got $maxRisk")
     require(maxGroups >= 2 && maxGroups <= 100,
       s"maxGroups must be in [2, 100], got $maxGroups")
-    val rows = stepRows(df, group, duration, event, maxSteps,
-      eventsOnly = false)
+    val rows = stepRows(df, group, duration, event, maxSteps)
     val groups = rows.map(_._1).distinct.sorted
     val k = groups.length
     require(k >= 2, s"logRankOmnibus needs at least two groups, got $k")
@@ -630,7 +608,7 @@ object Survival {
     * cause) CELLS (the bounded driver-fold stance).
     *
     * Scale shape = [[kaplanMeier]]: ONE (group, time, cause)-keyed
-    * collapse with map-side combine, bounded collect, driver fold —
+    * collapse with map-side combine, then the [[StepTable]] fold —
     * risk sets come from the fold's own running departure count, so
     * no window is even needed. Output: `(grp, t, cause, n_risk,
     * d_cause, d_all, s_micro, cif_micro)`. */
@@ -638,45 +616,38 @@ object Survival {
       cause: Column, maxSteps: Int = 100000): DataFrame = {
     require(maxSteps >= 1 && maxSteps <= 1000000,
       s"maxSteps must be in [1, 1e6], got $maxSteps")
-    val base = df.select(
+    val cells = df.select(
         coalesce(group.cast("string"), lit("(null)")).as("__g"),
         duration.cast("long").as("__t"), cause.cast("long").as("__k"))
       .filter(col("__t").isNotNull && col("__k").isNotNull)
-    val neg = base.filter(col("__t") < 0 || col("__k") < 0)
-      .limit(1).collect()
-    require(neg.isEmpty,
-      "aalenJohansen: negative duration or cause code — durations are " +
-        "elapsed spans and causes are 0 (censored) or positive ids; " +
-        "fix the construction upstream")
-    val cells = base.groupBy("__g", "__t", "__k")
-      .agg(count(lit(1)).as("__c"))
-    val collected = cells.orderBy("__g", "__t", "__k")
-      .limit(maxSteps + 1).collect()
-    require(collected.length <= maxSteps,
+      .groupBy("__g", "__t", "__k").agg(count(lit(1)).as("__c"))
+    StepTable(cells, Seq("__g", "__t", "__k"), maxSteps,
       s"more than $maxSteps (group, time, cause) cells — a duration " +
         "column with key-like cardinality is raw time, not a bucketed " +
-        "span; bucket upstream")
-    val rows = collected.map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val out = Vector.newBuilder[
-      (String, Long, Long, Long, Long, Long, Long, Long)]
-    rows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (g, rs) =>
-      val total = rs.map(_._4).sum
-      var atRisk = total
-      var s = 1000000L
-      val cif = scala.collection.mutable.Map.empty[Long, Long]
-      rs.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (t, cellsT) =>
-        val dAll = cellsT.filter(_._3 > 0).map(_._4).sum
-        val depAll = cellsT.map(_._4).sum
-        val n = atRisk
-        if (dAll > 0) {
-          val sPrev = s
-          s = (BigInt(sPrev) * (n - dAll) / n).toLong
-          val drop = sPrev - s
-          var cum = 0L
-          var prevShareCum = 0L
-          cellsT.filter(_._3 > 0).sortBy(_._3).foreach {
-            case (_, _, k, dk) =>
+        "span; bucket upstream",
+      Broken(col("__t") < 0 || col("__k") < 0,
+        "aalenJohansen: negative duration or cause code — durations are " +
+          "elapsed spans and causes are 0 (censored) or positive ids; " +
+          "fix the construction upstream"))
+      .fold("grp", "t", "cause", "n_risk", "d_cause", "d_all", "s_micro",
+        "cif_micro") { (g, rows) =>
+        val rs = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+        var atRisk = rs.map(_._3).sum
+        var s = 1000000L
+        val cif = scala.collection.mutable.Map.empty[Long, Long]
+        val out = Vector.newBuilder[
+          (String, Long, Long, Long, Long, Long, Long, Long)]
+        rs.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (t, cellsT) =>
+          val dAll = cellsT.filter(_._2 > 0).map(_._3).sum
+          val depAll = cellsT.map(_._3).sum
+          val n = atRisk
+          if (dAll > 0) {
+            val sPrev = s
+            s = (BigInt(sPrev) * (n - dAll) / n).toLong
+            val drop = sPrev - s
+            var cum = 0L
+            var prevShareCum = 0L
+            cellsT.filter(_._2 > 0).sortBy(_._2).foreach { case (_, k, dk) =>
               cum += dk
               val shareCum = (BigInt(drop) * cum / dAll).toLong
               val share = shareCum - prevShareCum
@@ -684,14 +655,11 @@ object Survival {
               val c = cif.getOrElse(k, 0L) + share
               cif(k) = c
               out += ((g, t, k, n, dk, dAll, s, c))
+            }
           }
+          atRisk -= depAll
         }
-        atRisk -= depAll
+        out.result()
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "t", "cause", "n_risk", "d_cause",
-      "d_all", "s_micro", "cif_micro")
   }
 }

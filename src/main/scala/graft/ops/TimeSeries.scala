@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.StepTable
+import graft.core.StepTable.{Broken, Duplicate, Gap}
+
 /** Time-series densification (SURVEY.md §2.7 adjunct): aggregate per
   * (key, time bucket) and emit a row for EVERY bucket in each key's
   * [min, max] range — empty buckets included. Dashboards, rate alerts and
@@ -817,51 +820,51 @@ object TimeSeries {
     * gap should decay further). The first step of a group has no
     * forecast → NULL forecast/error (never a fake self-forecast).
     *
-    * Scale shape: one duplicate-probe aggregation, then the sequential
-    * fold runs DRIVER-side over the (group × periods) step table —
-    * `maxSteps`-refused, never subject-sized (the [[Markov.stationary]]
-    * bounded-collect stance). Output: one row per observation —
-    * `(grp, p, y_micro, forecast_micro, err_micro, level_micro)`. */
+    * Scale shape: the sequential fold runs DRIVER-side over the
+    * (group × periods) step table, a [[StepTable]] — `maxSteps`-refused,
+    * never subject-sized, its one sorted collect the only eager job.
+    * Output: one row per observation — `(grp, p, y_micro,
+    * forecast_micro, err_micro, level_micro)`. */
   def sesBacktest(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, alphaMicro: Long,
       maxSteps: Int = 100000): DataFrame = {
     require(alphaMicro > 0 && alphaMicro <= 1000000L,
       s"alphaMicro must be in (0, 1e6], got $alphaMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "sesBacktest: duplicate (group, period) observation — two values " +
-        "make the forecast ambiguous; aggregate upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps SES steps — bucket periods upstream (the " +
-        "bounded driver-fold stance)")
-    val out = Vector.newBuilder[
-      (String, Long, Long, Option[Long], Option[Long], Long)]
-    var curG: String = null
-    var level = 0L
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) {
-        curG = g
-        level = y // ℓ₁ = y₁, the standard initialization
-        out += ((g, p, y, None, None, level))
-      } else {
-        val f = level
-        level = ((BigInt(alphaMicro) * y +
-          BigInt(1000000L - alphaMicro) * level) / 1000000L).toLong
-        out += ((g, p, y, Some(f), Some(y - f), level))
+        "bounded driver-fold stance)",
+      Duplicate("sesBacktest: duplicate (group, period) observation — " +
+        "two values make the forecast ambiguous; aggregate upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "err_micro",
+        "level_micro") { (g, rows) =>
+        var level = rows.head.getLong(2) // ℓ₁ = y₁, the standard start
+        (g, rows.head.getLong(1), level, None, None, level) +:
+          rows.tail.map { r =>
+            val p = r.getLong(1); val y = r.getLong(2)
+            val f = level
+            level = ((BigInt(alphaMicro) * y +
+              BigInt(1000000L - alphaMicro) * level) / 1000000L).toLong
+            (g, p, y, Some(f), Some(y - f), level)
+          }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "err_micro", "level_micro")
+  }
+
+  /** `(__g, __p, __y)` of a (group, period, value) series: NULL groups
+    * form the real group "(null)", NULL periods and values drop. */
+  private def series(df: DataFrame, group: Column, period: Column,
+      value: Column): DataFrame =
+    df.select(
+        coalesce(group.cast("string"), lit("(null)")).as("__g"),
+        period.cast("long").as("__p"), value.cast("long").as("__y"))
+      .filter(col("__p").isNotNull && col("__y").isNotNull)
+
+  /** The (group, period)-keyed [[StepTable]] of a series' recurrence. */
+  private def steps(df: DataFrame, group: Column, period: Column,
+      value: Column, maxSteps: Int, tooMany: String,
+      refusals: StepTable.Refusal*): StepTable = {
+    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
+    StepTable(series(df, group, period, value), Seq("__g", "__p"), maxSteps,
+      tooMany, refusals: _*)
   }
 
   /** X124 — Holt linear-trend forecast backtest: the TREND member
@@ -889,11 +892,10 @@ object TimeSeries {
     * gaps are consecutive steps (no calendar — bucket upstream); the
     * first step has NULL forecast/error.
     *
-    * Scale shape = [[sesBacktest]]: one duplicate-probe aggregation,
-    * then a `maxSteps`-refused driver fold over the (group × periods)
-    * step table — never subject-sized. Output: one row per observation —
-    * `(grp, p, y_micro, forecast_micro, err_micro, level_micro,
-    * trend_micro)`. */
+    * Scale shape = [[sesBacktest]]: the [[StepTable]] driver fold over
+    * the (group × periods) step table — never subject-sized. Output: one
+    * row per observation — `(grp, p, y_micro, forecast_micro, err_micro,
+    * level_micro, trend_micro)`. */
   def holtBacktest(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, alphaMicro: Long, betaMicro: Long,
       maxSteps: Int = 100000): DataFrame = {
@@ -901,46 +903,28 @@ object TimeSeries {
       s"alphaMicro must be in (0, 1e6], got $alphaMicro")
     require(betaMicro >= 0 && betaMicro <= 1000000L,
       s"betaMicro must be in [0, 1e6], got $betaMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "holtBacktest: duplicate (group, period) observation — two values " +
-        "make the forecast ambiguous; aggregate upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps Holt steps — bucket periods upstream (the " +
-        "bounded driver-fold stance)")
-    val out = Vector.newBuilder[
-      (String, Long, Long, Option[Long], Option[Long], Long, Long)]
-    var curG: String = null
-    var level = 0L
-    var trend = 0L
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) {
-        curG = g
-        level = y // ℓ₁ = y₁, b₁ = 0: the zero-trend start (see doc)
-        trend = 0L
-        out += ((g, p, y, None, None, level, trend))
-      } else {
-        val f = level + trend
-        val prevLevel = level
-        level = ((BigInt(alphaMicro) * y +
-          BigInt(1000000L - alphaMicro) * f) / 1000000L).toLong
-        trend = ((BigInt(betaMicro) * (level - prevLevel) +
-          BigInt(1000000L - betaMicro) * trend) / 1000000L).toLong
-        out += ((g, p, y, Some(f), Some(y - f), level, trend))
+        "bounded driver-fold stance)",
+      Duplicate("holtBacktest: duplicate (group, period) observation — " +
+        "two values make the forecast ambiguous; aggregate upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "err_micro",
+        "level_micro", "trend_micro") { (g, rows) =>
+        // ℓ₁ = y₁, b₁ = 0: the zero-trend start (see doc)
+        var level = rows.head.getLong(2)
+        var trend = 0L
+        (g, rows.head.getLong(1), level, None, None, level, trend) +:
+          rows.tail.map { r =>
+            val p = r.getLong(1); val y = r.getLong(2)
+            val f = level + trend
+            val prevLevel = level
+            level = ((BigInt(alphaMicro) * y +
+              BigInt(1000000L - alphaMicro) * f) / 1000000L).toLong
+            trend = ((BigInt(betaMicro) * (level - prevLevel) +
+              BigInt(1000000L - betaMicro) * trend) / 1000000L).toLong
+            (g, p, y, Some(f), Some(y - f), level, trend)
+          }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "err_micro", "level_micro", "trend_micro")
   }
 
   /** X139 — DAMPED-trend forecast backtest (Gardner & McKenzie 1985):
@@ -964,10 +948,9 @@ object TimeSeries {
     * and the fold IS [[sesBacktest]]. Duplicate (group, period) refused;
     * gaps are consecutive steps (no calendar); first row NULL forecast.
     *
-    * Scale shape = X120/X124: one duplicate-probe aggregation, then the
-    * `maxSteps`-refused driver fold over the bounded step table. Output:
-    * `(grp, p, y_micro, forecast_micro, err_micro, level_micro,
-    * trend_micro)`. */
+    * Scale shape = X120/X124: the [[StepTable]] driver fold over the
+    * bounded step table. Output: `(grp, p, y_micro, forecast_micro,
+    * err_micro, level_micro, trend_micro)`. */
   def dampedHoltBacktest(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, alphaMicro: Long, betaMicro: Long,
       phiMicro: Long, maxSteps: Int = 100000): DataFrame = {
@@ -977,49 +960,31 @@ object TimeSeries {
       s"betaMicro must be in [0, 1e6], got $betaMicro")
     require(phiMicro > 0 && phiMicro <= 1000000L,
       s"phiMicro must be in (0, 1e6], got $phiMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "dampedHoltBacktest: duplicate (group, period) observation — two " +
-        "values make the forecast ambiguous; aggregate upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps damped-Holt steps — bucket periods upstream " +
-        "(the bounded driver-fold stance)")
-    val out = Vector.newBuilder[
-      (String, Long, Long, Option[Long], Option[Long], Long, Long)]
-    var curG: String = null
-    var level = 0L
-    var trend = 0L
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) {
-        curG = g
-        level = y // ℓ₁ = y₁, b₁ = 0: the X124 zero-trend start
-        trend = 0L
-        out += ((g, p, y, None, None, level, trend))
-      } else {
-        // φb computed ONCE, truncating toward zero, then reused — the
-        // replay contract (three independent roundings would drift)
-        val phiB = (BigInt(phiMicro) * trend / 1000000L).toLong
-        val f = level + phiB
-        val prevLevel = level
-        level = ((BigInt(alphaMicro) * y +
-          BigInt(1000000L - alphaMicro) * f) / 1000000L).toLong
-        trend = ((BigInt(betaMicro) * (level - prevLevel) +
-          BigInt(1000000L - betaMicro) * phiB) / 1000000L).toLong
-        out += ((g, p, y, Some(f), Some(y - f), level, trend))
+        "(the bounded driver-fold stance)",
+      Duplicate("dampedHoltBacktest: duplicate (group, period) observation " +
+        "— two values make the forecast ambiguous; aggregate upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "err_micro",
+        "level_micro", "trend_micro") { (g, rows) =>
+        // ℓ₁ = y₁, b₁ = 0: the X124 zero-trend start
+        var level = rows.head.getLong(2)
+        var trend = 0L
+        (g, rows.head.getLong(1), level, None, None, level, trend) +:
+          rows.tail.map { r =>
+            val p = r.getLong(1); val y = r.getLong(2)
+            // φb computed ONCE, truncating toward zero, then reused — the
+            // replay contract (three independent roundings would drift)
+            val phiB = (BigInt(phiMicro) * trend / 1000000L).toLong
+            val f = level + phiB
+            val prevLevel = level
+            level = ((BigInt(alphaMicro) * y +
+              BigInt(1000000L - alphaMicro) * f) / 1000000L).toLong
+            trend = ((BigInt(betaMicro) * (level - prevLevel) +
+              BigInt(1000000L - betaMicro) * phiB) / 1000000L).toLong
+            (g, p, y, Some(f), Some(y - f), level, trend)
+          }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "err_micro", "level_micro", "trend_micro")
   }
 
   /** X141 — Croston's method for INTERMITTENT demand (Croston 1972):
@@ -1050,76 +1015,57 @@ object TimeSeries {
     * not make); REFUSED otherwise, the X127 stance. Negative demand
     * REFUSED (undefined under Croston). Duplicates refused.
     *
-    * Scale shape = X127: one duplicate probe, one consecutiveness probe
-    * (keyed lag window on the bounded step table), then the
-    * `maxSteps`-refused driver fold. Output: one row per observation —
-    * `(grp, p, y_micro, forecast_micro, z_micro, p_interval_micro)`. */
+    * Scale shape = X127: the [[StepTable]] driver fold, its negative,
+    * duplicate and consecutiveness refusals checked in that order on
+    * the step table's one sorted collect. Output: one row per
+    * observation — `(grp, p, y_micro, forecast_micro, z_micro,
+    * p_interval_micro)`. */
   def crostonBacktest(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, alphaMicro: Long,
       maxSteps: Int = 100000): DataFrame = {
     require(alphaMicro > 0 && alphaMicro <= 1000000L,
       s"alphaMicro must be in (0, 1e6], got $alphaMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val neg = base.filter(col("__y") < 0).limit(1).collect()
-    require(neg.isEmpty,
-      "crostonBacktest: negative demand — Croston smooths nonnegative " +
-        "demand sizes; fix the construction upstream")
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "crostonBacktest: duplicate (group, period) observation — two " +
-        "values make the forecast ambiguous; aggregate upstream")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__g").orderBy("__p")
-    val gap = base.withColumn("__prev", lag(col("__p"), 1).over(w))
-      .filter(col("__prev").isNotNull && col("__p") =!= col("__prev") + 1)
-      .limit(1).collect()
-    require(gap.isEmpty,
-      "crostonBacktest: non-consecutive periods — a zero-demand period " +
-        "is an explicit y = 0 row, not a gap (a missing row silently " +
-        "shortens intervals); densify upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps Croston steps — bucket periods upstream " +
-        "(the bounded driver-fold stance)")
-    val out = Vector.newBuilder[
-      (String, Long, Long, Option[Long], Option[Long], Option[Long])]
-    var curG: String = null
-    var idx = 0L
-    var z = 0L
-    var pI = 0L
-    var lastNz = 0L
-    var warmed = false
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) { curG = g; idx = 0L; warmed = false; z = 0L; pI = 0L }
-      idx += 1
-      if (!warmed) {
-        if (y > 0) { // the stated init: z₁ = y, p₁ = q₁·1e6
-          z = y; pI = idx * 1000000L; lastNz = idx; warmed = true
-          out += ((g, p, y, None, Some(z), Some(pI)))
-        } else out += ((g, p, y, None, None, None))
-      } else {
-        val f = (BigInt(z) * 1000000L / pI).toLong // pI ≥ 1e6: exact floor
-        if (y > 0) {
-          val q = idx - lastNz
-          z = ((BigInt(alphaMicro) * y +
-            BigInt(1000000L - alphaMicro) * z) / 1000000L).toLong
-          pI = ((BigInt(alphaMicro) * q * 1000000L +
-            BigInt(1000000L - alphaMicro) * pI) / 1000000L).toLong
-          lastNz = idx
+        "(the bounded driver-fold stance)",
+      Broken(col("__y") < 0,
+        "crostonBacktest: negative demand — Croston smooths nonnegative " +
+          "demand sizes; fix the construction upstream"),
+      Duplicate("crostonBacktest: duplicate (group, period) observation — " +
+        "two values make the forecast ambiguous; aggregate upstream"),
+      Gap((_, _) =>
+        "crostonBacktest: non-consecutive periods — a zero-demand period " +
+          "is an explicit y = 0 row, not a gap (a missing row silently " +
+          "shortens intervals); densify upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "z_micro",
+        "p_interval_micro") { (g, rows) =>
+        var idx = 0L
+        var z = 0L
+        var pI = 0L
+        var lastNz = 0L
+        var warmed = false
+        rows.map { r =>
+          val p = r.getLong(1); val y = r.getLong(2)
+          idx += 1
+          if (!warmed) {
+            if (y > 0) { // the stated init: z₁ = y, p₁ = q₁·1e6
+              z = y; pI = idx * 1000000L; lastNz = idx; warmed = true
+              (g, p, y, None, Some(z), Some(pI))
+            } else (g, p, y, None, None, None)
+          } else {
+            val f = (BigInt(z) * 1000000L / pI).toLong // pI ≥ 1e6: exact floor
+            if (y > 0) {
+              val q = idx - lastNz
+              z = ((BigInt(alphaMicro) * y +
+                BigInt(1000000L - alphaMicro) * z) / 1000000L).toLong
+              pI = ((BigInt(alphaMicro) * q * 1000000L +
+                BigInt(1000000L - alphaMicro) * pI) / 1000000L).toLong
+              lastNz = idx
+            }
+            (g, p, y, Some(f), Some(z), Some(pI))
+          }
         }
-        out += ((g, p, y, Some(f), Some(z), Some(pI)))
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "z_micro", "p_interval_micro")
   }
 
   /** X127 — Holt-Winters ADDITIVE seasonal forecast backtest: the full
@@ -1152,11 +1098,12 @@ object TimeSeries {
     * state: "not enough history", never a fake season). Duplicate
     * (group, period) refused.
     *
-    * Scale shape = X120/X124: one duplicate-probe aggregation, one
-    * consecutiveness probe (a keyed lag window on the bounded step
-    * table), then the maxSteps-refused driver fold. Output: one row per
-    * observation — `(grp, p, y_micro, forecast_micro, err_micro,
-    * level_micro, trend_micro, season_micro)`. */
+    * Scale shape = X120/X124: the [[StepTable]] driver fold, its
+    * duplicate and consecutiveness refusals checked on the step table's
+    * one sorted collect (a gap reports the first in (group, period)
+    * order). Output: one row per observation — `(grp, p, y_micro,
+    * forecast_micro, err_micro, level_micro, trend_micro,
+    * season_micro)`. */
   def holtWintersBacktest(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, m: Int, alphaMicro: Long, betaMicro: Long,
       gammaMicro: Long, maxSteps: Int = 100000): DataFrame = {
@@ -1167,77 +1114,54 @@ object TimeSeries {
       s"betaMicro must be in [0, 1e6], got $betaMicro")
     require(gammaMicro >= 0 && gammaMicro <= 1000000L,
       s"gammaMicro must be in [0, 1e6], got $gammaMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "holtWintersBacktest: duplicate (group, period) observation — two " +
-        "values make the forecast ambiguous; aggregate upstream")
-    val wLag = org.apache.spark.sql.expressions.Window
-      .partitionBy("__g").orderBy("__p")
-    val gap = base.withColumn("__pp", lag(col("__p"), 1).over(wLag))
-      .filter(col("__pp").isNotNull && col("__p") =!= col("__pp") + 1)
-      .limit(1).collect()
-    require(gap.isEmpty,
-      s"holtWintersBacktest: non-consecutive periods " +
-        s"${gap.headOption.map(r => s"${r.getLong(1)} after ${r.getLong(3)}")
-          .getOrElse("")} — a gap shifts season alignment; gap-fill or " +
-        "re-index upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps Holt-Winters steps — bucket periods upstream " +
-        "(the bounded driver-fold stance)")
-    val out = Vector.newBuilder[(String, Long, Long, Option[Long],
-      Option[Long], Option[Long], Option[Long], Option[Long])]
-    // fold one group at a time: warm-up buffer, then the seasonal ring
-    var curG: String = null
-    var warm = Vector.empty[(Long, Long)] // (p, y) of the first ≤ m rows
-    var level = 0L
-    var trend = 0L
-    var ring = Vector.empty[Long] // s_{t−m} at the head
-    var running = false
-    def initFromWarm(): Unit = {
-      val l0 = (warm.map(w => BigInt(w._2)).sum / warm.length).toLong
-      level = l0; trend = 0L
-      ring = warm.map(_._2 - l0)
-      running = true
-      // warm-up rows emit NULL state — re-emit nothing; they were
-      // appended as they arrived
-    }
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) {
-        curG = g; warm = Vector.empty; running = false
-        level = 0L; trend = 0L; ring = Vector.empty
+        "(the bounded driver-fold stance)",
+      Duplicate("holtWintersBacktest: duplicate (group, period) " +
+        "observation — two values make the forecast ambiguous; aggregate " +
+        "upstream"),
+      Gap((p, pp) => s"holtWintersBacktest: non-consecutive periods " +
+        s"$p after $pp — a gap shifts season alignment; gap-fill or " +
+        "re-index upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "err_micro",
+        "level_micro", "trend_micro", "season_micro") { (g, rows) =>
+        // warm-up buffer, then the seasonal ring
+        var warm = Vector.empty[(Long, Long)] // (p, y) of the first ≤ m rows
+        var level = 0L
+        var trend = 0L
+        var ring = Vector.empty[Long] // s_{t−m} at the head
+        var running = false
+        def initFromWarm(): Unit = {
+          val l0 = (warm.map(w => BigInt(w._2)).sum / warm.length).toLong
+          level = l0; trend = 0L
+          ring = warm.map(_._2 - l0)
+          running = true
+          // warm-up rows emit NULL state — re-emit nothing; they were
+          // emitted as they arrived
+        }
+        rows.map { r =>
+          val p = r.getLong(1); val y = r.getLong(2)
+          if (!running) {
+            warm = warm :+ ((p, y))
+            if (warm.length == m) initFromWarm()
+            (g, p, y, None, None, None, None, None)
+          } else {
+            val sOld = ring.head
+            val f = level + trend + sOld
+            val prevLevel = level
+            level = ((BigInt(alphaMicro) * (y - sOld) +
+              BigInt(1000000L - alphaMicro) * (prevLevel + trend)) / 1000000L)
+              .toLong
+            trend = ((BigInt(betaMicro) * (level - prevLevel) +
+              BigInt(1000000L - betaMicro) * trend) / 1000000L).toLong
+            val sNew = ((BigInt(gammaMicro) * (y - level) +
+              BigInt(1000000L - gammaMicro) * sOld) / 1000000L).toLong
+            ring = ring.tail :+ sNew
+            (g, p, y, Some(f), Some(y - f), Some(level), Some(trend),
+              Some(sNew))
+          }
+        }
       }
-      if (!running) {
-        warm = warm :+ ((p, y))
-        out += ((g, p, y, None, None, None, None, None))
-        if (warm.length == m) initFromWarm()
-      } else {
-        val sOld = ring.head
-        val f = level + trend + sOld
-        val prevLevel = level
-        level = ((BigInt(alphaMicro) * (y - sOld) +
-          BigInt(1000000L - alphaMicro) * (prevLevel + trend)) / 1000000L)
-          .toLong
-        trend = ((BigInt(betaMicro) * (level - prevLevel) +
-          BigInt(1000000L - betaMicro) * trend) / 1000000L).toLong
-        val sNew = ((BigInt(gammaMicro) * (y - level) +
-          BigInt(1000000L - gammaMicro) * sOld) / 1000000L).toLong
-        ring = ring.tail :+ sNew
-        out += ((g, p, y, Some(f), Some(y - f), Some(level), Some(trend),
-          Some(sNew)))
-      }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "err_micro", "level_micro", "trend_micro", "season_micro")
   }
 
   /** X175 — Holt-Winters MULTIPLICATIVE seasonal forecast backtest,
@@ -1276,10 +1200,10 @@ object TimeSeries {
     * Periods must be CONSECUTIVE; duplicates REFUSE; groups with ≤ m
     * observations emit warm-up rows only.
     *
-    * Scale shape = [[holtWintersBacktest]]: the probes, then the
-    * maxSteps-refused driver fold. Output: `(grp, p, y_micro,
-    * forecast_micro, err_micro, level_micro, trend_micro,
-    * season_micro)`. */
+    * Scale shape = [[holtWintersBacktest]]: the [[StepTable]] driver
+    * fold, the non-positive value refusal checked first. Output:
+    * `(grp, p, y_micro, forecast_micro, err_micro, level_micro,
+    * trend_micro, season_micro)`. */
   def holtWintersMultBacktest(df: DataFrame, group: Column,
       period: Column, valueMicro: Column, m: Int, alphaMicro: Long,
       betaMicro: Long, gammaMicro: Long,
@@ -1292,100 +1216,76 @@ object TimeSeries {
       s"betaMicro must be in [0, 1e6], got $betaMicro")
     require(gammaMicro >= 0 && gammaMicro <= 1000000L,
       s"gammaMicro must be in [0, 1e6], got $gammaMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val nonPos = base.filter(col("__y") <= 0).limit(1).collect()
-    require(nonPos.isEmpty,
-      "holtWintersMultBacktest: non-positive value — the multiplicative " +
-        "form's ratio season is undefined at y <= 0; use the additive " +
-        "form or shift/clean upstream")
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "holtWintersMultBacktest: duplicate (group, period) observation — " +
-        "two values make the forecast ambiguous; aggregate upstream")
-    val wLag = org.apache.spark.sql.expressions.Window
-      .partitionBy("__g").orderBy("__p")
-    val gap = base.withColumn("__pp", lag(col("__p"), 1).over(wLag))
-      .filter(col("__pp").isNotNull && col("__p") =!= col("__pp") + 1)
-      .limit(1).collect()
-    require(gap.isEmpty,
-      s"holtWintersMultBacktest: non-consecutive periods " +
-        s"${gap.headOption.map(r => s"${r.getLong(1)} after ${r.getLong(3)}")
-          .getOrElse("")} — a gap shifts season alignment; gap-fill or " +
-        "re-index upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps Holt-Winters steps — bucket periods upstream " +
-        "(the bounded driver-fold stance)")
-    val out = Vector.newBuilder[(String, Long, Long, Option[Long],
-      Option[Long], Option[Long], Option[Long], Option[Long])]
-    var curG: String = null
-    var warm = Vector.empty[(Long, Long)]
-    var level = 0L
-    var trend = 0L
-    var ring = Vector.empty[Long]
-    var running = false
-    var poisoned = false
-    def initFromWarm(): Unit = {
-      val l0 = (warm.map(w => BigInt(w._2)).sum / warm.length).toLong
-      level = l0; trend = 0L
-      // y ≥ 1 micro ⇒ l0 ≥ 1, so the ratio init can never divide by 0
-      ring = warm.map(w => (BigInt(w._2) * 1000000L / l0).toLong)
-      running = true
-    }
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) {
-        curG = g; warm = Vector.empty; running = false; poisoned = false
-        level = 0L; trend = 0L; ring = Vector.empty
-      }
-      if (!running) {
-        warm = warm :+ ((p, y))
-        out += ((g, p, y, None, None, None, None, None))
-        if (warm.length == m) initFromWarm()
-      } else if (poisoned) {
-        out += ((g, p, y, None, None, None, None, None))
-      } else {
-        val sOld = ring.head
-        // domain check BEFORE either divisor is consumed: a zero
-        // seasonal slot or a non-positive implied level poisons the
-        // group's remaining rows (stated — never a crash)
-        if (sOld <= 0 || level + trend <= 0) {
-          poisoned = true
-          out += ((g, p, y, None, None, None, None, None))
-        } else {
-          val f = (BigInt(level + trend) * sOld / 1000000L).toLong
-          val prevLevel = level
-          val deseason = (BigInt(y) * 1000000L / sOld).toLong
-          level = ((BigInt(alphaMicro) * deseason +
-            BigInt(1000000L - alphaMicro) * (prevLevel + trend)) /
-            1000000L).toLong
-          trend = ((BigInt(betaMicro) * (level - prevLevel) +
-            BigInt(1000000L - betaMicro) * trend) / 1000000L).toLong
-          if (level <= 0) {
-            // the seasonal update's divisor is gone: emit this row's
-            // forecast (it used only pre-step state), then poison
-            poisoned = true
-            out += ((g, p, y, Some(f), Some(y - f), None, None, None))
+        "(the bounded driver-fold stance)",
+      Broken(col("__y") <= 0,
+        "holtWintersMultBacktest: non-positive value — the multiplicative " +
+          "form's ratio season is undefined at y <= 0; use the additive " +
+          "form or shift/clean upstream"),
+      Duplicate("holtWintersMultBacktest: duplicate (group, period) " +
+        "observation — two values make the forecast ambiguous; aggregate " +
+        "upstream"),
+      Gap((p, pp) => s"holtWintersMultBacktest: non-consecutive periods " +
+        s"$p after $pp — a gap shifts season alignment; gap-fill or " +
+        "re-index upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "err_micro",
+        "level_micro", "trend_micro", "season_micro") { (g, rows) =>
+        var warm = Vector.empty[(Long, Long)]
+        var level = 0L
+        var trend = 0L
+        var ring = Vector.empty[Long]
+        var running = false
+        var poisoned = false
+        def initFromWarm(): Unit = {
+          val l0 = (warm.map(w => BigInt(w._2)).sum / warm.length).toLong
+          level = l0; trend = 0L
+          // y ≥ 1 micro ⇒ l0 ≥ 1, so the ratio init can never divide by 0
+          ring = warm.map(w => (BigInt(w._2) * 1000000L / l0).toLong)
+          running = true
+        }
+        rows.map { r =>
+          val p = r.getLong(1); val y = r.getLong(2)
+          if (!running) {
+            warm = warm :+ ((p, y))
+            if (warm.length == m) initFromWarm()
+            (g, p, y, None, None, None, None, None)
+          } else if (poisoned) {
+            (g, p, y, None, None, None, None, None)
           } else {
-            val sNew = ((BigInt(gammaMicro) * (BigInt(y) * 1000000L /
-              level) + BigInt(1000000L - gammaMicro) * sOld) /
-              1000000L).toLong
-            ring = ring.tail :+ sNew
-            out += ((g, p, y, Some(f), Some(y - f), Some(level),
-              Some(trend), Some(sNew)))
+            val sOld = ring.head
+            // domain check BEFORE either divisor is consumed: a zero
+            // seasonal slot or a non-positive implied level poisons the
+            // group's remaining rows (stated — never a crash)
+            if (sOld <= 0 || level + trend <= 0) {
+              poisoned = true
+              (g, p, y, None, None, None, None, None)
+            } else {
+              val f = (BigInt(level + trend) * sOld / 1000000L).toLong
+              val prevLevel = level
+              val deseason = (BigInt(y) * 1000000L / sOld).toLong
+              level = ((BigInt(alphaMicro) * deseason +
+                BigInt(1000000L - alphaMicro) * (prevLevel + trend)) /
+                1000000L).toLong
+              trend = ((BigInt(betaMicro) * (level - prevLevel) +
+                BigInt(1000000L - betaMicro) * trend) / 1000000L).toLong
+              if (level <= 0) {
+                // the seasonal update's divisor is gone: emit this row's
+                // forecast (it used only pre-step state), then poison
+                poisoned = true
+                (g, p, y, Some(f), Some(y - f), None, None, None)
+              } else {
+                val sNew = ((BigInt(gammaMicro) * (BigInt(y) * 1000000L /
+                  level) + BigInt(1000000L - gammaMicro) * sOld) /
+                  1000000L).toLong
+                ring = ring.tail :+ sNew
+                (g, p, y, Some(f), Some(y - f), Some(level),
+                  Some(trend), Some(sNew))
+              }
+            }
           }
         }
       }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "err_micro", "level_micro", "trend_micro", "season_micro")
   }
 
   /** X151 — sample autocorrelation function + Ljung-Box portmanteau
@@ -1433,10 +1333,7 @@ object TimeSeries {
     require(maxLag >= 1 && maxLag <= 100,
       s"maxLag must be in [1, 100], got $maxLag")
     val d = org.apache.spark.sql.types.DecimalType(38, 0)
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
+    val base = series(df, group, period, valueMicro)
       // one pass over the caller's frame: both probes, the stats
       // aggregation, and the lead battery read the cache; the per-lag
       // result is eagerly checkpointed before the cache drops
@@ -1798,11 +1695,10 @@ object TimeSeries {
     * calendar — bucket upstream); σ ≤ 0 or L ≤ 0 REFUSES (a chart
     * with no width is a bug, not a chart).
     *
-    * Scale shape = X120: one duplicate-probe aggregation, then the
-    * `maxSteps`-refused driver fold over the bounded step table —
-    * monitoring step tables are period-sized, never corpus-sized.
-    * Output: `(grp, p, y_micro, z_micro, ucl_micro, lcl_micro,
-    * flag)`. */
+    * Scale shape = X120: the [[StepTable]] driver fold over the bounded
+    * step table — monitoring step tables are period-sized, never
+    * corpus-sized. Output: `(grp, p, y_micro, z_micro, ucl_micro,
+    * lcl_micro, flag)`. */
   def ewmaChart(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, lambdaMicro: Long, muMicro: Long,
       sigmaMicro: Long, lMicro: Long = 3000000L,
@@ -1811,49 +1707,35 @@ object TimeSeries {
       s"lambdaMicro must be in (0, 1e6], got $lambdaMicro")
     require(sigmaMicro > 0, s"sigmaMicro must be positive, got $sigmaMicro")
     require(lMicro > 0, s"lMicro must be positive, got $lMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "ewmaChart: duplicate (group, period) observation — two values " +
-        "make the statistic ambiguous; aggregate upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps EWMA steps — bucket periods upstream (the " +
-        "bounded driver-fold stance)")
-    val out = Vector.newBuilder[
-      (String, Long, Long, Long, Long, Long, Boolean)]
-    var curG: String = null
-    var z = 0L
-    var t = 0L
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) { curG = g; z = muMicro; t = 0L }
-      t += 1
-      z = ((BigInt(lambdaMicro) * y +
-        BigInt(1000000L - lambdaMicro) * z) / 1000000L).toLong
-      // ONE stated IEEE chain: c1 = λ/(2e6−λ); c2 = 1 − exp(2t·ln q)
-      // (q = 0 at λ = 1e6 → c2 = 1 exactly, the stated branch);
-      // hw = round(L·σ/1e6 · sqrt(c1·c2))
-      val c1 = lambdaMicro.toDouble / (2000000.0 - lambdaMicro)
-      val c2 =
-        if (lambdaMicro == 1000000L) 1.0
-        else 1.0 - math.exp(2.0 * t *
-          math.log((1000000L - lambdaMicro).toDouble / 1000000.0))
-      val hw = math.round(lMicro.toDouble * sigmaMicro / 1000000.0 *
-        math.sqrt(c1 * c2))
-      val ucl = muMicro + hw
-      val lcl = muMicro - hw
-      out += ((g, p, y, z, ucl, lcl, z < lcl || z > ucl))
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "z_micro", "ucl_micro",
-      "lcl_micro", "flag")
+        "bounded driver-fold stance)",
+      Duplicate("ewmaChart: duplicate (group, period) observation — two " +
+        "values make the statistic ambiguous; aggregate upstream"))
+      .fold("grp", "p", "y_micro", "z_micro", "ucl_micro", "lcl_micro",
+        "flag") { (g, rows) =>
+        var z = muMicro
+        var t = 0L
+        rows.map { r =>
+          val p = r.getLong(1); val y = r.getLong(2)
+          t += 1
+          z = ((BigInt(lambdaMicro) * y +
+            BigInt(1000000L - lambdaMicro) * z) / 1000000L).toLong
+          // ONE stated IEEE chain: c1 = λ/(2e6−λ); c2 = 1 − exp(2t·ln q)
+          // (q = 0 at λ = 1e6 → c2 = 1 exactly, the stated branch);
+          // hw = round(L·σ/1e6 · sqrt(c1·c2))
+          val c1 = lambdaMicro.toDouble / (2000000.0 - lambdaMicro)
+          val c2 =
+            if (lambdaMicro == 1000000L) 1.0
+            else 1.0 - math.exp(2.0 * t *
+              math.log((1000000L - lambdaMicro).toDouble / 1000000.0))
+          val hw = math.round(lMicro.toDouble * sigmaMicro / 1000000.0 *
+            math.sqrt(c1 * c2))
+          val ucl = muMicro + hw
+          val lcl = muMicro - hw
+          (g, p, y, z, ucl, lcl, z < lcl || z > ucl)
+        }
+      }
   }
 
   /** X163 — Theta-method forecast backtest (Assimakopoulos &
@@ -1887,67 +1769,51 @@ object TimeSeries {
     * (group, period) REFUSED; NULL drops; gaps are consecutive steps
     * (no calendar — bucket upstream).
     *
-    * Scale shape = X120: one duplicate-probe aggregation, then the
-    * `maxSteps`-refused driver fold (prefix sums carried as BigInt —
-    * O(1) per step). Output: `(grp, p, y_micro, forecast_micro,
-    * err_micro, level_micro, drift_micro)`. */
+    * Scale shape = X120: the [[StepTable]] driver fold (prefix sums
+    * carried as BigInt — O(1) per step). Output: `(grp, p, y_micro,
+    * forecast_micro, err_micro, level_micro, drift_micro)`. */
   def thetaBacktest(df: DataFrame, group: Column, period: Column,
       valueMicro: Column, alphaMicro: Long,
       maxSteps: Int = 100000): DataFrame = {
     require(alphaMicro > 0 && alphaMicro <= 1000000L,
       s"alphaMicro must be in (0, 1e6], got $alphaMicro")
-    require(maxSteps >= 1, s"maxSteps must be positive, got $maxSteps")
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "thetaBacktest: duplicate (group, period) observation — two " +
-        "values make the forecast ambiguous; aggregate upstream")
-    val rows = base.orderBy("__g", "__p").limit(maxSteps + 1).collect()
-    require(rows.length <= maxSteps,
+    steps(df, group, period, valueMicro, maxSteps,
       s"more than $maxSteps theta steps — bucket periods upstream (the " +
-        "bounded driver-fold stance)")
-    val out = Vector.newBuilder[
-      (String, Long, Long, Option[Long], Option[Long], Long, Long)]
-    var curG: String = null
-    var level = 0L
-    var k = 0L
-    var si, sy, siy, sii = BigInt(0)
-    rows.foreach { r =>
-      val g = r.getString(0); val p = r.getLong(1); val y = r.getLong(2)
-      if (g != curG) {
-        curG = g; k = 0L
-        si = 0; sy = 0; siy = 0; sii = 0
-      }
-      k += 1
-      // drift from the prefix 1..k−1 (causal; 0 under 2 points)
-      val drift =
-        if (k <= 2) 0L
-        else {
-          val kp = BigInt(k - 1)
-          val num = kp * siy - si * sy
-          val den = 2 * (kp * sii - si * si)
-          (num / den).toLong // BigInt / truncates toward zero
+        "bounded driver-fold stance)",
+      Duplicate("thetaBacktest: duplicate (group, period) observation — " +
+        "two values make the forecast ambiguous; aggregate upstream"))
+      .fold("grp", "p", "y_micro", "forecast_micro", "err_micro",
+        "level_micro", "drift_micro") { (g, rows) =>
+        var level = 0L
+        var k = 0L
+        var si, sy, siy, sii = BigInt(0)
+        rows.map { r =>
+          val p = r.getLong(1); val y = r.getLong(2)
+          k += 1
+          // drift from the prefix 1..k−1 (causal; 0 under 2 points)
+          val drift =
+            if (k <= 2) 0L
+            else {
+              val kp = BigInt(k - 1)
+              val num = kp * siy - si * sy
+              val den = 2 * (kp * sii - si * si)
+              (num / den).toLong // BigInt / truncates toward zero
+            }
+          val row =
+            if (k == 1) {
+              level = y // ℓ₁ = y₁, the X120 start
+              (g, p, y, None, None, level, 0L)
+            } else {
+              val f = level + drift
+              level = ((BigInt(alphaMicro) * y +
+                BigInt(1000000L - alphaMicro) * level) / 1000000L).toLong
+              (g, p, y, Some(f), Some(y - f), level, drift)
+            }
+          si += BigInt(k); sy += BigInt(y)
+          siy += BigInt(k) * y; sii += BigInt(k) * k
+          row
         }
-      if (k == 1) {
-        level = y // ℓ₁ = y₁, the X120 start
-        out += ((g, p, y, None, None, level, 0L))
-      } else {
-        val f = level + drift
-        level = ((BigInt(alphaMicro) * y +
-          BigInt(1000000L - alphaMicro) * level) / 1000000L).toLong
-        out += ((g, p, y, Some(f), Some(y - f), level, drift))
       }
-      si += BigInt(k); sy += BigInt(y)
-      siy += BigInt(k) * y; sii += BigInt(k) * k
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    out.result().toDF("grp", "p", "y_micro", "forecast_micro",
-      "err_micro", "level_micro", "drift_micro")
   }
 
   /** X166 — classical additive seasonal decomposition (the
@@ -1996,10 +1862,7 @@ object TimeSeries {
     require(m >= 2 && m <= 1000, s"m must be in [2, 1000], got $m")
     val d = org.apache.spark.sql.types.DecimalType(38, 0)
     val w = org.apache.spark.sql.expressions.Window
-    val base = df.select(
-        coalesce(group.cast("string"), lit("(null)")).as("__g"),
-        period.cast("long").as("__p"), valueMicro.cast("long").as("__y"))
-      .filter(col("__p").isNotNull && col("__y").isNotNull)
+    val base = series(df, group, period, valueMicro)
       .persist()
     try {
       val probe = base.groupBy("__g")

@@ -12,9 +12,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * The reference identifies a dataset by `(pg_schema, name)` and uses it as a
   * schema handle, batch source, batch sink, and reflection surface. Here the
-  * same surface is a thin veneer over `spark.read.parquet` / `df.write.parquet`:
-  * Parquet is self-describing, so reflection (dataset.py:88-118) is a footer
-  * read, and all relational work stays a lazy Catalyst plan until an action.
+  * same surface is a thin veneer over [[Parquet.scan]] / `df.write.parquet`:
+  * Parquet is self-describing, so reflection (dataset.py:88-118) is one
+  * driver-side footer read — [[read]], [[schema]], [[readVersion]] and
+  * [[readLatest]] start no Spark job — and all relational work stays a lazy
+  * Catalyst plan until an action.
   *
   * Scale notes (100 TB): every method is either metadata-only (schema) or
   * returns/writes a distributed DataFrame; nothing here collects to the driver
@@ -29,7 +31,7 @@ final case class Table(spark: SparkSession, dir: String, name: String) {
   /** Full-table scan (reference `get_dataframe`, dataset.py:120-126). Lazy:
     * Catalyst prunes columns and pushes filters into the parquet scan, so
     * unlike the reference's `SELECT *` this never over-reads. */
-  def read: DataFrame = spark.read.parquet(path)
+  def read: DataFrame = Parquet.scan(spark, path)
 
   /** Schema handle (reference `read_dtype`, dataset.py:163-170). */
   def schema: StructType = read.schema
@@ -142,7 +144,7 @@ final case class Table(spark: SparkSession, dir: String, name: String) {
     *
     * Bucket metadata lives in the catalog (Spark cannot recover bucketing
     * from bare parquet paths), so bucketed tables are read back with
-    * `spark.table(name)`, not `spark.read.parquet`. */
+    * `spark.table(name)`, not a path scan. */
   def overwriteBucketed(df: DataFrame, buckets: Int, bucketCols: Seq[String],
       sortCols: Seq[String] = Nil): Unit = {
     require(bucketCols.nonEmpty, "need at least one bucket column")
@@ -386,12 +388,9 @@ final case class Table(spark: SparkSession, dir: String, name: String) {
     val rows =
       if (stagedFiles.length <= 64) {
         val conf = spark.sparkContext.hadoopConfiguration
-        stagedFiles.map { st =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-          try rd.getRecordCount finally rd.close()
-        }.sum
-      } else spark.read.parquet(staging.toString).count()
+        stagedFiles.map(st =>
+          Parquet.footer(st, conf).getBlocks.asScala.map(_.getRowCount).sum).sum
+      } else Parquet.scan(spark, staging.toString).count()
     val manifest =
       s"""{"version":$v,"committed_at_ms":${System.currentTimeMillis()},""" +
         s""""rows":$rows,""" +
@@ -521,14 +520,14 @@ final case class Table(spark: SparkSession, dir: String, name: String) {
   def readVersion(v: Long): DataFrame = {
     require(versions.contains(v),
       s"version $v of $name does not exist (have: ${versions.mkString(",")})")
-    spark.read.parquet(versionPath(v))
+    Parquet.scan(spark, versionPath(v))
   }
 
   /** Read the latest committed version. */
   def readLatest: DataFrame = {
     val v = latestVersion.getOrElse(
       throw new IllegalStateException(s"$name has no committed versions"))
-    spark.read.parquet(versionPath(v))
+    Parquet.scan(spark, versionPath(v))
   }
 
   /** Retention: delete all but the newest `keepLast` versions, returning
@@ -675,7 +674,7 @@ final case class Table(spark: SparkSession, dir: String, name: String) {
     val paths = base.map(ledgerBasePath).toSeq ++
       deltas.filter(d => base.forall(d > _)).map(ledgerDeltaPath)
     require(paths.nonEmpty, s"$name has no committed ledger entries")
-    spark.read.parquet(paths: _*)
+    Parquet.scan(spark, paths: _*)
   }
 
   /** One delta's rows — the healing read for a commit chain whose LATER
@@ -688,7 +687,7 @@ final case class Table(spark: SparkSession, dir: String, name: String) {
       if (base.exists(_ >= id))
         s"ledger delta $id of $name was folded into the base by a compaction"
       else s"ledger delta $id of $name was never committed")
-    spark.read.parquet(ledgerDeltaPath(id))
+    Parquet.scan(spark, ledgerDeltaPath(id))
   }
 
   /** Checkpoint fold — [[compactIfFragmented]]'s ledger analog: when LIVE

@@ -8,7 +8,7 @@ import java.util.zip.ZipInputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Table
+import graft.core.{Parquet, Table}
 
 /** Ingest utilities (SURVEY.md §2.1 S1-S2): the reference's download/unzip
   * and embulk-CSV-load operators re-expressed for a Spark pipeline. These are
@@ -144,7 +144,7 @@ object Ingest {
     * old batches, not by leaning on the reader. */
   def parquetEvolvedLoad(spark: SparkSession, parquetPath: String,
       dest: Table): Table = {
-    dest.overwrite(spark.read.option("mergeSchema", true).parquet(parquetPath))
+    dest.overwrite(Parquet.scan(spark, Map("mergeSchema" -> "true"), parquetPath))
     dest
   }
 

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** X84 — semi-structured JSON key-path profiling: the schema-drift radar a
@@ -15,14 +16,19 @@ import org.apache.spark.sql.functions._
   * between batches — X22's PSI over this output), and flattening plans.
   *
   * Built on Spark 4's native variant machinery — `try_parse_json` +
-  * `from_json(…, map<string,variant>)` as the one dynamic-key recursion
-  * primitive (no UDF, no driver-side JSON walking): each level explodes
-  * object members into (path, variant) rows, `schema_of_variant`
-  * classifies each value, and one path-keyed aggregation with map-side
-  * combine produces the census. Recursion depth is a bounded config
-  * (`maxDepth` levels of object nesting), so the plan is a fixed union of
-  * `maxDepth` map-only stages — fan-out per row = its key count per
-  * level, never corpus-squared.
+  * `variant_get(v, '$', 'map<string,variant>')` as the one dynamic-key
+  * recursion primitive (no UDF, no driver-side JSON walking, no lambda):
+  * each level is one `explode` generator step that turns object members
+  * into (path, variant) rows, `schema_of_variant` classifies each value
+  * once, and one path-keyed aggregation with map-side combine produces
+  * the census. Recursion depth is a bounded config (`maxDepth` levels of
+  * object nesting), so the plan is a fixed chain of `maxDepth` map-only
+  * generator steps — fan-out per row = its key count per level, never
+  * corpus-squared.
+  *
+  * Job shape: the call starts no Spark job. The total and the refusal of
+  * an empty input ("pathProfile: empty input", a `raise_error`) live in
+  * the returned plan and fire at action time.
   *
   * Semantics: an explicit JSON `null` is PRESENT with type `null`
   * (absent-vs-null is the drift signal that matters most — a field going
@@ -42,9 +48,10 @@ import org.apache.spark.sql.functions._
 object JsonProfile {
 
   /** The one type classifier both the census and its tests pin: variant
-    * schema string → {object, array, string, number, boolean, null}. */
-  private def typeOf(v: Column): Column = {
-    val t = schema_of_variant(v)
+    * schema string → {object, array, string, number, boolean, null}. The
+    * caller projects `schema_of_variant` into a column of its own first:
+    * inlined, the CASE below would run it once per branch it tests. */
+  private def typeOf(t: Column): Column =
     when(t.startsWith("OBJECT"), "object")
       .when(t.startsWith("ARRAY"), "array")
       .when(t === "STRING", "string")
@@ -52,75 +59,82 @@ object JsonProfile {
         t === "FLOAT", "number")
       .when(t === "BOOLEAN", "boolean")
       .otherwise("null") // VOID — the explicit JSON null
-  }
 
   def pathProfile(df: DataFrame, json: Column, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 8,
       s"maxDepth must be in [1, 8], got $maxDepth")
-    val base = df.select(json.cast("string").as("__j"))
-    val total = base.count()
-    require(total > 0, "pathProfile: empty input")
+    val spark = df.sparkSession
     // Spread rows before the per-row variant parse: scan parallelism is
     // row-group-bounded (a single-row-group file is ONE task), and
     // try_parse_json + the member walk is the map-heavy shape that must
     // ride every core. ROUND-ROBIN (placement-independent — the census is
-    // a keyed aggregation): the former payload-keyed spread hashed every
-    // payload just for placement and sent all identical documents
-    // (boilerplate/empty objects, common in real corpora) to ONE
-    // partition — recreating the skew it existed to fix. The partition
-    // count is EXPLICIT (defaultParallelism — the core count, a scale
-    // knob, never a constant): a count-less repartition is
-    // AQE-coalescible, and a ~MB-sized shuffle coalesces back to ONE
-    // partition. Nothing downstream filters on a post-spread column, so
-    // the pushdown-through-repartition trap (q152/q166, r18) can't bite.
-    val parsed = base.filter(col("__j").isNotNull)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(expr("try_parse_json(__j)").as("__v"))
-    // ONE map-only pass: per row, the bounded member walk runs as a chain
-    // of `maxDepth` higher-order transforms building the full (path, tag)
-    // entry array in-row — level d+1 = object members of level d, arrays
-    // never walked, `from_json(to_json(v), map<string,variant>)` as the
-    // one dynamic-key recursion primitive exactly as before. The former
-    // shape materialized every level through an eager localCheckpoint
-    // chain (maxDepth+1 driver actions + corpus-sized block litter) just
-    // to stop Spark re-parsing the root chain per level consumer; with
-    // the walk in-row there is nothing to re-parse — each level array is
-    // a lambda-local value feeding both its census entries and the next
-    // level, so the whole census is the spread exchange + one
-    // aggregation, two driver actions total (the input count and the
-    // census job), zero retained blocks.
-    val entrySchema = "array<struct<path:string,v:variant>>"
-    val root = array(struct(lit("$").as("path"), col("__v").as("v")))
-      .cast(entrySchema)
-    def expand(lvl: Column): Column =
-      flatten(transform(
-        filter(lvl, e => typeOf(e.getField("v")) === "object"),
-        e => transform(
-          map_entries(from_json(to_json(e.getField("v")),
-            "map<string,variant>", java.util.Collections.emptyMap[String, String]())),
-          m => struct(
-            concat(e.getField("path"), lit("."), m.getField("key")).as("path"),
-            m.getField("value").as("v")))))
-    val levels = (1 until maxDepth).scanLeft(expand(root))((prev, _) =>
-      expand(prev))
-    val entries = concat(root +: levels: _*)
-    val tagged = parsed.select(
-        when(col("__v").isNotNull,
-          transform(entries, e => struct(e.getField("path").as("path"),
-            typeOf(e.getField("v")).as("tag"))))
-          // unparseable non-null text lands in ONE (malformed) entry —
-          // never in the type histogram
-          .otherwise(array(struct(lit("(malformed)").as("path"),
-            lit("malformed").as("tag"))))
-          .as("__entries"))
-      .select(explode(col("__entries")).as("__e"))
-      .select(col("__e.path").as("path"), col("__e.tag").as("__tag"))
-    def cnt(t: String) = sum(when(col("__tag") === t, 1L).otherwise(0L))
-    tagged.groupBy("path")
+    // a keyed aggregation): a payload-keyed spread would send all
+    // identical documents (boilerplate/empty objects, common in real
+    // corpora) to ONE partition. The partition count is EXPLICIT
+    // (defaultParallelism — the core count, a scale knob, never a
+    // constant): a count-less repartition is AQE-coalescible, and a
+    // ~MB-sized shuffle coalesces back to ONE partition.
+    val parsed = df.select(json.cast("string").as("__j"))
+      .repartition(spark.sparkContext.defaultParallelism)
+      .select(col("__j").isNull.as("__absent"),
+        expr("try_parse_json(__j)").as("__v"))
+      .select(col("__absent"), col("__v"), schema_of_variant(col("__v")).as("__s"))
+      .select(col("__absent"), col("__v"), typeOf(col("__s")).as("__t"))
+    // The walk is `maxDepth` generator steps over entry rows
+    // (path, tag, v, r). Level 0 is one row per input row: `$` for a parsed
+    // document, `(malformed)` for unparseable non-null text, a null path
+    // for a NULL input (counted into the total only). `v` holds an object
+    // still to open and is null otherwise; `r` is 1 on each input row's
+    // level-0 entry, so the census total is sum(r).
+    val root = parsed.select(
+      when(col("__v").isNotNull, lit("$"))
+        .when(!col("__absent"), lit("(malformed)")).as("path"),
+      when(col("__v").isNotNull, col("__t"))
+        .when(!col("__absent"), lit("malformed")).as("tag"),
+      when(col("__t") === "object", col("__v")).as("v"),
+      lit(1L).as("r"))
+    // One step explodes each row into itself, finished (carried forward
+    // under a null variant), plus the members of its open object, each
+    // typed once. Members come from a direct variant→map read: one parse
+    // of the level, no lambda, so nothing runs interpreted.
+    val self = struct(lit(null).cast("string").as("key"),
+      lit(null).cast("variant").as("value"))
+    def step(level: DataFrame): DataFrame = level
+      .select(col("path"), col("tag"), col("r"), explode(
+        when(col("v").isNull, array(self)).otherwise(concat(array(self),
+          map_entries(expr("variant_get(v, '$', 'map<string,variant>')")))))
+        .as("__m"))
+      .select(col("path"), col("tag"), col("r"), col("__m.key").as("__k"),
+        col("__m.value").as("__mv"), schema_of_variant(col("__m.value")).as("__ms"))
+      .select(col("path"), col("tag"), col("r"), col("__k"), col("__mv"),
+        typeOf(col("__ms")).as("__mt"))
+      .select(
+        when(col("__k").isNull, col("path"))
+          .otherwise(concat(col("path"), lit("."), col("__k"))).as("path"),
+        when(col("__k").isNull, col("tag")).otherwise(col("__mt")).as("tag"),
+        when(col("__k").isNotNull && col("__mt") === "object", col("__mv"))
+          .as("v"),
+        when(col("__k").isNull, col("r")).otherwise(0L).as("r"))
+    val entries = (1 to maxDepth).foldLeft(root)((level, _) => step(level))
+      .select(col("path"), col("tag"), col("r"))
+    // One sentinel row (null path, r = 0) keeps the census non-empty on
+    // empty input, so the refusal below runs in the plan at action time
+    // instead of costing a count job at call time.
+    val sentinel = spark.range(0, 1, 1, 1).select(lit(null).cast("string").as("path"),
+      lit(null).cast("string").as("tag"), lit(0L).as("r"))
+    def cnt(t: String) = sum(when(col("tag") === t, 1L).otherwise(0L))
+    entries.unionByName(sentinel).groupBy("path")
       .agg(count(lit(1)).as("n"),
         cnt("object").as("n_object"), cnt("array").as("n_array"),
         cnt("string").as("n_string"), cnt("number").as("n_number"),
-        cnt("boolean").as("n_boolean"), cnt("null").as("n_null"))
-      .withColumn("present_micro", expr(s"n * 1000000 DIV ${total}L"))
+        cnt("boolean").as("n_boolean"), cnt("null").as("n_null"),
+        sum("r").as("__rows"))
+      .withColumn("__total", sum("__rows").over(Window.partitionBy()))
+      .filter(when(col("__total") === 0,
+          raise_error(lit("pathProfile: empty input")))
+        .otherwise(col("path").isNotNull))
+      .select(col("path"), col("n"), col("n_object"), col("n_array"),
+        col("n_string"), col("n_number"), col("n_boolean"), col("n_null"),
+        expr("n * 1000000 DIV __total").as("present_micro"))
   }
 }

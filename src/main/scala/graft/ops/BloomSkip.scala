@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Parquet
+
 /** X119 — per-file Bloom skipping: the EQUALITY complement to
   * [[ZoneMaps]]' range manifests. Zone maps prune on [min, max]
   * intervals, which only bite when the layout gives the column locality
@@ -113,8 +115,7 @@ object BloomSkip {
     * positions with a map-side partial, so no pre-`distinct` pass. */
   private def wordsFor(spark: SparkSession, dataDir: String,
       files: Seq[String], id: Identity): DataFrame = {
-    val data = spark.read.option("basePath", dataDir)
-      .parquet(files.toIndexedSeq: _*)
+    val data = Parquet.scan(spark, Map("basePath" -> dataDir), files: _*)
     require(data.columns.contains(id.keyCol),
       s"column '${id.keyCol}' not in schema")
     data.select(input_file_name().as("__bs_file"), col(id.keyCol).as("__k"))
@@ -185,7 +186,7 @@ object BloomSkip {
     val id = Identity(keyCol, bits, hashes, seed)
     commit(spark, manifestDir,
       wordsFor(spark, dataDir, files, id).unionByName(sentinels(spark, files)),
-      spark.read.parquet(dataDir).schema, id)
+      Parquet.scan(spark, dataDir).schema, id)
   }
 
   /** Refresh after the data directory changed, scanning ONLY uncovered
@@ -223,7 +224,7 @@ object BloomSkip {
       Seq("__bs_file"), "left_semi")
     val fresh = current.filterNot(f =>
       oldNorm.contains(ZoneMaps.normalizePath(f)))
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = Parquet.scan(spark, dataDir).schema
     val merged =
       if (fresh.isEmpty) carriedDf
       else wordsFor(spark, dataDir, fresh, id)
@@ -292,8 +293,7 @@ object BloomSkip {
       if (keptFull.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           readSchema(spark, manifestDir))
-      else spark.read.option("basePath", dataDir)
-        .parquet(keptFull.toIndexedSeq: _*)
+      else Parquet.scan(spark, Map("basePath" -> dataDir), keptFull: _*)
     // residual = OR-of-equalities against literals CAST to the key
     // column's type (values coerce via CAST — pass same-typed values):
     // the predicate stays on the BARE column, so it pushes into the

@@ -225,7 +225,7 @@ object Layout {
     require(before.nonEmpty, s"no parquet files under $src")
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(src).coalesce(n)
+    graft.core.Parquet.scan(spark, src).coalesce(n)
       .write.mode("overwrite").parquet(dst)
     val after = listParquet(dstFs, dstPath)
     CompactStats(before.size, totalBytes, after.size, after.map(_.getLen).sum)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.core.Parquet
+
 /** File-level zone maps: a sidecar min/max manifest + manifest-driven file
   * pruning at read time — the data-skipping core every table format ships
   * (Delta stats / Iceberg manifests / ORC file stats), built engine-level.
@@ -129,8 +131,7 @@ object ZoneMaps {
 
   private def statsFor(spark: SparkSession, dataDir: String,
       files: Seq[String], cols: Seq[String]): DataFrame = {
-    val data = spark.read.option("basePath", dataDir)
-      .parquet(files.toIndexedSeq: _*)
+    val data = Parquet.scan(spark, Map("basePath" -> dataDir), files: _*)
     val missing = cols.filterNot(data.columns.contains)
     require(missing.isEmpty, s"column(s) not in schema: ${missing.mkString(",")}")
     val aggs = cols.flatMap(c =>
@@ -166,7 +167,7 @@ object ZoneMaps {
     require(cols.nonEmpty, "zone maps need at least one column")
     val files = listDataFiles(spark, dataDir)
     require(files.nonEmpty, s"no data files under $dataDir")
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = Parquet.scan(spark, dataDir).schema
     writeManifest(spark, manifestDir, statsFor(spark, dataDir, files, cols),
       schema)
   }
@@ -214,7 +215,7 @@ object ZoneMaps {
     val fresh =
       current.filterNot(f => oldFiles.contains(normalizePath(f)))
     val dropped = oldFiles.size - carried.length
-    val schema = spark.read.parquet(dataDir).schema
+    val schema = Parquet.scan(spark, dataDir).schema
     val merged =
       if (fresh.isEmpty)
         spark.createDataFrame(
@@ -301,7 +302,7 @@ object ZoneMaps {
           spark.sparkContext.emptyRDD[Row],
           DataType.fromJson(json).asInstanceOf[StructType])
       } else {
-        spark.read.option("basePath", dataDir).parquet(kept.toIndexedSeq: _*)
+        Parquet.scan(spark, Map("basePath" -> dataDir), kept.toIndexedSeq: _*)
       }
     (df.filter(residual), PruneStats(files.length, kept.length))
   }

@@ -67,7 +67,7 @@ final class Pipeline(stages: Seq[Stage]) {
         if (materialize.contains(s.name)) {
           val path = s"${checkpointDir.get}/${s.name}.parquet"
           out.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
+          graft.core.Parquet.scan(spark, path)
         } else out
       results(s.name) = finalDf
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Table
+import graft.core.{Parquet, Table}
 import graft.dedup.Dedup
 import graft.functions.Aggregators
 import graft.multimodal.Multimodal
@@ -2322,7 +2322,7 @@ object LlmOps {
             Similarity.ivfCellAssign(col("embedding"), ivfCentroids))
           .select(col("vec_id"), col("pq_code"), col("cell"))
           .write.partitionBy("cell").parquet(s"$tmp/index")
-        val index = s.read.parquet(s"$tmp/index")
+        val index = Parquet.scan(s, s"$tmp/index")
         Staging.deleteAtExit(tmp)
         val qv = emb.filter(col("vec_id") === 7).select(col("embedding"))
           .head().getSeq[Float](0).map(_.toDouble)
@@ -2856,7 +2856,7 @@ object LlmOps {
         require(stats.filesAfter < stats.filesBefore,
           s"compaction did not reduce file count: $stats")
         Staging.deleteAtExit(work.toString)
-        s.read.parquet(dst)
+        Parquet.scan(s, dst)
           .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
           .orderBy("doc_id")
       },

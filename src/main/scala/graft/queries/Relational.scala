@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.Table
+import graft.core.{Parquet, Table}
 import graft.ops.Ops._
 
 /** Case-class row for q125's typed-Dataset round-trip (S12) — top-level so
@@ -2200,7 +2200,7 @@ object Relational {
     val path = s"$dir/events.parquet"
     // ts arrives as nanos-long OR native timestamp depending on the
     // fixture's vintage; normalizeTs dispatches on the scanned type
-    val schema = s.read.parquet(path).schema
+    val schema = Parquet.scan(s, path).schema
     val streamDir = java.nio.file.Files.createTempDirectory(s"graft-$tag-events")
     val staged = streamDir.resolve("events.parquet")
     java.nio.file.Files.copy(java.nio.file.Paths.get(path), staged)

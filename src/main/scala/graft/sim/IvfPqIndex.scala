@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
+
 /** The IVF+PQ vector index as a maintained artifact, not a per-query
   * computation — the lifecycle face of X3/X34 (q155 is one retrieval over
   * this layout; this object owns building it, APPENDING to it, and the
@@ -160,7 +162,7 @@ object IvfPqIndex {
       centroids: Seq[Seq[Double]], nProbe: Int, kCand: Int): DataFrame = {
     require(kCand >= 1, s"kCand must be positive, got $kCand")
     graft.functions.GraftFunctions.register(spark)
-    val index = spark.read.parquet(path)
+    val index = Parquet.scan(spark, path)
     val probed = Similarity.ivfProbeCells(queryVec, centroids, nProbe)
     val pruned = index.filter(col("cell").isin(probed: _*))
     // literal-query ADC: the lookup tables fold into the plan as literal
@@ -254,7 +256,7 @@ object IvfPqIndex {
     val probedCells = p.select(explode(col("__cells")).as("c"))
       .where(col("c").isNotNull).distinct().collect().map(_.getInt(0)).toSeq
     require(probedCells.nonEmpty, "no probe resolved to any index cell")
-    val pruned = spark.read.parquet(path)
+    val pruned = Parquet.scan(spark, path)
       .filter(col("cell").isin(probedCells: _*))
     val pc = p.select(col("__pid"), explode(col("__cells")).as("cell"))
     val scored = pruned

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Parquet
+
 /** X72 — a MATERIALIZED inverted index for BM25 (the Lucene/Tantivy
   * serving structure, re-expressed as columnar tables): [[Retrieval
   * .bm25TopK]] is the one-shot face — it tokenizes and scans the whole
@@ -76,8 +78,8 @@ object InvertedIndex {
   def bm25TopK(spark: SparkSession, dir: String, queryTerms: Seq[String],
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
       roundTo: Int = 6): DataFrame =
-    score(spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/stats").select(col("n"), col("sumdl")),
+    score(Parquet.scan(spark, s"$dir/postings"),
+      Parquet.scan(spark, s"$dir/stats").select(col("n"), col("sumdl")),
       queryTerms, k, k1, b, roundTo)
 
   /** The ONE scoring path both faces (static directory, segmented ledger)

@@ -4,6 +4,8 @@ import Harness.r3
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
+
 /** Dev-only DENSITY-ramp probe (VERDICT r14 ask #2's second half): the
   * SCALING study holds density constant by construction (disjoint
   * shards), so it measures VOLUME exponents only. This tool ramps the
@@ -45,7 +47,7 @@ object Density {
         s""""sec":${r3(sec)},"rows":$rows,"capped":$capped}""")
 
     // ---------------- near-dup duplicate-rate ramp -------------------
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet.scan(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .persist()
     val pool = docs.orderBy("doc_id").limit(50).persist()
@@ -69,7 +71,7 @@ object Density {
     pool.unpersist(); docs.unpersist()
 
     // ---------------- IVF cell-fill ramp -----------------------------
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.scan(spark, s"$sfDir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .persist()
     val first = emb.orderBy("vec_id").limit(1)
@@ -90,7 +92,7 @@ object Density {
     emb.unpersist()
 
     // ---------------- basket-size ramp -------------------------------
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Parquet.scan(spark, s"$sfDir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey")).persist()
     def baskets(mult: Int): DataFrame =
       (1 to mult).map(k => li.select(col("l_orderkey"),
@@ -115,7 +117,7 @@ object Density {
     // residue classes), so the member-keyed self-join fans out C(t,2)
     // pairs per member — the quadratic `maxSegsPerMember` exists for.
     // The knob REFUSES (the X97 stance): probed at the boundary.
-    val members = spark.read.parquet(s"$sfDir/documents.parquet")
+    val members = Parquet.scan(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("m")).persist()
     members.count()
     def tagged(t: Int): DataFrame =
@@ -138,7 +140,7 @@ object Density {
     // variant's bucket fills to ~N/P per side, so candidate pairs grow
     // ~N²/P as P shrinks — `maxVariantBucket` flattens it with a logged
     // deterministic drop (a cap, not a refusal: q84's documented knob).
-    val strs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val strs = Parquet.scan(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("id")).persist()
     strs.count()
     def pooled(p: Int): DataFrame =
@@ -166,7 +168,7 @@ object Density {
     // each polygon registers (w/100+1)² grid cells, so the prefilter's
     // fan-out grows quadratically in w — `maxCellsPerPoly` REFUSES past
     // the boundary (cells are a prefilter, not a precision knob).
-    val pts = spark.read.parquet(s"$sfDir/orders.parquet")
+    val pts = Parquet.scan(spark, s"$sfDir/orders.parquet")
       .select(col("o_orderkey").cast("long").as("pid"),
         pmod(col("o_custkey") * 13L, lit(10000L)).as("x"),
         pmod(col("o_orderkey") * 7L, lit(10000L)).as("y")).persist()

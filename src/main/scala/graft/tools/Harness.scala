@@ -46,7 +46,7 @@ object Harness {
     * doesn't absorb ~4 s of one-time initialization. */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    graft.core.Parquet.scan(spark, s"$sfDir/region.parquet").count()
   }
 
   private def timed(f: => Unit): Double = {
@@ -150,12 +150,15 @@ object Harness {
     * those jobs that completed. */
   final case class Count(jobs: Int, stages: Seq[StageInfo])
 
-  /** Attributes jobs and their completed stages by job group, so jobs of
-    * an earlier call or of a concurrent caller are never counted. */
+  /** Attributes jobs and their completed stages by a job tag of each call,
+    * so jobs of an earlier call or of a concurrent caller are never
+    * counted. A tag, unlike a job group, is inherited by every thread the
+    * call starts and survives structured streaming, which runs each
+    * micro-batch under a job group of its own. */
   final class JobCounter(spark: SparkSession) extends SparkListener {
     private val sc = spark.sparkContext
-    private val groupOfJob = new ConcurrentHashMap[Int, String]()
-    private val groupOfStage = new ConcurrentHashMap[Int, String]()
+    private val tagOfJob = new ConcurrentHashMap[Int, String]()
+    private val tagOfStage = new ConcurrentHashMap[Int, String]()
     private val jobs = new ConcurrentHashMap[String, AtomicInteger]()
     private val stages = new ConcurrentHashMap[String, ConcurrentLinkedQueue[StageInfo]]()
     private val fences = new ConcurrentHashMap[String, CountDownLatch]()
@@ -163,42 +166,45 @@ object Harness {
     sc.addSparkListener(this)
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val g = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      groupOfJob.put(e.jobId, g)
-      Option(jobs.get(g)).foreach { n =>
+      val t = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .toSeq.flatMap(_.split(",")).find(_.startsWith(CountTag))
+        .getOrElse("")
+      tagOfJob.put(e.jobId, t)
+      Option(jobs.get(t)).foreach { n =>
         n.incrementAndGet()
-        e.stageIds.foreach(groupOfStage.putIfAbsent(_, g))
+        e.stageIds.foreach(tagOfStage.putIfAbsent(_, t))
       }
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      Option(groupOfStage.remove(e.stageInfo.stageId))
-        .flatMap(g => Option(stages.get(g))).foreach(_.add(e.stageInfo))
+      Option(tagOfStage.remove(e.stageInfo.stageId))
+        .flatMap(t => Option(stages.get(t))).foreach(_.add(e.stageInfo))
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      Option(groupOfJob.remove(e.jobId)).flatMap(g => Option(fences.get(g)))
+      Option(tagOfJob.remove(e.jobId)).flatMap(t => Option(fences.get(t)))
         .foreach(_.countDown())
 
-    /** Runs `f` under a job group of its own, then a one-task fence job
-      * under a second group, and waits for the fence's end: the listener
-      * bus is ordered, so every job and stage of `f` is counted by then. */
+    /** Runs `f` under a job tag of its own, then a one-task fence job
+      * under a second tag, and waits for the fence's end: the listener bus
+      * is ordered, so every job and stage `f` started is counted by then. */
     def count[A](f: => A): (A, Count) = {
-      val group = s"graft-count-${ids.incrementAndGet()}"
-      jobs.put(group, new AtomicInteger)
-      stages.put(group, new ConcurrentLinkedQueue)
-      sc.setJobGroup(group, "counted")
-      val a = try f finally sc.clearJobGroup()
-      val fence = group + "-fence"
+      val tag = s"${CountTag}${ids.incrementAndGet()}"
+      jobs.put(tag, new AtomicInteger)
+      stages.put(tag, new ConcurrentLinkedQueue)
+      sc.addJobTag(tag)
+      val a = try f finally sc.removeJobTag(tag)
+      val fence = tag + "-fence"
       val latch = new CountDownLatch(1)
       fences.put(fence, latch)
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      sc.addJobTag(fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(fence)
       require(latch.await(60, TimeUnit.SECONDS), s"fence $fence never ended")
       fences.remove(fence)
-      (a, Count(jobs.remove(group).get, stages.remove(group).asScala.toSeq))
+      (a, Count(jobs.remove(tag).get, stages.remove(tag).asScala.toSeq))
     }
 
     def close(): Unit = sc.removeSparkListener(this)
   }
+
+  private val CountTag = "graft-count-"
 }

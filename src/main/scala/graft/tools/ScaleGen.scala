@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Parquet
+
 /** Dev-only sf-multiplier for the SCALING study: writes an N× copy of a
   * fixture directory as N key-remapped DISJOINT shards, so the result is
   * "N× the data at the SAME density" — the clean scaling-measurement
@@ -52,7 +54,7 @@ object ScaleGen {
 
     def shard(name: String, keyCols: Seq[String],
         extra: DataFrame => DataFrame = identity): Unit = {
-      val base = spark.read.parquet(s"$src/$name.parquet")
+      val base = Parquet.scan(spark, s"$src/$name.parquet")
       // the per-copy key offset must exceed every key in the fixture, or
       // copies collide and the disjoint-universes invariant the scaling
       // exponents rely on silently breaks — derive it from max(key)+1
@@ -75,7 +77,7 @@ object ScaleGen {
 
     // dimensions are copied UNCHANGED (growth adds facts, not regions)
     Seq("region", "nation").foreach { n =>
-      spark.read.parquet(s"$src/$n.parquet").coalesce(1)
+      Parquet.scan(spark, s"$src/$n.parquet").coalesce(1)
         .write.mode("overwrite").parquet(s"$out/$n.parquet")
       println(s"[scalegen] $n copied")
     }

@@ -58,7 +58,24 @@ class JsonProfileSpec extends SparkSpec {
     assert(again == out)
     intercept[IllegalArgumentException](
       JsonProfile.pathProfile(df, col("j"), maxDepth = 0))
-    intercept[IllegalArgumentException](
-      JsonProfile.pathProfile(Seq.empty[String].toDF("j"), col("j")))
+    // the empty-input refusal rides the plan: the call returns, the
+    // action refuses
+    val empty = JsonProfile.pathProfile(Seq.empty[String].toDF("j"), col("j"))
+    val ex = intercept[Exception](empty.collect())
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
+    assert(msgs(ex).exists(m => m != null && m.contains("pathProfile: empty input")),
+      s"wrong error: $ex")
+  }
+
+  test("pathProfile: the call starts no Spark job") {
+    val counter = new graft.tools.Harness.JobCounter(spark)
+    try {
+      val local = Seq("""{"a": 1}""").toDF("j")
+      assert(counter.count(JsonProfile.pathProfile(local, col("j")))._2.jobs == 0)
+      val q232 = graft.SparkEntry.queries("q232_json_path_profile")
+      val sf = new java.io.File(graft.tools.Harness.sfDir).getParent + "/sf0.001"
+      assert(counter.count(q232(spark, sf))._2.jobs == 0)
+    } finally counter.close()
   }
 }

@@ -1422,4 +1422,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p2.contains("Window") && !p2.contains("Join"),
       s"proportion shape must stay one aggregation:\n$p2")
   }
+
+  test("q232: the census walk is generator steps; no lambda nested in a " +
+      "higher-order function") {
+    import org.apache.spark.sql.catalyst.expressions.{Explode, HigherOrderFunction,
+      LambdaFunction}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val opt = q("q232_json_path_profile").queryExecution.optimizedPlan
+    val nested = opt.flatMap(_.expressions).flatMap(_.collect {
+      case l: LambdaFunction
+          if l.function.find(_.isInstanceOf[HigherOrderFunction]).nonEmpty => l
+    })
+    assert(nested.isEmpty, s"nested lambdas run interpreted:\n${nested.mkString("\n")}")
+    val steps = opt.collect { case g: Generate => g.generator }
+    assert(steps.size == 3 && steps.forall(_.isInstanceOf[Explode]),
+      s"expected one explode per walk level (maxDepth 3):\n$opt")
+  }
 }

@@ -49,4 +49,39 @@ class HarnessSpec extends SparkSpec {
       assert(counter.count(())._2 == Harness.Count(0, Nil))
     } finally counter.close()
   }
+
+  test("the job counter counts the jobs of a stream's micro-batches") {
+    // each micro-batch runs under a job group of its own; its jobs still
+    // belong to the call that started the stream
+    val dir = java.nio.file.Files.createTempDirectory("graft-harness-stream").toString
+    import spark.implicits._
+    Seq(1, 2).foreach(i => Seq(i).toDF("v").write.parquet(s"$dir/in/f$i"))
+    java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/in")).forEach { d =>
+      val f = java.nio.file.Files.list(d).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get
+      java.nio.file.Files.move(f, java.nio.file.Paths.get(s"$dir/in/${d.getFileName}.parquet"))
+    }
+    val sc = spark.sparkContext
+    val counter = new Harness.JobCounter(spark)
+    try {
+      val (batches, c) = counter.count {
+        val seen = new java.util.concurrent.atomic.AtomicInteger
+        spark.readStream.schema("v INT").option("maxFilesPerTrigger", "1")
+          .parquet(s"$dir/in")
+          .writeStream
+          .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            seen.incrementAndGet()
+            sc.parallelize(1 to 7, 7).count(): Unit
+          }
+          .option("checkpointLocation", s"$dir/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+        seen.get
+      }
+      assert(batches == 2)
+      assert(c.stages.count(_.numTasks == 7) == 2, s"${c.jobs} jobs, stages " +
+        c.stages.map(_.numTasks).mkString(","))
+      assert(c.jobs >= 2)
+    } finally counter.close()
+  }
 }

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Parquet, Table}
+import graft.core.Scratch.workDir
 import graft.dedup.Dedup
 import graft.functions.Aggregators
 import graft.multimodal.Multimodal
@@ -1444,7 +1445,7 @@ object LlmOps {
     Q("q128_llm_pipeline_e2e",
       (s, dir) => {
         import graft.pipeline.{Pipeline, Stage}
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q128").toString
+        val ckpt = workDir("q128").toString
         val pipe = new Pipeline(Seq(
           Stage("canon", Nil, _ => t(s, dir, "documents")
             .select(col("doc_id"), col("text"),
@@ -1459,9 +1460,7 @@ object LlmOps {
             TextStats.selectUnderTokenBudgetByCount(deps("scored"), "doc_id",
                 col("n_bpe"), col("q"), budget = 20000L)
               .orderBy("doc_id"))))
-        val out = pipe.run(s, Some(ckpt), materialize = Set("dedup"))("budget")
-        Staging.deleteAtExit(ckpt)
-        out
+        pipe.run(s, Some(ckpt), materialize = Set("dedup"))("budget")
       },
       Some(s"""WITH canon AS (
              |  SELECT doc_id, text, ${dCanonOf("text")} AS canon
@@ -2149,7 +2148,7 @@ object LlmOps {
     Q("q152_curation_v2_e2e",
       (s, dir) => {
         import graft.pipeline.{Pipeline, Stage}
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q152").toString
+        val ckpt = workDir("q152").toString
         val pipe = new Pipeline(Seq(
           Stage("canon", Nil, _ => spread(s, t(s, dir, "documents"))
             .select(col("doc_id"), col("lang"), col("text"),
@@ -2180,9 +2179,7 @@ object LlmOps {
             TextStats.selectUnderTokenBudgetByCount(deps("scored"), "doc_id",
                 col("n_bpe"), col("q"), budget = 15000L)
               .orderBy("doc_id"))))
-        val out = pipe.run(s, Some(ckpt), materialize = Set("gate"))("budget")
-        Staging.deleteAtExit(ckpt)
-        out
+        pipe.run(s, Some(ckpt), materialize = Set("gate"))("budget")
       },
       Some {
         val profiles = TextStats.defaultProfiles.sortBy(_._1)
@@ -2316,14 +2313,13 @@ object LlmOps {
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
         val emb = t(s, dir, "embeddings")
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q155").toString
+        val tmp = workDir("q155").toString
         Quantize.pqEncode(emb, col("embedding"), pqCodebooks)
           .withColumn("cell",
             Similarity.ivfCellAssign(col("embedding"), ivfCentroids))
           .select(col("vec_id"), col("pq_code"), col("cell"))
           .write.partitionBy("cell").parquet(s"$tmp/index")
         val index = Parquet.scan(s, s"$tmp/index")
-        Staging.deleteAtExit(tmp)
         val qv = emb.filter(col("vec_id") === 7).select(col("embedding"))
           .head().getSeq[Float](0).map(_.toDouble)
         val probed = Similarity.ivfProbeCells(qv, ivfCentroids, nProbe = 2)
@@ -2490,9 +2486,7 @@ object LlmOps {
     Q("q158_streaming_dedup_lifecycle",
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val work = java.nio.file.Files.createTempDirectory("graft-q158")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val work = workDir("q158")
         val state = graft.core.Table(s, work.toString, "corpus")
         val bloomT = graft.core.Table(s, work.toString, "bloom")
         def bloomDf(bytes: Array[Byte]): DataFrame = {
@@ -2513,14 +2507,6 @@ object LlmOps {
             .withColumn("batch", lit(0).cast("int")))
         bloomT.writeVersionIfAbsent(0L, bloomDf(Dedup.bloomKeyState(
           survivorsOf(0L).drop("batch"), Seq("text"), expectedItems = 1000000)))
-        // stage one file per ingest batch; mtimes 60 s apart fix arrival order
-        Staging.stageFile(work, inDir, "b1",
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0), 120)
-        Staging.stageFile(work, inDir, "b2",
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), 60)
-        // 8 state partitions at fixture scale (the runMicroBatch rationale)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           val id = batchId + 1
           state.ledgerAppendIfAbsent(id,
@@ -2532,20 +2518,10 @@ object LlmOps {
             Dedup.bloomKeyState(survivorsOf(id).drop("batch"), Seq("text"),
               expectedItems = 1000000))))
         }
-        val query = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        // restore only AFTER the batches ran: foreachBatch bodies are plain
-        // batch jobs that read shuffle.partitions at EXECUTION time (unlike
-        // a streaming aggregation, whose state partitioning pins at start —
-        // the runMicroBatch case), so an early restore makes the override
-        // dead code
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        Staging.deleteAtExit(work.toString)
+        // one file per ingest batch
+        Staging.fileStream(work,
+          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0)).drain(onBatch)
         state.readLedger.filter(col("batch") >= 1)
           .select(col("doc_id"), col("batch"), col("source"))
           .orderBy("doc_id", "batch")
@@ -2612,10 +2588,9 @@ object LlmOps {
     // verbatim with q204's restart replay.
     Q("q161_streaming_near_dup_lifecycle",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q161")
+        val work = workDir("q161")
         val (sets, _, runOnce) = nearDupLedgerSetup(s, dir, work)
         runOnce(work.resolve("cp").toString)
-        Staging.deleteAtExit(work.toString)
         sets.readLedger.filter(col("batch") >= 1)
           .select(col("doc_id"), col("batch"),
             size(col("sh")).cast("long").as("n_grams"))
@@ -2837,7 +2812,7 @@ object LlmOps {
     // is content-IDENTITY — the rewritten table is row-for-row the input.
     Q("q169_compaction",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q169")
+        val work = workDir("q169")
         val src = work.resolve("src").toString
         val dst = work.resolve("dst").toString
         t(s, dir, "documents").repartition(24).write.parquet(src)
@@ -2855,7 +2830,6 @@ object LlmOps {
           targetBytes = math.max(1L, stagedBytes / 2))
         require(stats.filesAfter < stats.filesBefore,
           s"compaction did not reduce file count: $stats")
-        Staging.deleteAtExit(work.toString)
         Parquet.scan(s, dst)
           .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
           .orderBy("doc_id")
@@ -3454,73 +3428,20 @@ object LlmOps {
     // batch replay.
     Q("q187_streaming_cdc_lifecycle",
       (s, dir) => {
-        val base = t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val work = java.nio.file.Files.createTempDirectory("graft-q187")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val (base, log1, log2) = cdcFixture(s, dir)
+        val work = workDir("q187")
         val state = graft.core.Table(s, work.toString, "cdc_state")
         state.writeVersion(base)
-        val nulls = Seq(lit(null).cast("bigint").as("o_custkey"),
-          lit(null).cast("double").as("o_totalprice"))
-        val log1 = base.filter(col("o_orderkey") % 10 === 1)
-          .select(col("o_orderkey"), col("o_custkey"),
-            (col("o_totalprice") * 2).as("o_totalprice"),
-            lit(1L).as("seq"), lit("U").as("op"))
-          .unionByName(base.filter(col("o_orderkey") % 10 === 2)
-            .select(col("o_orderkey") +: nulls :+
-              lit(1L).as("seq") :+ lit("D").as("op"): _*))
-        val log2 = base.filter(col("o_orderkey") % 10 === 3)
-          .select(col("o_orderkey"), col("o_custkey"),
-            (col("o_totalprice") * 3).as("o_totalprice"),
-            lit(2L).as("seq"), lit("U").as("op"))
-          .unionByName(base.filter(col("o_orderkey") % 10 === 1)
-            .select(col("o_orderkey") +: nulls :+
-              lit(2L).as("seq") :+ lit("D").as("op"): _*))
-          .unionByName(base.filter(col("o_orderkey") % 10 === 4)
-            .select((col("o_orderkey") + 200000000L).as("o_orderkey"),
-              col("o_custkey"), col("o_totalprice"),
-              lit(2L).as("seq"), lit("I").as("op")))
-        Staging.stageFile(work, inDir, "b1", log1, 120)
-        Staging.stageFile(work, inDir, "b2", log2, 60)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, _) => {
           state.writeVersion(Ops.cdcApply(state.readLatest, batch,
             Seq("o_orderkey"), "seq", "op"))
         }
-        val query = s.readStream.schema(log1.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        // restore only AFTER the batches ran: foreachBatch bodies are plain
-        // batch jobs that read shuffle.partitions at EXECUTION time (unlike
-        // a streaming aggregation, whose state partitioning pins at start —
-        // the runMicroBatch case), so an early restore makes the override
-        // dead code
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
+        Staging.fileStream(work, log1, log2).drain(onBatch)
         require(state.versions == Seq(0L, 1L, 2L),
           s"expected three committed versions, got ${state.versions}")
-        Staging.deleteAtExit(work.toString)
         state.readLatest.orderBy("o_orderkey")
       },
-      Some("""WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-             |s1 AS (SELECT o_orderkey, o_custkey,
-             |         CASE WHEN o_orderkey % 10 = 1 THEN o_totalprice * 2
-             |              ELSE o_totalprice END AS o_totalprice
-             |       FROM base WHERE o_orderkey % 10 <> 2),
-             |s2 AS (SELECT o_orderkey, o_custkey,
-             |         CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice * 3
-             |              ELSE o_totalprice END AS o_totalprice
-             |       FROM s1 WHERE o_orderkey % 10 <> 1
-             |       UNION ALL
-             |       SELECT o_orderkey + 200000000, o_custkey, o_totalprice
-             |       FROM base WHERE o_orderkey % 10 = 4)
-             |SELECT o_orderkey, o_custkey, o_totalprice FROM s2
-             |ORDER BY o_orderkey""".stripMargin)),
+      Some(cdcLifecycleOracleSql)),
 
     // ------------------------------------------------------------------
     // q188 — declared-vs-detected language agreement (X4's label-noise
@@ -3625,7 +3546,7 @@ object LlmOps {
     // environment-blocked; the archive plumbing is now driver-checked.
     Q("q190_unzip_csv_load",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q190")
+        val work = workDir("q190")
         val src = t(s, dir, "nation")
         val csvDir = work.resolve("csv").toString
         src.coalesce(1).write.option("header", "true").csv(csvDir)
@@ -3646,7 +3567,6 @@ object LlmOps {
         val dest = Table(s, work.toString, "nation_roundtrip")
         graft.ingest.Ingest.csvLoad(s,
           unpacked.resolve("data/nation.csv").toString, dest, src.schema)
-        Staging.deleteAtExit(work.toString)
         dest.read.orderBy("n_nationkey")
       },
       Some("SELECT * FROM nation ORDER BY n_nationkey"))
@@ -3757,7 +3677,7 @@ object LlmOps {
     // semantics.
     Q("q194_version_time_travel",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q194")
+        val work = workDir("q194")
         val state = graft.core.Table(s, work.toString, "cust_versions")
         val base = t(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
         val v0 = state.writeVersion(base)
@@ -3768,12 +3688,10 @@ object LlmOps {
           s"expected versions 0,1 — got ${state.versions}")
         // nothing vacuumable at keepLast=2; history intact for the read below
         require(state.vacuum(keepLast = 2).isEmpty, "vacuum dropped live history")
-        val out = state.readVersion(v0).withColumnRenamed("c_acctbal", "bal_v0")
+        state.readVersion(v0).withColumnRenamed("c_acctbal", "bal_v0")
           .join(state.readLatest.withColumnRenamed("c_acctbal", "bal_v1"),
             Seq("c_custkey"))
           .orderBy("c_custkey")
-        Staging.deleteAtExit(work.toString)
-        out
       },
       Some("""SELECT c_custkey, c_acctbal AS bal_v0,
              |  CASE WHEN c_custkey % 7 = 0 THEN c_acctbal * 2
@@ -3802,7 +3720,7 @@ object LlmOps {
     Q("q195_ivf_pq_incremental",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q195").toString
+        val tmp = workDir("q195").toString
         val idx = s"$tmp/index"
         graft.sim.IvfPqIndex.build(emb.filter(col("vec_id") % 2 === 0),
           "vec_id", "embedding", pqCodebooks, ivfCentroids, idx)
@@ -3815,7 +3733,6 @@ object LlmOps {
         val repacked = graft.sim.IvfPqIndex.maintain(s, idx,
           maxFilesPerCell = 1, targetBytes = 64L << 20)
         require(repacked.nonEmpty, "maintenance found nothing to repack")
-        Staging.deleteAtExit(tmp)
         val qv = emb.filter(col("vec_id") === 7).select(col("embedding"))
           .head().getSeq[Float](0).map(_.toDouble)
         graft.sim.IvfPqIndex.search(s, idx, emb, "vec_id", "embedding",
@@ -3952,37 +3869,10 @@ object LlmOps {
     // q187's oracle — byte-identical to the single-run lifecycle.
     Q("q197_streaming_restart_idempotence",
       (s, dir) => {
-        val base = t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val work = java.nio.file.Files.createTempDirectory("graft-q197")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val (base, log1, log2) = cdcFixture(s, dir)
+        val work = workDir("q197")
         val state = graft.core.Table(s, work.toString, "cdc_state")
         state.writeVersion(base)
-        val nulls = Seq(lit(null).cast("bigint").as("o_custkey"),
-          lit(null).cast("double").as("o_totalprice"))
-        val log1 = base.filter(col("o_orderkey") % 10 === 1)
-          .select(col("o_orderkey"), col("o_custkey"),
-            (col("o_totalprice") * 2).as("o_totalprice"),
-            lit(1L).as("seq"), lit("U").as("op"))
-          .unionByName(base.filter(col("o_orderkey") % 10 === 2)
-            .select(col("o_orderkey") +: nulls :+
-              lit(1L).as("seq") :+ lit("D").as("op"): _*))
-        val log2 = base.filter(col("o_orderkey") % 10 === 3)
-          .select(col("o_orderkey"), col("o_custkey"),
-            (col("o_totalprice") * 3).as("o_totalprice"),
-            lit(2L).as("seq"), lit("U").as("op"))
-          .unionByName(base.filter(col("o_orderkey") % 10 === 1)
-            .select(col("o_orderkey") +: nulls :+
-              lit(2L).as("seq") :+ lit("D").as("op"): _*))
-          .unionByName(base.filter(col("o_orderkey") % 10 === 4)
-            .select((col("o_orderkey") + 200000000L).as("o_orderkey"),
-              col("o_custkey"), col("o_totalprice"),
-              lit(2L).as("seq"), lit("I").as("op")))
-        Staging.stageFile(work, inDir, "b1", log1, 120)
-        Staging.stageFile(work, inDir, "b2", log2, 60)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         // each apply reads its EXACT input version (batchId), not
         // readLatest — deterministic under any replay interleaving
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
@@ -3990,40 +3880,18 @@ object LlmOps {
             Ops.cdcApply(state.readVersion(batchId), batch,
               Seq("o_orderkey"), "seq", "op"))
         }
-        def runOnce(cp: String): Unit = {
-          val query = s.readStream.schema(log1.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-            .writeStream.option("checkpointLocation", cp)
-            .foreachBatch(onBatch).start()
-          try query.processAllAvailable() finally query.stop()
-        }
-        try {
-          runOnce(work.resolve("cp1").toString)
-          require(state.versions == Seq(0L, 1L, 2L),
-            s"first run should commit versions 0,1,2 — got ${state.versions}")
-          // the "restart": a fresh checkpoint replays batchIds 0 and 1
-          // against the already-evolved state
-          runOnce(work.resolve("cp2").toString)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        val stream = Staging.fileStream(work, log1, log2)
+        stream.drain(onBatch, Some(work.resolve("cp1").toString))
+        require(state.versions == Seq(0L, 1L, 2L),
+          s"first run should commit versions 0,1,2 — got ${state.versions}")
+        // the "restart": a fresh checkpoint replays batchIds 0 and 1
+        // against the already-evolved state
+        stream.drain(onBatch, Some(work.resolve("cp2").toString))
         require(state.versions == Seq(0L, 1L, 2L),
           s"replay must be a no-op — got ${state.versions}")
-        Staging.deleteAtExit(work.toString)
         state.readLatest.orderBy("o_orderkey")
       },
-      Some("""WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
-             |s1 AS (SELECT o_orderkey, o_custkey,
-             |         CASE WHEN o_orderkey % 10 = 1 THEN o_totalprice * 2
-             |              ELSE o_totalprice END AS o_totalprice
-             |       FROM base WHERE o_orderkey % 10 <> 2),
-             |s2 AS (SELECT o_orderkey, o_custkey,
-             |         CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice * 3
-             |              ELSE o_totalprice END AS o_totalprice
-             |       FROM s1 WHERE o_orderkey % 10 <> 1
-             |       UNION ALL
-             |       SELECT o_orderkey + 200000000, o_custkey, o_totalprice
-             |       FROM base WHERE o_orderkey % 10 = 4)
-             |SELECT o_orderkey, o_custkey, o_totalprice FROM s2
-             |ORDER BY o_orderkey""".stripMargin)),
+      Some(cdcLifecycleOracleSql)),
 
     // ------------------------------------------------------------------
     // q198 — URL canonicalization (X61): the crawl-dedup opener. Fixture
@@ -4221,7 +4089,7 @@ object LlmOps {
     // byte-identical to the single-run lifecycle.
     Q("q204_near_dup_restart_idempotence",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q204")
+        val work = workDir("q204")
         val (sets, bands, runOnce) = nearDupLedgerSetup(s, dir, work)
         runOnce(work.resolve("cp1").toString)
         require(sets.ledgerMax.contains(2L) && bands.ledgerMax.contains(2L),
@@ -4235,7 +4103,6 @@ object LlmOps {
             s"sets=${sets.ledgerMax}, bands=${bands.ledgerMax}")
         require(sets.readLedger.count() == firstRows,
           "replay double-appended near-dup state")
-        Staging.deleteAtExit(work.toString)
         sets.readLedger.filter(col("batch") >= 1)
           .select(col("doc_id"), col("batch"),
             size(col("sh")).cast("long").as("n_grams"))
@@ -4261,8 +4128,7 @@ object LlmOps {
         import s.implicits._
         val base = t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
-        val work = java.nio.file.Files.createTempDirectory("graft-q205")
-        Staging.deleteAtExit(work.toString)
+        val work = workDir("q205")
         val tbl = graft.core.Table(s, work.toString, "snap")
         tbl.writeVersion(base)
         val t0 = tbl.versionMeta(0L).committedAtMs
@@ -4334,11 +4200,10 @@ object LlmOps {
     Q("q206_ann_batched_retrieval",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q206").toString
+        val tmp = workDir("q206").toString
         val idx = s"$tmp/index"
         graft.sim.IvfPqIndex.build(emb, "vec_id", "embedding",
           pqCodebooks, ivfCentroids, idx)
-        Staging.deleteAtExit(tmp)
         val probes = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("probe_id"), col("embedding"))
         graft.sim.IvfPqIndex.searchAll(s, idx, emb, "vec_id", "embedding",
@@ -4594,7 +4459,7 @@ object LlmOps {
     // actually scanned only the survivors.
     Q("q211_zone_map_skipping",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q211")
+        val work = workDir("q211")
         val data = work.resolve("orders_zm").toString
         val man = work.resolve("orders_zm_manifest").toString
         ZoneMaps.writeRangeSharded(
@@ -4607,7 +4472,6 @@ object LlmOps {
           s"zone maps pruned nothing: $stats")
         require(pruned.inputFiles.length == stats.filesKept,
           s"scan read ${pruned.inputFiles.length} files, kept ${stats.filesKept}")
-        Staging.deleteAtExit(work.toString)
         pruned.agg(
           lit(stats.filesTotal).as("files_total"),
           lit(stats.filesKept).as("files_kept"),
@@ -4671,8 +4535,7 @@ object LlmOps {
     // hash pins scan ≡ index ≡ relational replay simultaneously.
     Q("q217_inverted_index_bm25",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q217").toString
-        Staging.deleteAtExit(tmp)
+        val tmp = workDir("q217").toString
         val terms = Seq("spark", "hash", "join")
         InvertedIndex.build(t(s, dir, "documents"), "doc_id", "text",
           s"$tmp/idx")
@@ -4723,8 +4586,7 @@ object LlmOps {
     // plus every lifecycle assertion along the way.
     Q("q218_segmented_index_lifecycle",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q218").toString
-        Staging.deleteAtExit(tmp)
+        val tmp = workDir("q218").toString
         val docs = t(s, dir, "documents")
         val terms = Seq("spark", "hash", "join")
         def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === i)
@@ -4878,8 +4740,7 @@ object LlmOps {
     // direct aggregation — one hash pins partials ≡ merge ≡ fold ≡ scan.
     Q("q221_agg_view_lifecycle",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q221").toString
-        Staging.deleteAtExit(tmp)
+        val tmp = workDir("q221").toString
         val li = t(s, dir, "lineitem")
         val gc = Seq("l_returnflag", "l_linestatus")
         val ms = Seq(graft.ops.AggView.Measure("l_quantity", 2),
@@ -5067,9 +4928,7 @@ object LlmOps {
     Q("q225_streaming_agg_view",
       (s, dir) => {
         val li = t(s, dir, "lineitem")
-        val work = java.nio.file.Files.createTempDirectory("graft-q225")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val work = workDir("q225")
         val gc = Seq("l_returnflag")
         val ms = Seq(graft.ops.AggView.Measure("l_discount", 2),
           graft.ops.AggView.Measure("l_tax", 2))
@@ -5079,10 +4938,6 @@ object LlmOps {
           gc, ms), "day-0 segment did not commit")
         val feed = (m: Int) =>
           li.filter(pmod(col("l_orderkey"), lit(4)) === m).select(cols: _*)
-        Staging.stageFile(work, inDir, "b1", feed(1), 120)
-        Staging.stageFile(work, inDir, "b2", feed(3), 60)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           graft.ops.AggView.commitSegment(s, work.toString, "av",
             batchId + 1, batch, gc, ms)
@@ -5091,15 +4946,7 @@ object LlmOps {
           graft.ops.AggView.compact(s, work.toString, "av", gc, ms,
             maxDeltas = 1)
         }
-        val query = s.readStream.schema(feed(1).schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        Staging.deleteAtExit(work.toString)
+        Staging.fileStream(work, feed(1), feed(3)).drain(onBatch)
         require(graft.core.Table(s, work.toString, "av").ledgerMax
           == Some(2L), "lifecycle should commit segments 0,1,2")
         val view = graft.ops.AggView.read(s, work.toString, "av", gc, ms)
@@ -5410,7 +5257,7 @@ object LlmOps {
     // the union'd interval intersection, and the surviving rows.
     Q("q214_zone_map_incremental",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q214")
+        val work = workDir("q214")
         val data = work.resolve("orders_zmi").toString
         val man = work.resolve("manifest").toString
         val manFull = work.resolve("manifest_full").toString
@@ -5421,7 +5268,6 @@ object LlmOps {
         ZoneMaps.writeRangeSharded(orders.filter(col("o_orderkey") % 2 === 1),
           data, Seq("o_totalprice", "o_orderkey"), rowsPerFile = 1000,
           shardBase = 1000, append = true)
-        Staging.deleteAtExit(work.toString)
         val rng = Seq(ZoneMaps.Range("o_totalprice", 50000.0, 100000.0))
         val refused =
           try { ZoneMaps.prunedRead(s, data, man, rng); false }
@@ -5481,8 +5327,7 @@ object LlmOps {
     Q("q215_serving_rerank_fusion",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q215").toString
-        Staging.deleteAtExit(tmp)
+        val tmp = workDir("q215").toString
         val idx = s"$tmp/index"
         val pooled = emb.filter(col("vec_id") % 5 === 0)
           .select(expr("vec_id DIV 5").as("doc_id"), col("embedding"))
@@ -5960,35 +5805,21 @@ object LlmOps {
           .filter(col("ts").isNotNull && col("event_type").isNotNull)
           .select(col("event_type"),
             expr("unix_micros(ts) DIV 86400000000").as("day"))
-        val work = java.nio.file.Files.createTempDirectory("graft-q235")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val work = workDir("q235")
         val gc = Seq("event_type", "day")
         val ms = Seq.empty[graft.ops.AggView.Measure]
         require(graft.ops.AggView.commitSegment(s, work.toString, "dm", 0L,
           daily.filter(col("day") < 19740), gc, ms),
           "day-0 segment did not commit")
-        Staging.stageFile(work, inDir, "b1",
-          daily.filter(col("day") >= 19740 && col("day") < 19750), 120)
-        Staging.stageFile(work, inDir, "b2",
-          daily.filter(col("day") >= 19750), 60)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           graft.ops.AggView.commitSegment(s, work.toString, "dm",
             batchId + 1, batch, gc, ms)
           graft.ops.AggView.compact(s, work.toString, "dm", gc, ms,
             maxDeltas = 1)
         }
-        val query = s.readStream.schema(daily.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        Staging.deleteAtExit(work.toString)
+        Staging.fileStream(work,
+          daily.filter(col("day") >= 19740 && col("day") < 19750),
+          daily.filter(col("day") >= 19750)).drain(onBatch)
         val view = graft.ops.AggView.read(s, work.toString, "dm", gc, ms)
         val direct = daily.groupBy("event_type", "day")
           .agg(count(lit(1)).as("cnt"))
@@ -6659,18 +6490,10 @@ object LlmOps {
         val sk = Sketches.bloomSketch(evalSet, canon,
           bits = 8192, hashes = 5, seed = "s249")
         val skRows = sk.persist()
-        val work = java.nio.file.Files.createTempDirectory("graft-q249")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val work = workDir("q249")
         val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
           .select("doc_id", "text")
-        Staging.stageFile(work, inDir, "b1",
-          train.filter(col("doc_id") < 250), 120)
-        Staging.stageFile(work, inDir, "b2",
-          train.filter(col("doc_id") >= 250), 60)
         val kept = graft.core.Table(s, work.toString, "kept")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           kept.ledgerAppendIfAbsent(batchId, {
             val keys = batch.select(col("doc_id"),
@@ -6682,16 +6505,9 @@ object LlmOps {
               .select(col("doc_id"))
           })
         }
-        val query = s.readStream.schema(train.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          skRows.unpersist()
-        }
-        Staging.deleteAtExit(work.toString)
+        try Staging.fileStream(work, train.filter(col("doc_id") < 250),
+            train.filter(col("doc_id") >= 250)).drain(onBatch)
+        finally skRows.unpersist()
         require(kept.ledgerMax == Some(1L),
           "lifecycle should commit survivor deltas 0 and 1")
         kept.readLedger.select("doc_id").orderBy("doc_id")
@@ -6843,8 +6659,7 @@ object LlmOps {
     // whole construction relationally.
     Q("q253_index_tombstones",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q253").toString
-        Staging.deleteAtExit(tmp)
+        val tmp = workDir("q253").toString
         val docs = t(s, dir, "documents")
         val terms = Seq("spark", "hash", "join")
         def batch(i: Int) = docs.filter(pmod(col("doc_id"), lit(2)) === i)
@@ -7039,37 +6854,22 @@ object LlmOps {
         val maxUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
         val hb = maxUs / 3600000000L
         val hcol = expr("unix_micros(ts) DIV 3600000000")
-        val work = java.nio.file.Files.createTempDirectory("graft-q256")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        // arrival order: everything before the late hour, one more hour
-        // (advances the watermark to just under the late window), THEN
-        // the late hour, then the tail that flushes it past the watermark
-        Staging.stageFile(work, inDir, "b1",
-          ev.filter(hcol < hb - 4 && hcol =!= (hb - 5)), 240)
-        Staging.stageFile(work, inDir, "b2", ev.filter(hcol === hb - 4), 180)
-        Staging.stageFile(work, inDir, "b3", ev.filter(hcol === hb - 5), 120)
-        Staging.stageFile(work, inDir, "b4", ev.filter(hcol > hb - 4), 60)
+        val work = workDir("q256")
         val meas = Seq(graft.ops.AggView.Measure("cents", 0))
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           graft.ops.AggView.commitPartials(s, work.toString, "wview",
             batchId, batch)
           ()
         }
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        val agg = graft.streaming.Streams.windowedAggPartials(stream, "ts",
-          lateness = "2 hours", window_ = "1 hour", Seq("event_type"), meas)
-        val query = agg.writeStream.outputMode("append")
-          .foreachBatch(onBatch).start()
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        Staging.deleteAtExit(work.toString)
+        // arrival order: everything before the late hour, one more hour
+        // (advances the watermark to just under the late window), THEN
+        // the late hour, then the tail that flushes it past the watermark
+        Staging.fileStream(work, ev.filter(hcol < hb - 4 && hcol =!= (hb - 5)),
+            ev.filter(hcol === hb - 4), ev.filter(hcol === hb - 5),
+            ev.filter(hcol > hb - 4))
+          .drain(onBatch, shape = graft.streaming.Streams.windowedAggPartials(
+            _, "ts", lateness = "2 hours", window_ = "1 hour",
+            Seq("event_type"), meas))
         val view = graft.ops.AggView.read(s, work.toString, "wview",
           Seq("window_start", "event_type"), meas)
         // the Done pin: the LATE hour landed whole in its own bucket
@@ -7685,9 +7485,7 @@ object LlmOps {
         val gc = Seq("event_type")
         val ms = Seq(AggView.Measure("x", 0), AggView.Measure("y", 0),
           AggView.Measure("xy", 0), AggView.Measure("xx", 0))
-        val work = java.nio.file.Files.createTempDirectory("graft-q270")
-          .toString
-        Staging.deleteAtExit(work)
+        val work = workDir("q270").toString
         def batch(i: Int) = daily.filter(
           if (i == 0) col("x") < 19735L
           else if (i == 1) col("x") >= 19735L && col("x") < 19745L
@@ -7876,30 +7674,16 @@ object LlmOps {
           .filter(col("user_id").isNotNull && col("ts").isNotNull)
           .select(col("user_id"),
             expr("unix_micros(ts) DIV 86400000000").as("day"))
-        val work = java.nio.file.Files.createTempDirectory("graft-q274")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
-        Staging.stageFile(work, inDir, "b1", ev.filter(col("day") < 19735L), 180)
-        Staging.stageFile(work, inDir, "b2",
-          ev.filter(col("day") >= 19735L && col("day") < 19745L), 120)
-        Staging.stageFile(work, inDir, "b3", ev.filter(col("day") >= 19745L), 60)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
+        val work = workDir("q274")
         val tbl = graft.core.Table(s, work.toString, "wau")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           tbl.ledgerAppendIfAbsent(batchId, batch.groupBy("day")
             .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk")))
           ()
         }
-        val query = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        Staging.deleteAtExit(work.toString)
+        Staging.fileStream(work, ev.filter(col("day") < 19735L),
+          ev.filter(col("day") >= 19735L && col("day") < 19745L),
+          ev.filter(col("day") >= 19745L)).drain(onBatch)
         // restart idempotence: a replayed batch id no-ops frame-free
         require(!tbl.ledgerAppendIfAbsent(0L,
           sys.error("replayed batch rebuilt its sketch frame")),
@@ -8352,8 +8136,7 @@ object LlmOps {
     // rows relationally (the q238 contract, lifted to the file level).
     Q("q281_bloom_skip",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q281")
-        Staging.deleteAtExit(work.toString)
+        val work = workDir("q281")
         val dataDir = s"$work/data"
         val manDir = s"$work/man"
         t(s, dir, "lineitem")
@@ -10385,8 +10168,7 @@ object LlmOps {
     // degeneracy pin, so the same SQL must hash-match.
     Q("q310_incremental_rank_test",
       (s, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft-q310")
-        Staging.deleteAtExit(work.toString)
+        val work = workDir("q310")
         val n = t(s, dir, "nation")
           .select(col("n_nationkey").as("c_nationkey"), col("n_name"))
         val joined = t(s, dir, "customer").join(broadcast(n), "c_nationkey")
@@ -12180,6 +11962,50 @@ object LlmOps {
       |SELECT doc_id, 2 AS batch, source FROM s2
       |ORDER BY doc_id, batch""".stripMargin
 
+  /** q187/q197's change-log fixture: the projected orders base and two
+    * binlog batches. Batch 1 updates keys ≡ 1 and deletes keys ≡ 2 (mod
+    * 10); batch 2 updates keys ≡ 3, deletes the keys batch 1 updated and
+    * inserts shifted copies of keys ≡ 4, so the end state proves the
+    * applies chained. */
+  private def cdcFixture(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val base = t(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+    val nulls = Seq(lit(null).cast("bigint").as("o_custkey"),
+      lit(null).cast("double").as("o_totalprice"))
+    def upserts(m: Int, seq: Long, op: String, key: Column, price: Column) =
+      base.filter(col("o_orderkey") % 10 === m).select(key.as("o_orderkey"),
+        col("o_custkey"), price.as("o_totalprice"), lit(seq).as("seq"),
+        lit(op).as("op"))
+    def deletes(m: Int, seq: Long) = base.filter(col("o_orderkey") % 10 === m)
+      .select(col("o_orderkey") +: nulls :+ lit(seq).as("seq") :+
+        lit("D").as("op"): _*)
+    val log1 = upserts(1, 1L, "U", col("o_orderkey"), col("o_totalprice") * 2)
+      .unionByName(deletes(2, 1L))
+    val log2 = upserts(3, 2L, "U", col("o_orderkey"), col("o_totalprice") * 3)
+      .unionByName(deletes(1, 2L))
+      .unionByName(upserts(4, 2L, "I", col("o_orderkey") + 200000000L,
+        col("o_totalprice")))
+    (base, log1, log2)
+  }
+
+  /** q187/q197's oracle: both applies replayed relationally. */
+  private lazy val cdcLifecycleOracleSql: String =
+    """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+      |s1 AS (SELECT o_orderkey, o_custkey,
+      |         CASE WHEN o_orderkey % 10 = 1 THEN o_totalprice * 2
+      |              ELSE o_totalprice END AS o_totalprice
+      |       FROM base WHERE o_orderkey % 10 <> 2),
+      |s2 AS (SELECT o_orderkey, o_custkey,
+      |         CASE WHEN o_orderkey % 10 = 3 THEN o_totalprice * 3
+      |              ELSE o_totalprice END AS o_totalprice
+      |       FROM s1 WHERE o_orderkey % 10 <> 1
+      |       UNION ALL
+      |       SELECT o_orderkey + 200000000, o_custkey, o_totalprice
+      |       FROM base WHERE o_orderkey % 10 = 4)
+      |SELECT o_orderkey, o_custkey, o_totalprice FROM s2
+      |ORDER BY o_orderkey""".stripMargin
+
   /** q161/q204's shared lifecycle: the near-dup streaming loop with both
     * state tables on the X59 ledger. Seeds ledger id 0 (history shingle
     * sets with batch=0; their band keys), stages the two ingest batches,
@@ -12199,8 +12025,6 @@ object LlmOps {
     val docs = t(s, dir, "documents")
     val sets = graft.core.Table(s, work.toString, "sets")
     val bands = graft.core.Table(s, work.toString, "bands")
-    val inDir = work.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
     def survivorsOf(id: Long): DataFrame =
       scala.util.Try(sets.readLedgerDelta(id)).getOrElse(
         sets.readLedger.filter(col("batch") === id))
@@ -12209,10 +12033,9 @@ object LlmOps {
         .withColumn("batch", lit(0).cast("int")))
     bands.ledgerAppendIfAbsent(0L,
       Dedup.nearDupBandKeys(survivorsOf(0L).drop("batch"), "doc_id"))
-    Staging.stageFile(work, inDir, "b1",
-      docs.filter(col("doc_id") >= 300 && col("doc_id") < 450), 120)
-    Staging.stageFile(work, inDir, "b2",
-      docs.filter(col("doc_id") >= 450), 60)
+    val stream = Staging.fileStream(work,
+      docs.filter(col("doc_id") >= 300 && col("doc_id") < 450),
+      docs.filter(col("doc_id") >= 450))
     val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
       val id = batchId + 1
       // maintenance at the READ edge: fold fragmented deltas into one
@@ -12238,23 +12061,7 @@ object LlmOps {
       bands.ledgerAppendIfAbsent(id,
         Dedup.nearDupBandKeys(survivorsOf(id).drop("batch"), "doc_id"))
     }
-    val runOnce: String => Unit = cp => {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val query = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .writeStream.option("checkpointLocation", cp)
-        .foreachBatch(onBatch).start()
-      // restore only AFTER the batches ran: foreachBatch bodies are plain
-      // batch jobs that read shuffle.partitions at EXECUTION time, so an
-      // early restore makes the override dead code
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-    }
-    (sets, bands, runOnce)
+    (sets, bands, (cp: String) => stream.drain(onBatch, Some(cp)))
   }
 
   /** The ONE oracle for KMV overlap (q148 whole-corpus, q150 merged

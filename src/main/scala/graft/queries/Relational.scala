@@ -7,54 +7,13 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.core.{Parquet, Table}
+import graft.core.Scratch.workDir
 import graft.ops.Ops._
 
 /** Case-class row for q125's typed-Dataset round-trip (S12) — top-level so
   * the implicit product encoder can reflect it. Field names/types mirror the
   * nation parquet schema exactly. */
 final case class NationRow(n_nationkey: Int, n_name: String, n_regionkey: Int)
-
-/** Query-local staging helpers for the S-layer round-trip queries. */
-private[queries] object Staging {
-  /** Register every path under `dir` for JVM-exit deletion — the q59
-    * cleanup convention (deleteOnExit runs in reverse registration order,
-    * so pre-order walk ⇒ files delete before their dirs). Call AFTER all
-    * staging writes have landed; the artifacts must outlive the query's
-    * lazy consumption, so exit-time deletion, not eager. Without this,
-    * every Verify/Bench invocation would leak staged table copies into
-    * the temp filesystem. */
-  def deleteAtExit(dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    // Files.walk holds open directory handles until closed — a throw mid-
-    // iteration must not leak them across the suite's many call sites
-    try stream.iterator().asScala.toSeq.foreach(_.toFile.deleteOnExit())
-    finally stream.close()
-  }
-
-  /** Stage one parquet file per micro-batch into a file-source dir, with
-    * its mtime pushed `ageSec` into the past — FileStreamSource processes
-    * oldest-first, so the mtimes ARE the arrival order. The ONE copy of
-    * the pattern the streaming-lifecycle queries (q158/q161/q187) share:
-    * setLastModified is CHECKED (a silently-failed stamp would leave batch
-    * order undefined on filesystems with restricted attrs) and the listing
-    * stream is closed (the deleteAtExit handle rule above). */
-  def stageFile(work: java.nio.file.Path, inDir: java.nio.file.Path,
-      name: String, df: org.apache.spark.sql.DataFrame, ageSec: Long): Unit = {
-    val tmp = work.resolve(s"stage_$name")
-    df.coalesce(1).write.parquet(tmp.toString)
-    val listing = java.nio.file.Files.list(tmp)
-    val part =
-      try listing.filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-      finally listing.close()
-    val dst = inDir.resolve(s"$name.parquet")
-    java.nio.file.Files.copy(part, dst)
-    require(dst.toFile.setLastModified(
-        System.currentTimeMillis() - ageSec * 1000),
-      s"setLastModified failed for $dst — micro-batch arrival order " +
-        "would be undefined")
-  }
-}
 
 /** One driver-checkable query: the Spark plan and (when SQL-expressible) the
   * equivalent DuckDB oracle SQL. Column names and ORDER BY are kept identical
@@ -1663,7 +1622,7 @@ object Relational {
     // format round-trip happens inside the query.)
     Q("q113_csv_load",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q113").toString
+        val tmp = workDir("q113").toString
         val staged = t(s, dir, "orders")
           .select(col("o_orderkey"),
             when(col("o_orderkey") % 7 === 0, lit(null))
@@ -1671,11 +1630,9 @@ object Relational {
             col("o_totalprice"),
             to_date(col("o_orderdate")).as("o_date"))
         staged.write.mode("overwrite").option("header", true).csv(s"$tmp/in")
-        val out = graft.ingest.Ingest.csvLoad(s, s"$tmp/in",
+        graft.ingest.Ingest.csvLoad(s, s"$tmp/in",
             Table(s, tmp, "orders_loaded"), staged.schema)
           .read.orderBy("o_orderkey")
-        Staging.deleteAtExit(tmp)
-        out
       },
       Some("""SELECT o_orderkey,
              |  CASE WHEN o_orderkey % 7 = 0 THEN NULL
@@ -1694,7 +1651,7 @@ object Relational {
       (s, dir) => {
         val spark = s
         import spark.implicits._
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q114").toString
+        val tmp = workDir("q114").toString
         t(s, dir, "documents")
           .select(to_json(struct(col("doc_id"), col("lang"), col("n_chars"),
             col("source"), col("text"))).as("value"))
@@ -1711,11 +1668,9 @@ object Relational {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("text",
             org.apache.spark.sql.types.StringType)))
-        val out = graft.ingest.Ingest.jsonlLoad(s, s"$tmp/in",
+        graft.ingest.Ingest.jsonlLoad(s, s"$tmp/in",
             Table(s, tmp, "docs_loaded"), schema)
           .read.orderBy(col("doc_id").asc_nulls_last, col("_corrupt_record"))
-        Staging.deleteAtExit(tmp)
-        out
       },
       Some("""SELECT doc_id, lang, n_chars, source, text,
              |  CAST(NULL AS VARCHAR) AS _corrupt_record
@@ -1731,16 +1686,14 @@ object Relational {
     // files — the round-trip pins both the writer's and reader's mapping.
     Q("q115_orc_load",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q115").toString
+        val tmp = workDir("q115").toString
         t(s, dir, "lineitem").filter(col("l_orderkey") % 100 === 0)
           .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity",
             "l_returnflag")
           .write.mode("overwrite").orc(s"$tmp/in")
-        val out = graft.ingest.Ingest.orcLoad(s, s"$tmp/in",
+        graft.ingest.Ingest.orcLoad(s, s"$tmp/in",
             Table(s, tmp, "li_loaded"))
           .read.orderBy("l_orderkey", "l_linenumber")
-        Staging.deleteAtExit(tmp)
-        out
       },
       Some("""SELECT l_orderkey, l_partkey, l_linenumber, l_quantity,
              |  l_returnflag
@@ -1753,12 +1706,10 @@ object Relational {
     // Values, schema and row count must survive the copy exactly.
     Q("q116_table_copy",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q116").toString
+        val tmp = workDir("q116").toString
         val src = Table(s, tmp, "nation_src")
         src.overwrite(t(s, dir, "nation"))
-        val out = src.copyTo("nation_copy").read.orderBy("n_nationkey")
-        Staging.deleteAtExit(tmp)
-        out
+        src.copyTo("nation_copy").read.orderBy("n_nationkey")
       },
       Some("SELECT * FROM nation ORDER BY n_nationkey")),
 
@@ -1768,15 +1719,13 @@ object Relational {
     // path, return the union the table now holds.
     Q("q117_table_append",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q117").toString
+        val tmp = workDir("q117").toString
         val base = t(s, dir, "customer")
           .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
         val dst = Table(s, tmp, "cust_inc")
         dst.overwrite(base.filter(col("c_custkey") % 3 === 0))
         dst.append(base.filter(col("c_custkey") % 3 === 1))
-        val out = dst.read.orderBy("c_custkey")
-        Staging.deleteAtExit(tmp)
-        out
+        dst.read.orderBy("c_custkey")
       },
       Some("""SELECT c_custkey, c_name, c_nationkey, c_mktsegment
              |FROM customer WHERE c_custkey % 3 IN (0, 1)
@@ -1792,13 +1741,11 @@ object Relational {
     // partition-dependent by design, which no external oracle can replay.
     Q("q118_write_with_schema",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q118").toString
+        val tmp = workDir("q118").toString
         val dst = Table(s, tmp, "supp_indexed")
         dst.writeWithSchema(t(s, dir, "supplier").orderBy("s_suppkey"),
           dense = true)
-        val out = dst.read.orderBy("id")
-        Staging.deleteAtExit(tmp)
-        out
+        dst.read.orderBy("id")
       },
       Some("""SELECT CAST(row_number() OVER (ORDER BY s_suppkey) - 1 AS BIGINT)
              |    AS id, s_suppkey, s_name, s_nationkey, s_acctbal
@@ -1816,8 +1763,7 @@ object Relational {
     // framing and stay spec-pinned (IngestSpec).
     Q("q119_shapefile_load",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempFile("graft-q119", ".shp")
-        tmp.toFile.deleteOnExit()
+        val tmp = workDir("q119").resolve("points.shp")
         graft.ingest.Shapefile.syntheticPointShp(tmp, 40)
         graft.ingest.Shapefile.read(s, tmp.toString)
           .select(col("record_no"), col("shape_type"),
@@ -1864,18 +1810,16 @@ object Relational {
     // frame from the fixture directly.
     Q("q133_schema_evolution",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q133").toString
+        val tmp = workDir("q133").toString
         val na = t(s, dir, "nation")
         na.filter(col("n_nationkey") < 12).select("n_nationkey", "n_name")
           .write.parquet(s"$tmp/in")
         na.filter(col("n_nationkey") >= 12)
           .select("n_nationkey", "n_name", "n_regionkey")
           .write.mode("append").parquet(s"$tmp/in")
-        val out = graft.ingest.Ingest.parquetEvolvedLoad(s, s"$tmp/in",
+        graft.ingest.Ingest.parquetEvolvedLoad(s, s"$tmp/in",
             Table(s, tmp, "nation_evolved"))
           .read.orderBy("n_nationkey")
-        Staging.deleteAtExit(tmp)
-        out
       },
       Some("""SELECT n_nationkey, n_name,
              |  CASE WHEN n_nationkey >= 12 THEN n_regionkey END AS n_regionkey
@@ -1928,9 +1872,7 @@ object Relational {
       (s, dir) => {
         import graft.ops.Sketches
         val li = t(s, dir, "lineitem")
-        val work = java.nio.file.Files.createTempDirectory("graft-q203")
-        val inDir = work.resolve("in")
-        java.nio.file.Files.createDirectories(inDir)
+        val work = workDir("q203")
         val state = Table(s, work.toString, "cms_state")
         val sketchOf = (df: DataFrame) => Sketches.freqSketch(
           df, col("l_suppkey"), depth = 4, width = 512, seed = "cms131")
@@ -1941,25 +1883,13 @@ object Relational {
         // real bus the producer ships the key stream, not the table)
         val feed = (m: Int) => li.filter(pmod(col("l_orderkey"), lit(4)) === m)
           .select("l_suppkey")
-        Staging.stageFile(work, inDir, "b1", feed(1), 120)
-        Staging.stageFile(work, inDir, "b2", feed(3), 60)
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val onBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
           state.writeVersionIfAbsent(batchId + 1, Sketches.mergeFreqSketches(
             state.readVersion(batchId).unionByName(sketchOf(batch))))
         }
-        val query = s.readStream.schema(feed(1).schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .writeStream.foreachBatch(onBatch).start()
-        try query.processAllAvailable()
-        finally {
-          query.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
+        Staging.fileStream(work, feed(1), feed(3)).drain(onBatch)
         require(state.versions == Seq(0L, 1L, 2L),
           s"lifecycle should commit versions 0,1,2 — got ${state.versions}")
-        Staging.deleteAtExit(work.toString)
         val est = Sketches.freqEstimate(state.readLatest, li, "l_suppkey",
           depth = 4, width = 512, seed = "cms131")
         val truth = li.groupBy("l_suppkey").agg(count(lit(1)).as("true_cnt"))
@@ -2036,15 +1966,13 @@ object Relational {
     // append/overwrite, which q117 pins.
     Q("q122_row_writer",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q122").toString
+        val tmp = workDir("q122").toString
         val src = t(s, dir, "nation")
         val dst = Table(s, tmp, "nation_trickle")
         val w = dst.writer(src.schema, chunkSize = 7)
         try src.orderBy("n_nationkey").collect().foreach(w.writeRow)
         finally w.close()
-        val out = dst.read.orderBy("n_nationkey")
-        Staging.deleteAtExit(tmp)
-        out
+        dst.read.orderBy("n_nationkey")
       },
       Some("SELECT * FROM nation ORDER BY n_nationkey")),
 
@@ -2056,12 +1984,10 @@ object Relational {
     // Shard-size bounds themselves are file-level, spec-pinned.
     Q("q123_sharded_write",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q123").toString
+        val tmp = workDir("q123").toString
         val dst = Table(s, tmp, "cust_shards")
         dst.overwriteSharded(t(s, dir, "customer"), rowsPerShard = 100L)
-        val out = dst.read.orderBy("c_custkey")
-        Staging.deleteAtExit(tmp)
-        out
+        dst.read.orderBy("c_custkey")
       },
       Some("SELECT * FROM customer ORDER BY c_custkey")),
 
@@ -2073,12 +1999,10 @@ object Relational {
     // the one query whose whole value IS the schema_match bit.
     Q("q124_schema_roundtrip",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q124").toString
+        val tmp = workDir("q124").toString
         val dst = Table(s, tmp, "part_empty")
         dst.writeSchema(Table(s, dir, "part").schema)
-        val out = dst.read
-        Staging.deleteAtExit(tmp)
-        out
+        dst.read
       },
       Some("SELECT * FROM part WHERE FALSE")),
 
@@ -2116,7 +2040,7 @@ object Relational {
     // staging write.
     Q("q149_bucketed_join",
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-q149").toString
+        val tmp = workDir("q149").toString
         // allowReplace: this session owns these names and re-points them
         // at a fresh temp dir every invocation (Bench runs the suite twice)
         graft.ops.Layout.writeBucketed(
@@ -2127,7 +2051,6 @@ object Relational {
           t(s, dir, "orders").select("o_custkey", "o_totalprice"),
           "q149_orders", s"$tmp/orders", Seq("o_custkey"), 8,
           sortCols = Seq("o_custkey"), allowReplace = true)
-        Staging.deleteAtExit(tmp)
         val c = s.table("q149_customer")
         val o = s.table("q149_orders")
         c.join(o, c("c_custkey") === o("o_custkey"))
@@ -2201,7 +2124,7 @@ object Relational {
     // ts arrives as nanos-long OR native timestamp depending on the
     // fixture's vintage; normalizeTs dispatches on the scanned type
     val schema = Parquet.scan(s, path).schema
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft-$tag-events")
+    val streamDir = workDir(s"$tag-events")
     val staged = streamDir.resolve("events.parquet")
     java.nio.file.Files.copy(java.nio.file.Paths.get(path), staged)
     val stream = normalizeTs(s.readStream.schema(schema).parquet(streamDir.toString))
@@ -2243,7 +2166,7 @@ object Relational {
     Q("q59_pipeline_e2e",
       (s, dir) => {
         import graft.pipeline.{Pipeline, Stage}
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-q59").toString
+        val ckpt = workDir("q59").toString
         val pipe = new Pipeline(Seq(
           Stage("customers", Nil, _ => t(s, dir, "customer")),
           Stage("geo", Seq("customers"), deps => {
@@ -2257,11 +2180,7 @@ object Relational {
               .agg(count(lit(1)).as("n_customers"),
                 graft.ops.Ops.sumDec(col("c_acctbal")).as("total_balance"))
               .orderBy("n_name"))))
-        val out = pipe.run(s, Some(ckpt), materialize = Set("geo"))("by_nation")
-        // the temp artifact must outlive this query's consumption (the final
-        // plan reads it) — exit-time cleanup via the shared helper
-        Staging.deleteAtExit(ckpt)
-        out
+        pipe.run(s, Some(ckpt), materialize = Set("geo"))("by_nation")
       },
       Some("""SELECT n_name, count(*) AS n_customers,
              |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_balance

@@ -35,7 +35,7 @@ object Harness {
       // keep catalog-registered staging tables (q149 writeBucketed) from
       // littering a spark-warehouse/ dir into the working directory
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        graft.core.Scratch.workDir("warehouse").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

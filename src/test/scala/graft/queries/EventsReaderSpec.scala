@@ -51,20 +51,16 @@ class EventsReaderSpec extends SparkSpec {
   }
 
   test("events(): reads the micros-vintage fixture end-to-end as TIMESTAMP") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-spec")
-    try {
-      // What the round-7+ generator writes: tz-naive timestamp[us] parquet
-      // (Spark writes NTZ as naive micros, matching pyarrow's timestamp[us]).
-      Seq((1L, Timestamp.valueOf("2024-03-01 12:00:00"), "click"))
-        .toDF("event_id", "ts", "etype")
-        .select(col("event_id"), col("ts").cast(TimestampNTZType).as("ts"), col("etype"))
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val out = Relational.events(spark, dir.toString)
-      assert(out.schema("ts").dataType == TimestampType)
-      assert(out.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as[String].head()
-        == "2024-03-01 12:00:00")
-    } finally {
-      Staging.deleteAtExit(dir.toString)
-    }
+    val dir = graft.core.Scratch.workDir("events-spec")
+    // What the round-7+ generator writes: tz-naive timestamp[us] parquet
+    // (Spark writes NTZ as naive micros, matching pyarrow's timestamp[us]).
+    Seq((1L, Timestamp.valueOf("2024-03-01 12:00:00"), "click"))
+      .toDF("event_id", "ts", "etype")
+      .select(col("event_id"), col("ts").cast(TimestampNTZType).as("ts"), col("etype"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val out = Relational.events(spark, dir.toString)
+    assert(out.schema("ts").dataType == TimestampType)
+    assert(out.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as[String].head()
+      == "2024-03-01 12:00:00")
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Refuse
+
 /** X84 — semi-structured JSON key-path profiling: the schema-drift radar a
   * JSON lake needs before anything else can be built on it. Raw event
   * payloads, API dumps, and scraped metadata arrive as JSON text whose
@@ -119,20 +121,23 @@ object JsonProfile {
       .select(col("path"), col("tag"), col("r"))
     // One sentinel row (null path, r = 0) keeps the census non-empty on
     // empty input, so the refusal below runs in the plan at action time
-    // instead of costing a count job at call time.
-    val sentinel = spark.range(0, 1, 1, 1).select(lit(null).cast("string").as("path"),
+    // instead of costing a count job at call time. Its path is NULL but
+    // not a literal: on empty input the whole plan is constants, and a
+    // literal NULL path would let the optimizer fold the sentinel's drop
+    // below into pruning the plan, refusal included.
+    val sentinel = spark.range(0, 1, 1, 1).select(
+      when(col("id") < 0, col("id").cast("string")).as("path"),
       lit(null).cast("string").as("tag"), lit(0L).as("r"))
     def cnt(t: String) = sum(when(col("tag") === t, 1L).otherwise(0L))
-    entries.unionByName(sentinel).groupBy("path")
+    val census = entries.unionByName(sentinel).groupBy("path")
       .agg(count(lit(1)).as("n"),
         cnt("object").as("n_object"), cnt("array").as("n_array"),
         cnt("string").as("n_string"), cnt("number").as("n_number"),
         cnt("boolean").as("n_boolean"), cnt("null").as("n_null"),
         sum("r").as("__rows"))
       .withColumn("__total", sum("__rows").over(Window.partitionBy()))
-      .filter(when(col("__total") === 0,
-          raise_error(lit("pathProfile: empty input")))
-        .otherwise(col("path").isNotNull))
+    Refuse.rows(census, (col("__total") === 0) -> lit("pathProfile: empty input"))
+      .filter(col("path").isNotNull)
       .select(col("path"), col("n"), col("n_object"), col("n_array"),
         col("n_string"), col("n_number"), col("n_boolean"), col("n_null"),
         expr("n * 1000000 DIV __total").as("present_micro"))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Refuse
+
 /** X97 — association-rule mining at the pair level (Agrawal & Srikant
   * VLDB'94's Apriori, truncated where production basket analysis actually
   * operates): which items co-occur in a basket beyond chance, as
@@ -117,15 +119,16 @@ object Associations {
     // losing an executor mid-mine must not kill the job — localCheckpoint
     // stores blocks ON executors and truncates lineage, so on a real
     // cluster one lost executor would otherwise be unrecoverable.
+    // the eager materialization reads every row, so the separator
+    // refusal fires in it
     val b = graft.core.Checkpointing.truncate(
-      baskets.select(basket.as("__b"), item.cast("string").as("__i"))
+      Refuse.rows(baskets.select(basket.as("__b"), item.cast("string").as("__i"))
         .filter(col("__b").isNotNull && col("__i").isNotNull)
         .distinct(),
+        col("__i").contains(sep) -> concat(lit("item '"), col("__i"),
+          lit(s"' contains the pseudo-item separator '$sep' — pass a sep " +
+            "outside the item domain"))),
       eager = true, reliableDir = checkpointDir)
-    val bad = b.filter(col("__i").contains(sep)).limit(1).collect()
-    require(bad.isEmpty,
-      s"item '${bad.headOption.map(_.get(1)).orNull}' contains the " +
-        s"pseudo-item separator '$sep' — pass a sep outside the item domain")
     // stage 1: supported pairs, one direction (the Apriori L2 cut)
     val supported = pairRules(b, col("__b"), col("__i"), minSupportMicro,
         maxBasketSize)

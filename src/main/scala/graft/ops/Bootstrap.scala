@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Refuse
+
 /** X79 — Poisson-bootstrap confidence intervals: error bars for corpus
   * metrics computed in ONE scan, the way uncertainty is actually
   * estimated over data too big to resample (Chamandy et al., "Estimating
@@ -97,14 +99,14 @@ object Bootstrap {
     require(alphaMicro > 0 && 2 * alphaMicro < 1000000L,
       s"alphaMicro must be in (0, 5e5), got $alphaMicro")
     require(seed.nonEmpty, "seed must be non-empty")
-    val base = df.select(id.cast("string").as("__id"),
-      value.cast("double").as("__v"))
-    val bad = base.filter(col("__id").isNull || col("__v").isNull)
-      .limit(1).collect()
-    require(bad.isEmpty,
-      "meanCI: NULL id or value — filter upstream explicitly; a silent " +
-        "drop would shift every replicate and the interval would not " +
-        "cover it")
+    // the totals collect below reads every row, so the NULL refusal
+    // fires in it, ahead of its own checks
+    val base = Refuse.rows(df.select(id.cast("string").as("__id"),
+      value.cast("double").as("__v")),
+      (col("__id").isNull || col("__v").isNull) -> lit(
+        "meanCI: NULL id or value — filter upstream explicitly; a silent " +
+          "drop would shift every replicate and the interval would not " +
+          "cover it"))
     val m = base.select(col("__id"),
       expr("CAST(round(__v * 1000000) AS BIGINT)").as("__m"))
     val tot = m.agg(count(lit(1)),

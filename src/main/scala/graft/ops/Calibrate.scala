@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.Refuse
+
 /** X77 — isotonic score calibration (pool-adjacent-violators): turn a
   * ranking score into a calibrated probability by fitting the best
   * monotone non-decreasing step function from score to P(label = 1) —
@@ -48,11 +50,12 @@ object Calibrate {
   def isotonicCalibrate(df: DataFrame, score: Column, label: Column,
       maxBuckets: Int = 100000): DataFrame = {
     require(maxBuckets >= 1, s"maxBuckets must be positive, got $maxBuckets")
-    val base = df.select(score.as("score"), label.cast("long").as("__l"))
-      .filter(col("score").isNotNull && col("__l").isNotNull)
-    val badLabel = base.filter(!col("__l").isin(0L, 1L)).limit(1).collect()
-    require(badLabel.isEmpty,
-      s"isotonicCalibrate labels must be 0/1, found ${badLabel.head.get(1)}")
+    // the sorted bucket collect below reads every row, so the label
+    // refusal fires in it
+    val base = Refuse.rows(df.select(score.as("score"), label.cast("long").as("__l"))
+      .filter(col("score").isNotNull && col("__l").isNotNull),
+      !col("__l").isin(0L, 1L) -> concat(
+        lit("isotonicCalibrate labels must be 0/1, found "), col("__l").cast("string")))
     val g = base.groupBy("score")
       .agg(count(lit(1)).as("n"), sum(col("__l")).as("pos"))
     val rows = g.orderBy("score").limit(maxBuckets + 1).collect()
@@ -393,13 +396,14 @@ object Calibrate {
         label.cast("long").as("__y") :+
         label.cast("double").as("__yd"): _*)
       .filter(col("__p").isNotNull && col("__y").isNotNull)
-    val binned = base
-      // the label half of the probe reads the DOUBLE cast: fractional
-      // labels REFUSE instead of truncating past it (ADVICE r17)
-      .withColumn("__bad",
-        when(col("__p") < 0 || col("__p") > 1000000L, 1L)
-          .when(col("__yd") =!= 0d && col("__yd") =!= 1d, 1L)
-          .otherwise(0L))
+    // the label half of the refusal reads the DOUBLE cast: fractional
+    // labels REFUSE instead of truncating past it (ADVICE r17)
+    val binned = Refuse.rows(base,
+        (col("__p") < 0 || col("__p") > 1000000L ||
+          (col("__yd") =!= 0d && col("__yd") =!= 1d)) -> lit(
+          "calibrationReport: a probability outside [0, 1e6] micros or a " +
+            "non-0/1 label — a malformed probability is a pipeline bug; " +
+            "fix upstream"))
       .withColumn("__bin",
         least(lit(bins - 1).cast("long"),
           expr(s"__p * $bins DIV 1000000")))
@@ -407,21 +411,14 @@ object Calibrate {
       .agg(count(lit(1)).as("n"), sum(col("__p").cast(d)).as("__sp"),
         sum(col("__y")).as("__sy"),
         sum(((col("__p") - col("__y") * 1000000L).cast(d) *
-          (col("__p") - col("__y") * 1000000L))).as("__sq"),
-        sum(col("__bad")).as("__badc"))
+          (col("__p") - col("__y") * 1000000L))).as("__sq"))
       .persist()
     try {
-      val bad = binned.filter(col("__badc") > 0).limit(1).collect()
-      require(bad.isEmpty,
-        "calibrationReport: a probability outside [0, 1e6] micros or a " +
-          "non-0/1 label — a malformed probability is a pipeline bug; " +
-          "fix upstream")
-      val tot = binned.groupBy(fam: _*)
-        .agg(sum(col("n")).as("__N"), sum(col("__sq")).as("__SQ"))
-      val over = tot.filter(col("__N") > 1000000000000L).limit(1).collect()
-      require(over.isEmpty,
-        "calibrationReport: a family exceeds 1e12 rows — the squared-" +
-          "error DECIMAL(38) budget")
+      val tot = Refuse.rows(binned.groupBy(fam: _*)
+        .agg(sum(col("n")).as("__N"), sum(col("__sq")).as("__SQ")),
+        (col("__N") > 1000000000000L) -> lit(
+          "calibrationReport: a family exceeds 1e12 rows — the squared-" +
+            "error DECIMAL(38) budget"))
       binned.join(
           tot.withColumn("brier_micro", expr(
             """CAST((__SQ - __SQ % (CAST(__N AS DECIMAL(38,0)) * 1000000))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
+import graft.core.Refuse
+
 /** X86 — A/B experiment scorecard: per-arm means, absolute and relative
   * lift, and the Welch two-sample z statistic against a named control —
   * the readout every experimentation platform renders from deterministic
@@ -119,14 +121,14 @@ object Experiment {
       covariateMicro: Column): Long = {
     import org.apache.spark.sql.types.DecimalType
     val d = DecimalType(38, 0)
-    val base = df.select(metricMicro.cast("long").as("__y"),
+    // the one aggregation below reads every row, so the budget refusal
+    // fires in its collect
+    val base = Refuse.rows(df.select(metricMicro.cast("long").as("__y"),
         covariateMicro.cast("long").as("__x"))
-      .filter(col("__x").isNotNull && col("__y").isNotNull)
-    val probe = base.filter(abs(col("__x")) > 1000000000L ||
-      abs(col("__y")) > 1000000000L).limit(1).collect()
-    require(probe.isEmpty,
-      "cupedTheta: |metric| or |covariate| > 1e9 µ — rescale upstream " +
-        "(the DECIMAL(38) single-stage budget)")
+      .filter(col("__x").isNotNull && col("__y").isNotNull),
+      (abs(col("__x")) > 1000000000L || abs(col("__y")) > 1000000000L) -> lit(
+        "cupedTheta: |metric| or |covariate| > 1e9 µ — rescale upstream " +
+          "(the DECIMAL(38) single-stage budget)"))
     val r = base.agg(count(lit(1)).as("n"),
       sum(col("__x").cast(d)).as("sx"), sum(col("__y").cast(d)).as("sy"),
       sum((col("__x") * col("__y")).cast(d)).as("sxy"),

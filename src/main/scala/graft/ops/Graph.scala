@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Checkpointing
+import graft.core.{Checkpointing, Refuse}
 import graft.core.Checkpointing.AtCap
 
 /** Iterative link-graph analytics (X32) — the web-corpus curation signal
@@ -558,17 +558,15 @@ object Graph {
       s"edge frame needs (src, dst, w) columns, got ${edges.columns.mkString(", ")}"))
     require(sources.columns.contains("id"),
       s"source frame needs an (id) column, got ${sources.columns.mkString(", ")}")
-    val fwd = edges
+    val fwd = Refuse.rows(edges
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("w").isNotNull)
-    val bad = fwd.filter(col("w") < 0 || col("w") > 1000000000000000L)
-      .limit(1).collect()
-    require(bad.isEmpty,
-      s"edge weight ${bad.headOption.map(_.get(2)).orNull} outside " +
-        "[0, 1e15] — negative cost makes shortest-path undefined; " +
-        "larger weights break the Long distance budget")
+        col("w").isNotNull),
+      (col("w") < 0 || col("w") > 1000000000000000L) -> concat(
+        lit("edge weight "), col("w").cast("string"), lit(" outside " +
+          "[0, 1e15] — negative cost makes shortest-path undefined; " +
+          "larger weights break the Long distance budget")))
     val e = (if (undirected)
         fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst"),
           col("w")))
@@ -724,16 +722,14 @@ object Graph {
       s"edge frame needs (src, dst, w) columns, got ${edges.columns.mkString(", ")}"))
     require(sources.columns.contains("id"),
       s"source frame needs an (id) column, got ${sources.columns.mkString(", ")}")
-    val fwd = edges
+    val fwd = Refuse.rows(edges
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("w").isNotNull)
-    val bad = fwd.filter(abs(col("w")) > 1000000000000000L)
-      .limit(1).collect()
-    require(bad.isEmpty,
-      s"edge weight ${bad.headOption.map(_.get(2)).orNull} outside " +
-        "[-1e15, 1e15] — larger magnitudes break the Long distance budget")
+        col("w").isNotNull),
+      (abs(col("w")) > 1000000000000000L) -> concat(
+        lit("edge weight "), col("w").cast("string"), lit(" outside " +
+          "[-1e15, 1e15] — larger magnitudes break the Long distance budget")))
     val e = fwd.groupBy("src", "dst").agg(min(col("w")).as("w"))
       .repartition(col("src"))
       .persist()
@@ -971,20 +967,22 @@ object Graph {
       s"maxHops must be in [1, 10000], got $maxHops")
     require(targets.columns.contains("id"),
       s"target frame needs an (id) column, got ${targets.columns.mkString(", ")}")
-    val tree = paths.select(col("id").cast("long").as("__tid"),
+    // A duplicated id row would fan out every per-round join and emit
+    // duplicate (possibly divergent) routes per target — the same
+    // corrupted-frame stance as the mid-route probe below, refused while
+    // the first round materializes the tree (a window over the tree's
+    // own id partitioning, so no extra shuffle).
+    val tree = Refuse.rows(paths.select(col("id").cast("long").as("__tid"),
         col("parent").cast("long").as("__par"))
       .repartition(col("__tid"))
+      .withColumn("__n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("__tid"))),
+      (col("__n") > 1) -> concat(lit("walkPaths: node Some("),
+        Refuse.show(col("__tid")), lit(") appears more than once in the " +
+          "paths frame — corrupted paths frame")))
+      .drop("__n")
       .persist()
     try {
-      // A duplicated id row would fan out every per-round join and emit
-      // duplicate (possibly divergent) routes per target — the same
-      // corrupted-frame stance as the mid-route probe below, checked
-      // once up front (one aggregation over the node-sized tree).
-      val dup = tree.groupBy(col("__tid")).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"walkPaths: node ${dup.headOption.map(_.get(0))} appears more " +
-          "than once in the paths frame — corrupted paths frame")
       // A LIVE cursor the tree doesn't know is fine at the HEAD
       // (unreached target) but corruption mid-route — the walkPath
       // contract; finished rows (NULL cursor) also join nothing and
@@ -1299,16 +1297,16 @@ object Graph {
       .distinct()
       .persist()
     try {
-      val asg = assignment
+      // the NULL-label refusal fires in the first job that reads asg
+      val asg = Refuse.rows(assignment
         .select(col("id").cast("long").as("id"),
           col("label").cast("long").as("label"))
-        .filter(col("id").isNotNull)
+        .filter(col("id").isNotNull),
+        col("label").isNull -> concat(lit("modularity: node Some("),
+          col("id").cast("string"), lit(") has a NULL label — a node with " +
+            "no community is a pipeline bug")))
         .persist()
       try {
-        val badLab = asg.filter(col("label").isNull).limit(1).collect()
-        require(badLab.isEmpty,
-          s"modularity: node ${badLab.headOption.map(_.get(0))} has a " +
-            "NULL label — a node with no community is a pipeline bug")
         val dup = asg.groupBy("id").agg(count(lit(1)).as("__c"))
           .filter(col("__c") > 1).limit(1).collect()
         require(dup.isEmpty,
@@ -1317,12 +1315,6 @@ object Graph {
         val degrees = canon.select(col("a").as("id"))
           .unionAll(canon.select(col("b").as("id")))
           .groupBy("id").agg(count(lit(1)).as("__deg"))
-        val uncovered = degrees.join(asg, Seq("id"), "left_anti")
-          .limit(1).collect()
-        require(uncovered.isEmpty,
-          s"modularity: edge endpoint ${uncovered.headOption.map(_.get(0))} " +
-            "is missing from the assignment — scoring a partial " +
-            "partition would silently inflate Q")
         val m = canon.count()
         require(m <= 1000000000000000L,
           s"modularity: $m edges exceeds the 4m²·1e6 DECIMAL(38) budget")
@@ -1342,7 +1334,13 @@ object Graph {
             .filter(col("__la") === col("__lb"))
             .groupBy(col("__la").as("label"))
             .agg(count(lit(1)).as("__L"))
-          val dc = degrees.join(asg, "id")
+          // an endpoint with no assignment row would drop out of an inner
+          // join and silently inflate Q: the left join refuses it (m > 0
+          // here; with no edges there are no endpoints)
+          val dc = Refuse.rows(degrees.join(asg, Seq("id"), "left"),
+              col("label").isNull -> concat(lit("modularity: edge endpoint Some("),
+                col("id").cast("string"), lit(") is missing from the assignment " +
+                  "— scoring a partial partition would silently inflate Q")))
             .groupBy("label").agg(sum(col("__deg")).as("__D"))
           // 4m² as a DECIMAL literal: it overflows Long well inside the
           // stated m ≤ 1e15 budget

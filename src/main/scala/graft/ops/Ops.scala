@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType}
 
+import graft.core.Refuse
+
 /** The reference's transformation vocabulary (README.md:11-17: "filtering,
   * calculating new columns, formatting columns, regex extraction, ...,
   * joining tables together") as composable, purely-declarative
@@ -392,27 +394,27 @@ object Ops {
     val missingP = base.columns.filterNot(log.columns.contains)
     require(missingP.isEmpty,
       s"log must carry every base column; missing: ${missingP.mkString(",")}")
-    // bounded malformed-row probe (the Validate limit(1) convention): an
-    // unknown/NULL op or a NULL key component is a producer bug the apply
-    // must not silently reinterpret. A NULL op would otherwise sort NULLS
-    // FIRST in the window (winning the compaction), then evaluate to NULL
-    // in the delete filter — the key silently vanishes; a NULL key row
-    // can never be matched by the equality anti-join, so repeated applies
-    // would keep appending unreachable rows.
+    // in-plan malformed-row refusal: an unknown/NULL op or a NULL key
+    // component is a producer bug the apply must not silently
+    // reinterpret. A NULL op would otherwise sort NULLS FIRST in the
+    // window (winning the compaction), then evaluate to NULL in the
+    // delete filter — the key silently vanishes; a NULL key row can never
+    // be matched by the equality anti-join, so repeated applies would
+    // keep appending unreachable rows. Both branches of the result read
+    // the whole log through the compaction window, so the refusal fires
+    // on any read.
     val nullKey = keys.map(col(_).isNull).reduce(_ || _)
-    val bad = log.filter(col(opCol).isNull ||
-        !upper(col(opCol)).isin("I", "U", "D") || nullKey)
-      .select(col(opCol) +: keys.map(col): _*).limit(1).collect()
-    require(bad.isEmpty,
-      s"malformed CDC log row (op '${bad.headOption.map(_.get(0)).orNull}', " +
-        s"keys ${bad.headOption.map(r => (1 to keys.size).map(r.get).mkString(","))
-          .getOrElse("")}): op must be I/U/D and keys non-null")
+    val checked = Refuse.rows(log, (col(opCol).isNull ||
+        !upper(col(opCol)).isin("I", "U", "D") || nullKey) ->
+      concat(lit("malformed CDC log row (op '"), Refuse.show(col(opCol)),
+        lit("', keys "), concat_ws(",", keys.map(k => Refuse.show(col(k))): _*),
+        lit("): op must be I/U/D and keys non-null")))
     val payload = base.columns.filterNot(keys.contains).toIndexedSeq
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
       .orderBy(col(seqCol).desc +: upper(col(opCol)).asc +:
         payload.map(c => col(c).cast("string").asc): _*)
-    val last = log.withColumn("__rn", row_number().over(w))
+    val last = checked.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
     val untouched = base.join(last.select(keys.map(col): _*), keys, "left_anti")
     val upserts = last.filter(upper(col(opCol)) =!= "D")
@@ -442,17 +444,16 @@ object Ops {
     * each delta row's `validFrom` must be strictly AFTER the matched
     * current row's `validFrom` (an out-of-order delta would close the
     * current row with an inverted [from, to) interval, silently breaking
-    * point-in-time lookups). Dedupe and order upstream, or pass
-    * `validate = true` to enforce both eagerly — it costs one extra
-    * aggregation job over delta plus the keyed join (worth it on untrusted
-    * deltas; skip it inside a tight trusted pipeline). Scale: ONE
-    * broadcast-able left join keyed on `keys` over the current slice,
-    * historical rows stream through untouched — no window, no global
-    * ordering; the common small-delta refresh is a zero-shuffle map over
-    * history. */
+    * point-in-time lookups). Both rules are refusals in the plan, checked
+    * on every merge: the duplicate-key count is one key-partitioned
+    * window over delta, and the interval order is checked on the rows of
+    * the merge's own keyed join, so neither costs a job of its own; they
+    * fire when an action reads the result. Scale: ONE broadcast-able left
+    * join keyed on `keys` over the current slice, historical rows stream
+    * through untouched — no global ordering; the common small-delta
+    * refresh is a map over history plus the delta-sized window. */
   def scd2Merge(history: DataFrame, delta: DataFrame, keys: Seq[String],
-      validFrom: String = "valid_from", validTo: String = "valid_to",
-      validate: Boolean = false): DataFrame = {
+      validFrom: String = "valid_from", validTo: String = "valid_to"): DataFrame = {
     require(keys.nonEmpty, "scd2Merge needs at least one key column")
     require(history.columns.contains(validFrom) && history.columns.contains(validTo),
       s"history must carry $validFrom and $validTo")
@@ -461,35 +462,27 @@ object Ops {
       s"delta must have history's columns minus $validTo: " +
         s"got ${delta.columns.sorted.mkString(",")}")
     val toType = history.schema(validTo).dataType
-    val closeTimes = delta.select(
+    val keyList = concat_ws(",", keys.map(k => concat(lit(s"$k="), Refuse.show(col(k)))): _*)
+    val checked = Refuse.rows(
+        delta.withColumn("__n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*))),
+        (col("__n") > 1) -> concat(
+          lit("scd2Merge: delta has duplicate key(s), e.g. "), keyList))
+      .drop("__n")
+    val closeTimes = checked.select(
       keys.map(col) :+ col(validFrom).as("__close_at"): _*)
-    if (validate) {
-      val dupKeys = delta.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1)
-        .collect()
-      require(dupKeys.isEmpty,
-        s"scd2Merge: delta has duplicate key(s), e.g. " +
-          s"${keys.zipWithIndex.map { case (k, i) => s"$k=${dupKeys.head.get(i)}" }.mkString(",")}")
-      val inverted = history.filter(col(validTo).isNull)
-        .select(keys.map(col) :+ col(validFrom).as("__cur_from"): _*)
-        .join(closeTimes, keys)
-        .filter(col("__close_at") <= col("__cur_from")).limit(1)
-        .collect()
-      require(inverted.isEmpty,
-        s"scd2Merge: delta $validFrom is at or before the current row's " +
-          s"$validFrom for key(s) " +
-          s"${keys.zipWithIndex.map { case (k, i) => s"$k=${inverted.head.get(i)}" }.mkString(",")}" +
-          " — would mint an inverted validity interval")
-    }
     // broadcast decision left to AQE (same as upsert): the common small
     // delta broadcasts and history never shuffles; a restatement too big to
     // broadcast degrades to a shuffle join instead of failing the build
-    val current = history.filter(col(validTo).isNull)
-      .join(closeTimes, keys, "left")
+    val current = Refuse.rows(history.filter(col(validTo).isNull)
+        .join(closeTimes, keys, "left"),
+        (col("__close_at") <= col(validFrom)) -> concat(
+          lit(s"scd2Merge: delta $validFrom is at or before the current row's " +
+            s"$validFrom for key(s) "), keyList,
+          lit(" — would mint an inverted validity interval")))
       .withColumn(validTo, col("__close_at").cast(toType))
       .drop("__close_at")
     val closed = history.filter(col(validTo).isNotNull)
-    val opened = delta.withColumn(validTo, lit(null).cast(toType))
+    val opened = checked.withColumn(validTo, lit(null).cast(toType))
     closed.unionByName(current).unionByName(opened)
       .select(history.columns.toIndexedSeq.map(col): _*)
   }
@@ -1008,7 +1001,7 @@ object Ops {
     * per-quantile pick is `min(value | cumW ≥ ceil(q·W/1e6))` with the
     * threshold formed in DECIMAL(38,0) (q·W overflows Long past
     * W ≈ 9.2e12). Weights must be POSITIVE integers (zero/negative
-    * refused by a bounded probe — a zero-weight row would still shift
+    * refused in the plan — a zero-weight row would still shift
     * nothing but ambiguate "smallest value reaching the target"; scale
     * fractional weights to micros upstream). NULL values/weights drop.
     * Output: `(groups…, n, total_w, <names…>)`. */
@@ -1021,14 +1014,12 @@ object Ops {
         s"quantile $name must be in (0, 1e6] micros, got $q") }
     require(qs.map(_._1).distinct.size == qs.size,
       s"duplicate output names: ${qs.map(_._1)}")
-    val base = df.select(groups.map(col) :+ value.cast("long").as("__v") :+
+    val base = Refuse.rows(df.select(groups.map(col) :+ value.cast("long").as("__v") :+
         weight.cast("long").as("__w"): _*)
-      .filter(col("__v").isNotNull && col("__w").isNotNull)
-    val bad = base.filter(col("__w") <= 0).limit(1).collect()
-    require(bad.isEmpty,
-      s"weightedPercentiles: non-positive weight ${bad.headOption
-        .map(_.get(groups.size + 1)).orNull} — weights are row mass; " +
-        "filter or fix upstream")
+      .filter(col("__v").isNotNull && col("__w").isNotNull),
+      (col("__w") <= 0) -> concat(lit("weightedPercentiles: non-positive weight "),
+        col("__w").cast("string"),
+        lit(" — weights are row mass; filter or fix upstream")))
     val perV = base.groupBy(groups.map(col) :+ col("__v"): _*)
       .agg(sum(col("__w")).as("__vw"), count(lit(1)).as("__vc"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1204,13 +1195,12 @@ object Ops {
         "woeIv: the label must have both classes present")
       require(posT <= 2000000000L && negT <= 2000000000L,
         "class totals exceed the exact Long ratio budget (2e9) — sample")
-      val empty = cells.filter(col("n_pos") === 0 || col("n_neg") === 0)
-        .limit(1).collect()
-      require(empty.isEmpty,
-        s"bin '${empty.headOption.map(_.get(0)).orNull}' has zero " +
-          "positives or negatives — WOE is infinite there; merge sparse " +
-          "bins upstream (silent smoothing would move every bin's number)")
-      val per = cells
+      // every read of the result computes the broadcast total over
+      // all bins, so the refusal fires on any read
+      val per = Refuse.rows(cells, (col("n_pos") === 0 || col("n_neg") === 0) ->
+          concat(lit("bin '"), col("bin"), lit("' has zero positives or " +
+            "negatives — WOE is infinite there; merge sparse bins upstream " +
+            "(silent smoothing would move every bin's number)")))
         .withColumn("woe_micro",
           round(log((col("n_pos") * negT).cast("double") /
             (col("n_neg") * posT).cast("double")) * 1e6).cast("long"))
@@ -1259,13 +1249,11 @@ object Ops {
       .filter(df.columns.contains)
     require(reserved.isEmpty,
       s"column name(s) ${reserved.mkString(", ")} reserved by bhAdjust")
-    val base = df.withColumn("__p", pMicro.cast("long"))
-      .filter(col("__p").isNotNull)
-    val bad = base.filter(col("__p") < 0 || col("__p") > 1000000L)
-      .limit(1).collect()
-    require(bad.isEmpty,
-      "p-value outside [0, 1e6] micros — a malformed p silently " +
-        "reordered would poison the whole family; fix upstream")
+    val base = Refuse.rows(df.withColumn("__p", pMicro.cast("long"))
+      .filter(col("__p").isNotNull),
+      (col("__p") < 0 || col("__p") > 1000000L) -> lit(
+        "p-value outside [0, 1e6] micros — a malformed p silently " +
+          "reordered would poison the whole family; fix upstream"))
     val fam = families.map(col)
     val W = org.apache.spark.sql.expressions.Window
     val wSort = W.partitionBy(fam: _*).orderBy(col("__p"))
@@ -1420,46 +1408,40 @@ object Ops {
       s"zMicro must be in (0, 1e7], got $zMicro")
     val d = org.apache.spark.sql.types.DecimalType(38, 0)
     val fam = families.map(col)
-    // DOUBLE-cast probe: fractional labels REFUSE instead of
+    // DOUBLE-cast check: fractional labels REFUSE instead of
     // truncating past the check (ADVICE r17, the averagePrecision fix)
-    val agg = df.select(fam :+ label.cast("long").as("__y") :+
+    val agg = Refuse.rows(df.select(fam :+ label.cast("long").as("__y") :+
         label.cast("double").as("__yd"): _*)
-      .filter(col("__y").isNotNull)
-      .groupBy(fam: _*)
-      .agg(count(lit(1)).as("n"), sum(col("__y")).as("k_pos"),
-        sum(when(col("__yd") === 0d || col("__yd") === 1d, 0L)
-          .otherwise(1L)).as("__bad"))
-      .persist()
-    try {
-      val bad = agg.filter(col("__bad") > 0).limit(1).collect()
-      require(bad.isEmpty,
+      .filter(col("__y").isNotNull),
+      !coalesce(col("__yd") === 0d || col("__yd") === 1d, lit(false)) -> lit(
         "proportionReport: label must be exactly 0/1 or boolean — " +
-          "threshold upstream")
-      val z = zMicro.toDouble / 1e6
-      val z2 = s"(${zMicro.toDouble} * ${zMicro.toDouble} / 1e12)"
-      agg
-        .withColumn("rate_micro", expr(
-          """CAST((CAST(k_pos AS DECIMAL(38,0)) * 1000000
-            |  - (CAST(k_pos AS DECIMAL(38,0)) * 1000000)
-            |    % CAST(n AS DECIMAL(38,0)))
-            | / CAST(n AS DECIMAL(38,0)) AS BIGINT)""".stripMargin))
-        .withColumn("wilson_lo_micro", expr(
-          s"""CAST(round(1000000 * (
-             |  (CAST(k_pos AS DOUBLE) + $z2 / 2)
-             |    / (CAST(n AS DOUBLE) + $z2)
-             |  - $z * sqrt(CAST(k_pos AS DOUBLE)
-             |      * (CAST(n AS DOUBLE) - k_pos) / n + $z2 / 4)
-             |    / (CAST(n AS DOUBLE) + $z2))) AS BIGINT)""".stripMargin))
-        .withColumn("wilson_hi_micro", expr(
-          s"""CAST(round(1000000 * (
-             |  (CAST(k_pos AS DOUBLE) + $z2 / 2)
-             |    / (CAST(n AS DOUBLE) + $z2)
-             |  + $z * sqrt(CAST(k_pos AS DOUBLE)
-             |      * (CAST(n AS DOUBLE) - k_pos) / n + $z2 / 4)
-             |    / (CAST(n AS DOUBLE) + $z2))) AS BIGINT)""".stripMargin))
-        .select(fam :+ col("n") :+ col("k_pos") :+ col("rate_micro") :+
-          col("wilson_lo_micro") :+ col("wilson_hi_micro"): _*)
-        .localCheckpoint(true)
-    } finally agg.unpersist()
+          "threshold upstream"))
+      .groupBy(fam: _*)
+      .agg(count(lit(1)).as("n"), sum(col("__y")).as("k_pos"))
+    val z = zMicro.toDouble / 1e6
+    val z2 = s"(${zMicro.toDouble} * ${zMicro.toDouble} / 1e12)"
+    agg
+      .withColumn("rate_micro", expr(
+        """CAST((CAST(k_pos AS DECIMAL(38,0)) * 1000000
+          |  - (CAST(k_pos AS DECIMAL(38,0)) * 1000000)
+          |    % CAST(n AS DECIMAL(38,0)))
+          | / CAST(n AS DECIMAL(38,0)) AS BIGINT)""".stripMargin))
+      .withColumn("wilson_lo_micro", expr(
+        s"""CAST(round(1000000 * (
+           |  (CAST(k_pos AS DOUBLE) + $z2 / 2)
+           |    / (CAST(n AS DOUBLE) + $z2)
+           |  - $z * sqrt(CAST(k_pos AS DOUBLE)
+           |      * (CAST(n AS DOUBLE) - k_pos) / n + $z2 / 4)
+           |    / (CAST(n AS DOUBLE) + $z2))) AS BIGINT)""".stripMargin))
+      .withColumn("wilson_hi_micro", expr(
+        s"""CAST(round(1000000 * (
+           |  (CAST(k_pos AS DOUBLE) + $z2 / 2)
+           |    / (CAST(n AS DOUBLE) + $z2)
+           |  + $z * sqrt(CAST(k_pos AS DOUBLE)
+           |      * (CAST(n AS DOUBLE) - k_pos) / n + $z2 / 4)
+           |    / (CAST(n AS DOUBLE) + $z2))) AS BIGINT)""".stripMargin))
+      .select(fam :+ col("n") :+ col("k_pos") :+ col("rate_micro") :+
+        col("wilson_lo_micro") :+ col("wilson_hi_micro"): _*)
+      .localCheckpoint(true)
   }
 }

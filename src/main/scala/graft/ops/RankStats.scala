@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
+import graft.core.Refuse
+
 /** Rank-based evaluation statistics (X113–X115): the measurement layer a
   * scoring pipeline runs AFTER X66 trains a classifier, X51/X77
   * calibrate it, and X100 watches its drift — how well does a SCORE
@@ -87,12 +89,11 @@ object RankStats {
   def giniIndex(df: DataFrame, groups: Seq[String],
       value: Column): DataFrame = {
     val d = DecimalType(38, 0)
-    val base = df.select(groups.map(col) :+ value.cast("long").as("__v"): _*)
-      .filter(col("__v").isNotNull)
-    val neg = base.filter(col("__v") < 0).limit(1).collect()
-    require(neg.isEmpty,
-      "giniIndex: negative value — the Lorenz construction needs a " +
-        "non-negative quantity; shift or filter upstream")
+    val base = Refuse.rows(df.select(groups.map(col) :+ value.cast("long").as("__v"): _*)
+      .filter(col("__v").isNotNull),
+      (col("__v") < 0) -> lit(
+        "giniIndex: negative value — the Lorenz construction needs a " +
+          "non-negative quantity; shift or filter upstream"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(groups.map(col): _*).orderBy(col("__v"))
     base.withColumn("__i", row_number().over(w))
@@ -307,7 +308,8 @@ object RankStats {
     * zero complete blocks emits no row. `maxTreatments` refuses
     * key-like treatment columns.
     *
-    * Scale shape: one (family, block, treatment) duplicate probe, one
+    * Scale shape: one treatment-census probe, the duplicate-cell
+    * refusal riding the block-size aggregation, one
     * (family, block)-keyed RANGE-window pair for midranks (blocks are
     * small — the sort is per block, never corpus-keyed), one
     * treatment-keyed and one family-keyed aggregation. Output:
@@ -326,12 +328,6 @@ object RankStats {
         coalesce(treatment.cast("string"), lit("(null)")).as("__t") :+
         value.cast("long").as("__v"): _*)
       .filter(col("__v").isNotNull)
-    val dup = base.groupBy(fam :+ col("__b") :+ col("__t"): _*)
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      "friedman: a block measures one treatment twice — ambiguous cell; " +
-        "aggregate upstream")
     // per-family treatment count k (the block-completeness yardstick)
     val ks = base.select(fam :+ col("__t"): _*).distinct()
       .groupBy(fam: _*).agg(count(lit(1)).as("__k"))
@@ -340,14 +336,26 @@ object RankStats {
       s"a family holds more than $maxTreatments treatments — a key-like " +
         "treatment column is not a design; bucket upstream")
     // complete blocks only: exactly the family's k distinct treatments
-    val blockSizes = base.groupBy(fam :+ col("__b"): _*)
-      .agg(count(lit(1)).as("__bc"))
+    val blockSizes = blockCensus(base, fam, "friedman")
     val complete = base
       .join(blockSizes, families :+ "__b")
       .join(ks, families)
       .filter(col("__bc") === col("__k"))
     friedmanStat(complete, families)
   }
+
+  /** Rows per (family, block), the block-completeness count, with the
+    * duplicate-cell refusal riding the same aggregation: a block that
+    * measures one treatment twice has more rows than distinct
+    * treatments. The treatment census has already bounded a block's
+    * distinct treatments by `maxTreatments`. */
+  private def blockCensus(base: DataFrame, fam: Seq[Column],
+      op: String): DataFrame =
+    Refuse.rows(base.groupBy(fam :+ col("__b"): _*)
+      .agg(count(lit(1)).as("__bc"), size(collect_set(col("__t"))).as("__bt")),
+      (col("__bc") > col("__bt")) -> lit(s"$op: a block measures one " +
+        "treatment twice — ambiguous cell; aggregate upstream"))
+      .drop("__bt")
 
   /** The tie-corrected Friedman χ² chain over a PREPARED complete-block
     * frame `(families…, __b, __t, __v)` — the statistic half of
@@ -502,7 +510,7 @@ object RankStats {
     * cells / key-like treatments REFUSE via [[friedman]]'s own
     * probes; families with k < 2 emit no pair rows.
     *
-    * Scale shape: the omnibus (one probe pair + windows), ONE
+    * Scale shape: the omnibus (one census probe + windows), ONE
     * family+block-keyed self-join of the complete-block frame
     * (fan-out ≤ k² per block, k ≤ maxTreatments — bounded, stated),
     * the X146 windows over (family, pair) keys, the X131 window pair.
@@ -520,28 +528,21 @@ object RankStats {
     // the former shape (friedman(df) + a verbatim rebuild here) ran
     // the scan→censuses→joins subtree once per probe and once per
     // consumer, and the composition's wall time was pure repeated
-    // orchestration, not statistics. The refusal probes are friedman's
-    // own, run here verbatim against the shared base.
+    // orchestration, not statistics. The refusals are friedman's own,
+    // run here verbatim against the shared base.
     val fam = families.map(col)
     val base = df.select(fam :+
         coalesce(block.cast("string"), lit("(null)")).as("__b") :+
         coalesce(treatment.cast("string"), lit("(null)")).as("__t") :+
         value.cast("long").as("__v"): _*)
       .filter(col("__v").isNotNull)
-    val dup = base.groupBy(fam :+ col("__b") :+ col("__t"): _*)
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      "friedman: a block measures one treatment twice — ambiguous cell; " +
-        "aggregate upstream")
     val ks = base.select(fam :+ col("__t"): _*).distinct()
       .groupBy(fam: _*).agg(count(lit(1)).as("__k"))
     val tooMany = ks.filter(col("__k") > maxTreatments).limit(1).collect()
     require(tooMany.isEmpty,
       s"a family holds more than $maxTreatments treatments — a key-like " +
         "treatment column is not a design; bucket upstream")
-    val blockSizes = base.groupBy(fam :+ col("__b"): _*)
-      .agg(count(lit(1)).as("__bc"))
+    val blockSizes = blockCensus(base, fam, "friedman")
     // §5 scale note: localCheckpoint blocks are executor-pinned and not
     // recomputable — fine inside one bounded query (this frame is
     // complete-block-sized and feeds four consumers); a deployment that
@@ -816,9 +817,10 @@ object RankStats {
     * totals under the X131 BH screen, not a second operator.
     *
     * Scale shape = [[friedman]] minus the windows (no ranks to take —
-    * the outcome IS the statistic): one duplicate probe, one
-    * non-binary probe, two keyed aggregations (per-treatment, per-
-    * block), everything map-side combinable. Output: `(families…,
+    * the outcome IS the statistic): one treatment-census probe, the
+    * non-binary and duplicate-cell refusals in the plan, two keyed
+    * aggregations (per-treatment, per-block), everything map-side
+    * combinable. Output: `(families…,
     * k_treatments, n_blocks, n_success, q_micro)`. */
   def cochranQ(df: DataFrame, families: Seq[String], block: Column,
       treatment: Column, value: Column,
@@ -827,38 +829,29 @@ object RankStats {
       s"maxTreatments must be in [2, 1000], got $maxTreatments")
     val d = DecimalType(38, 0)
     val fam = families.map(col)
-    val base = df.select(fam :+
+    // the refusal reads the DOUBLE cast: a fractional 0.5 value must
+    // REFUSE, not truncate to 0 and slip past (ADVICE r17)
+    val base = Refuse.rows(df.select(fam :+
         coalesce(block.cast("string"), lit("(null)")).as("__b") :+
         coalesce(treatment.cast("string"), lit("(null)")).as("__t") :+
         value.cast("long").as("__v") :+
         value.cast("double").as("__vd"): _*)
-      .filter(col("__v").isNotNull)
-      // one pass builds the cached cell table: every probe and both
-      // margin aggregations read the cache, and the tiny result is
+      .filter(col("__v").isNotNull),
+      (col("__vd") =!= 0d && col("__vd") =!= 1d) -> lit(
+        "cochranQ: a value is neither 0 nor 1 — not a binary design; " +
+          "threshold upstream"))
+      // one pass builds the cached cell table: the treatment census and
+      // both margin aggregations read the cache, and the tiny result is
       // eagerly checkpointed before the cache drops
       .persist()
     try {
-    // the probe reads the DOUBLE cast: a fractional 0.5 value must
-    // REFUSE, not truncate to 0 and slip past (ADVICE r17)
-    val nonBin = base.filter(col("__vd") =!= 0d && col("__vd") =!= 1d)
-      .limit(1).collect()
-    require(nonBin.isEmpty,
-      "cochranQ: a value is neither 0 nor 1 — not a binary design; " +
-        "threshold upstream")
-    val dup = base.groupBy(fam :+ col("__b") :+ col("__t"): _*)
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      "cochranQ: a block measures one treatment twice — ambiguous cell; " +
-        "aggregate upstream")
     val ks = base.select(fam :+ col("__t"): _*).distinct()
       .groupBy(fam: _*).agg(count(lit(1)).as("__k"))
     val tooMany = ks.filter(col("__k") > maxTreatments).limit(1).collect()
     require(tooMany.isEmpty,
       s"a family holds more than $maxTreatments treatments — a key-like " +
         "treatment column is not a design; bucket upstream")
-    val blockSizes = base.groupBy(fam :+ col("__b"): _*)
-      .agg(count(lit(1)).as("__bc"))
+    val blockSizes = blockCensus(base, fam, "cochranQ")
     val complete = base
       .join(blockSizes, families :+ "__b")
       .join(ks, families)
@@ -1098,25 +1091,21 @@ object RankStats {
       val w = bigW.toLong
       val base = df.select(fam :+
         coalesce(level.cast("string"), lit("(null)")).as("__l"): _*)
-      // the raw frame is scanned ONCE: the missing-level probe, the
-      // census, and the terms all read the cached cells
+      // the raw frame is scanned ONCE: the census and the terms both
+      // read the cached cells; both refusals fire in the checkpoint job
       val cells = base.groupBy(fam :+ col("__l"): _*)
         .agg(count(lit(1)).as("__o"))
         .persist()
       try {
-      val joined = cells.join(broadcast(refC), Seq("__l"), "left")
-      val missing = joined.filter(col("__w").isNull).limit(1).collect()
-      require(missing.isEmpty,
-        s"goodnessOfFit: observed level '${missing.headOption.map(
-          _.getString(0)).getOrElse("")}' is absent from the reference " +
-          "— an impossible event is a pipeline bug; fix the target or " +
-          "the data")
-      val tot = cells.groupBy(fam: _*).agg(sum(col("__o")).as("n"),
-        count(lit(1)).as("k_observed"))
-      val overN = tot.filter(col("n") > 3000000L).limit(1).collect()
-      require(overN.isEmpty,
-        "goodnessOfFit: a family exceeds 3e6 rows — the O²·W·1e12 " +
-          "DECIMAL budget; pre-aggregate or sample upstream")
+      val joined = Refuse.rows(cells.join(broadcast(refC), Seq("__l"), "left"),
+        col("__w").isNull -> concat(lit("goodnessOfFit: observed level '"),
+          col("__l"), lit("' is absent from the reference — an impossible " +
+            "event is a pipeline bug; fix the target or the data")))
+      val tot = Refuse.rows(cells.groupBy(fam: _*).agg(sum(col("__o")).as("n"),
+        count(lit(1)).as("k_observed")),
+        (col("n") > 3000000L) -> lit(
+          "goodnessOfFit: a family exceeds 3e6 rows — the O²·W·1e12 " +
+            "DECIMAL budget; pre-aggregate or sample upstream"))
       val terms = joined
         .join(tot.select(fam :+ col("n").as("__n"): _*), families)
         .withColumn("__t", expr(
@@ -1191,25 +1180,19 @@ object RankStats {
       exposure: Column, outcome: Column): DataFrame = {
     val d = DecimalType(38, 0)
     val fam = families.map(col)
-    val base = df.select(fam :+
+    // DOUBLE-cast check: fractional exposure/outcome REFUSES instead of
+    // truncating past the check (ADVICE r17, the cochranQ fix)
+    val base = Refuse.rows(df.select(fam :+
         coalesce(stratum.cast("string"), lit("(null)")).as("__s") :+
         exposure.cast("long").as("__e") :+
         outcome.cast("long").as("__o") :+
         exposure.cast("double").as("__ed") :+
         outcome.cast("double").as("__od"): _*)
-      .filter(col("__e").isNotNull && col("__o").isNotNull)
-    // DOUBLE-cast probe: fractional exposure/outcome REFUSES instead of
-    // truncating past the check (ADVICE r17, the cochranQ fix)
-    val nonBin = base.filter(
-        (col("__ed") =!= 0d && col("__ed") =!= 1d) ||
-        (col("__od") =!= 0d && col("__od") =!= 1d))
-      .limit(1).collect()
-    require(nonBin.isEmpty,
-      "cmhTest: exposure/outcome is neither 0 nor 1 — not a 2×2 design; " +
-        "threshold upstream")
-    // the raw frame is scanned twice (binary probe + collapse); the
-    // stratum-table cache feeds the terms, the budget probe, and the
-    // result, which is eagerly checkpointed before the cache drops
+      .filter(col("__e").isNotNull && col("__o").isNotNull),
+      ((col("__ed") =!= 0d && col("__ed") =!= 1d) ||
+        (col("__od") =!= 0d && col("__od") =!= 1d)) -> lit(
+        "cmhTest: exposure/outcome is neither 0 nor 1 — not a 2×2 design; " +
+          "threshold upstream"))
     val strata = base.groupBy(fam :+ col("__s"): _*)
       .agg(sum(when(col("__e") === 1 && col("__o") === 1, 1L)
             .otherwise(0L)).as("__a"),
@@ -1220,8 +1203,6 @@ object RankStats {
         sum(when(col("__e") === 0 && col("__o") === 0, 1L)
           .otherwise(0L)).as("__d"))
       .withColumn("__n", col("__a") + col("__b") + col("__c") + col("__d"))
-      .persist()
-    try {
     val terms = strata.select(fam ++ Seq(col("__a"), col("__n"),
       expr("""CASE WHEN __n >= 2 THEN
         |  CAST(((__a + __b) * CAST(__a + __c AS DECIMAL(38,0))
@@ -1257,11 +1238,9 @@ object RankStats {
         sum(col("__V")).as("__SV"),
         sum(col("__AD")).as("__SAD"),
         sum(col("__BC")).as("__SBC"))
-    val over = perFam.filter(col("n") > 1000000000L).limit(1).collect()
-    require(over.isEmpty,
-      "cmhTest: a family exceeds 1e9 rows — the n⁴·1e12 per-stratum " +
-        "DECIMAL budget; sample upstream")
-    perFam
+    Refuse.rows(perFam, (col("n") > 1000000000L) -> lit(
+        "cmhTest: a family exceeds 1e9 rows — the n⁴·1e12 per-stratum " +
+          "DECIMAL budget; sample upstream"))
       .withColumn("t_micro", when(col("__SV") > 0, expr(
         """CAST(round((CAST(CAST(sum_a AS DECIMAL(38,0)) * 1000000000000
           |    - __SE AS DOUBLE)
@@ -1275,7 +1254,6 @@ object RankStats {
       .select(fam :+ col("k_strata") :+ col("n") :+ col("sum_a") :+
         col("t_micro") :+ col("or_mh_micro"): _*)
       .localCheckpoint(true)
-    } finally strata.unpersist()
   }
 
   /** X154 — Jonckheere-Terpstra ordered-alternative test (Jonckheere,
@@ -1439,26 +1417,24 @@ object RankStats {
         coalesce(b.cast("string"), lit("(null)")).as("__b"): _*)
     val cells = base.groupBy(fam :+ col("__a") :+ col("__b"): _*)
       .agg(count(lit(1)).as("__o"))
-      // the raw frame is scanned ONCE: margins, the level probe, and
-      // the terms all read the cached cells; the per-family result is
-      // eagerly checkpointed before the cache drops
+      // the raw frame is scanned ONCE: margins and the terms all read
+      // the cached cells; the per-family result is eagerly checkpointed
+      // before the cache drops
       .persist()
     try {
     val rTot = cells.groupBy(fam :+ col("__a"): _*)
       .agg(sum(col("__o")).as("__r"))
     val cTot = cells.groupBy(fam :+ col("__b"): _*)
       .agg(sum(col("__o")).as("__c"))
-    val levels = rTot.groupBy(fam: _*)
+    val levels = Refuse.rows(rTot.groupBy(fam: _*)
       .agg(count(lit(1)).as("r_levels"), sum(col("__r")).as("n"))
       .join(cTot.groupBy(fam: _*).agg(count(lit(1)).as("c_levels")),
-        families)
-    val over = levels.filter(col("r_levels") > maxLevels ||
-        col("c_levels") > maxLevels || col("n") > 1000000000L)
-      .limit(1).collect()
-    require(over.isEmpty,
-      s"independenceTest: a family exceeds $maxLevels levels on an axis " +
-        "(a key-like column is not a category; bucket upstream) or 1e9 " +
-        "rows (the DECIMAL(38) cell-term budget)")
+        families),
+      (col("r_levels") > maxLevels || col("c_levels") > maxLevels ||
+        col("n") > 1000000000L) -> lit(
+        s"independenceTest: a family exceeds $maxLevels levels on an axis " +
+          "(a key-like column is not a category; bucket upstream) or 1e9 " +
+          "rows (the DECIMAL(38) cell-term budget)"))
     val terms = cells
       .join(rTot, families :+ "__a")
       .join(cTot, families :+ "__b")
@@ -1562,25 +1538,22 @@ object RankStats {
         // refusal below, not as an ANSI runtime cast error
         raw.select(fam :+ expr("try_cast(__ra AS LONG)").as("__a") :+
           expr("try_cast(__rb AS LONG)").as("__b"): _*)
-    // the raw frame is scanned ONCE: the probes, the margins, and the
-    // observed sum all read the cached cells
-    val cells = base.groupBy(fam :+ col("__a") :+ col("__b"): _*)
+    // the raw frame is scanned ONCE: the level census, the margins,
+    // and the observed sum all read the cached cells; the census probe
+    // below is the first job to read them, so the label refusals fire
+    // there
+    val collapsed = base.groupBy(fam :+ col("__a") :+ col("__b"): _*)
       .agg(count(lit(1)).as("__o"))
-      .persist()
-    try {
-      if (weightPower >= 1) {
-        val badCast = cells.filter(col("__a").isNull || col("__b").isNull)
-          .limit(1).collect()
-        require(badCast.isEmpty,
+    val cells = (if (weightPower >= 1) Refuse.rows(collapsed,
+        (col("__a").isNull || col("__b").isNull) -> lit(
           "cohenKappa: a label does not cast to an integer — ordinal " +
             "disagreement weights need an ordinal scale; use " +
-            "weightPower = 0 for categorical labels")
-        val badMag = cells.filter(abs(col("__a")) > 1000000L ||
-            abs(col("__b")) > 1000000L).limit(1).collect()
-        require(badMag.isEmpty,
+            "weightPower = 0 for categorical labels"),
+        (abs(col("__a")) > 1000000L || abs(col("__b")) > 1000000L) -> lit(
           "cohenKappa: |label| > 1e6 — the (i-j)^2 DECIMAL budget; " +
-            "re-index the scale upstream")
-      }
+            "re-index the scale upstream"))
+      else collapsed).persist()
+    try {
       val w: (Column, Column) => Column = weightPower match {
         case 0 => (x, y) => when(x === y, lit(0L)).otherwise(lit(1L))
         case 1 => (x, y) => abs(x - y)
@@ -1665,31 +1638,26 @@ object RankStats {
       score: Column, label: Column): DataFrame = {
     val d = DecimalType(38, 0)
     val fam = families.map(col)
-    // the refusal probe reads a DOUBLE cast of the raw label, not the
+    // the refusal reads a DOUBLE cast of the raw label, not the
     // truncating long cast — a fractional 0.5/1.9 label must REFUSE
     // per the stated contract, not silently truncate to 0/1 (ADVICE r17)
-    val base = df.select(fam :+ score.as("__s") :+
+    val base = Refuse.rows(df.select(fam :+ score.as("__s") :+
         label.cast("long").as("__y") :+
         label.cast("double").as("__yd"): _*)
-      .filter(col("__s").isNotNull && col("__y").isNotNull)
-    val cells = base.groupBy(fam :+ col("__s"): _*)
-      .agg(count(lit(1)).as("__n"),
-        sum(col("__y")).as("__tp"),
-        sum(when(col("__yd") === 0d || col("__yd") === 1d, 0L)
-          .otherwise(1L)).as("__bad"))
-      .persist()
-    try {
-      val badLbl = cells.filter(col("__bad") > 0).limit(1).collect()
-      require(badLbl.isEmpty,
+      .filter(col("__s").isNotNull && col("__y").isNotNull),
+      !coalesce(col("__yd") === 0d || col("__yd") === 1d, lit(false)) -> lit(
         "averagePrecision: label must be exactly 0/1 or boolean — " +
           "threshold upstream; a silent truthiness coercion would move " +
-          "the statistic without saying so")
-      val tot = cells.groupBy(fam: _*)
-        .agg(sum(col("__n")).as("n"), sum(col("__tp")).as("n_pos"))
-      val over = tot.filter(col("n") > 1000000000000L).limit(1).collect()
-      require(over.isEmpty,
-        "averagePrecision: a family exceeds 1e12 rows — the pico term " +
-          "DECIMAL(38) budget")
+          "the statistic without saying so"))
+    val cells = base.groupBy(fam :+ col("__s"): _*)
+      .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__tp"))
+      .persist()
+    try {
+      val tot = Refuse.rows(cells.groupBy(fam: _*)
+        .agg(sum(col("__n")).as("n"), sum(col("__tp")).as("n_pos")),
+        (col("n") > 1000000000000L) -> lit(
+          "averagePrecision: a family exceeds 1e12 rows — the pico term " +
+            "DECIMAL(38) budget"))
       val w = Window.partitionBy(fam: _*).orderBy(col("__s").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val terms = cells
@@ -1772,54 +1740,47 @@ object RankStats {
       val unitAgg = cells.groupBy(fam :+ col("__u"): _*)
         .agg(sum(col("__nij")).as("__r"),
           sum((col("__nij").cast(d) * col("__nij"))).as("__s2"))
-      val famN = unitAgg.groupBy(fam: _*)
+      val famN = Refuse.rows(unitAgg.groupBy(fam: _*)
         .agg(count(lit(1)).as("n_units"),
           min(col("__r")).as("__n"), max(col("__r")).as("__nmax"),
-          sum(col("__s2")).as("__S2"))
-        .persist()
-      try {
-        val uneven = famN.filter(col("__n") =!= col("__nmax"))
-          .limit(1).collect()
-        require(uneven.isEmpty,
+          sum(col("__s2")).as("__S2")),
+        (col("__n") =!= col("__nmax")) -> lit(
           "fleissKappa: units carry unequal rating counts — the " +
             "classical design needs a constant panel size per unit; " +
             "drop or impute upstream (silent reweighting would move " +
-            "the statistic)")
-        val over = famN.filter(col("__n") > 1000L ||
-            col("n_units") * col("__n") > 1000000000L).limit(1).collect()
-        require(over.isEmpty,
+            "the statistic)"),
+        (col("__n") > 1000L || col("n_units") * col("__n") > 1000000000L) -> lit(
           "fleissKappa: more than 1000 raters per unit or 1e9 total " +
-            "ratings per family — the A·(Nn)² DECIMAL(38) budget")
-        val catAgg = cells.groupBy(fam :+ col("__cat"): _*)
-          .agg(sum(col("__nij")).as("__cj"))
-        val famB = catAgg.groupBy(fam: _*)
-          .agg(sum((col("__cj").cast(d) * col("__cj"))).as("__B"),
-            count(lit(1)).as("k_categories"))
-        famN.join(famB, families.toSeq)
-          .withColumn("__Nn", (col("n_units").cast(d) * col("__n")))
-          .withColumn("__A", col("__S2") - col("__Nn"))
-          .withColumn("pbar_micro", when(col("__n") >= 2, expr(
-            """CAST((__A * 1000000 - (__A * 1000000)
-              |  % (__Nn * (__n - 1))) / (__Nn * (__n - 1))
-              | AS BIGINT)""".stripMargin)))
-          .withColumn("pe_micro", expr(
-            """CAST((__B * 1000000 - (__B * 1000000) % (__Nn * __Nn))
-              | / (__Nn * __Nn) AS BIGINT)""".stripMargin))
-          .withColumn("kappa_micro",
-            when(col("__n") >= 2 && col("__Nn") * col("__Nn") > col("__B"),
-              expr(
-                """CAST(((__A * __Nn * __Nn - __B * __Nn * (__n - 1))
-                  |    * 1000000
-                  |  - ((__A * __Nn * __Nn - __B * __Nn * (__n - 1))
-                  |    * 1000000)
-                  |    % (__Nn * (__n - 1) * (__Nn * __Nn - __B)))
-                  | / (__Nn * (__n - 1) * (__Nn * __Nn - __B))
-                  | AS BIGINT)""".stripMargin)))
-          .select(fam :+ col("n_units") :+ col("__n").as("n_raters") :+
-            col("k_categories") :+ col("pbar_micro") :+ col("pe_micro") :+
-            col("kappa_micro"): _*)
-          .localCheckpoint(true)
-      } finally famN.unpersist()
+            "ratings per family — the A·(Nn)² DECIMAL(38) budget"))
+      val catAgg = cells.groupBy(fam :+ col("__cat"): _*)
+        .agg(sum(col("__nij")).as("__cj"))
+      val famB = catAgg.groupBy(fam: _*)
+        .agg(sum((col("__cj").cast(d) * col("__cj"))).as("__B"),
+          count(lit(1)).as("k_categories"))
+      famN.join(famB, families.toSeq)
+        .withColumn("__Nn", (col("n_units").cast(d) * col("__n")))
+        .withColumn("__A", col("__S2") - col("__Nn"))
+        .withColumn("pbar_micro", when(col("__n") >= 2, expr(
+          """CAST((__A * 1000000 - (__A * 1000000)
+            |  % (__Nn * (__n - 1))) / (__Nn * (__n - 1))
+            | AS BIGINT)""".stripMargin)))
+        .withColumn("pe_micro", expr(
+          """CAST((__B * 1000000 - (__B * 1000000) % (__Nn * __Nn))
+            | / (__Nn * __Nn) AS BIGINT)""".stripMargin))
+        .withColumn("kappa_micro",
+          when(col("__n") >= 2 && col("__Nn") * col("__Nn") > col("__B"),
+            expr(
+              """CAST(((__A * __Nn * __Nn - __B * __Nn * (__n - 1))
+                |    * 1000000
+                |  - ((__A * __Nn * __Nn - __B * __Nn * (__n - 1))
+                |    * 1000000)
+                |    % (__Nn * (__n - 1) * (__Nn * __Nn - __B)))
+                | / (__Nn * (__n - 1) * (__Nn * __Nn - __B))
+                | AS BIGINT)""".stripMargin)))
+        .select(fam :+ col("n_units") :+ col("__n").as("n_raters") :+
+          col("k_categories") :+ col("pbar_micro") :+ col("pe_micro") :+
+          col("kappa_micro"): _*)
+        .localCheckpoint(true)
     } finally cells.unpersist()
   }
 
@@ -1863,28 +1824,24 @@ object RankStats {
       s"buckets must be in [2, 1000], got $buckets")
     val d = DecimalType(38, 0)
     val fam = families.map(col)
-    // DOUBLE-cast probe so fractional labels REFUSE instead of
+    // DOUBLE-cast check so fractional labels REFUSE instead of
     // truncating past the check (ADVICE r17, the averagePrecision fix)
-    val base = df.select(fam :+ score.as("__s") :+
+    val base = Refuse.rows(df.select(fam :+ score.as("__s") :+
         label.cast("long").as("__y") :+
         label.cast("double").as("__yd"): _*)
-      .filter(col("__s").isNotNull && col("__y").isNotNull)
+      .filter(col("__s").isNotNull && col("__y").isNotNull),
+      !coalesce(col("__yd") === 0d || col("__yd") === 1d, lit(false)) -> lit(
+        "gainsTable: label must be exactly 0/1 or boolean — threshold " +
+          "upstream"))
     val cells = base.groupBy(fam :+ col("__s"): _*)
-      .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__tp"),
-        sum(when(col("__yd") === 0d || col("__yd") === 1d, 0L)
-          .otherwise(1L)).as("__bad"))
+      .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__tp"))
       .persist()
     try {
-      val badLbl = cells.filter(col("__bad") > 0).limit(1).collect()
-      require(badLbl.isEmpty,
-        "gainsTable: label must be exactly 0/1 or boolean — threshold " +
-          "upstream")
-      val tot = cells.groupBy(fam: _*)
-        .agg(sum(col("__n")).as("__N"), sum(col("__tp")).as("__P"))
-      val over = tot.filter(col("__N") > 1000000000000L).limit(1).collect()
-      require(over.isEmpty,
-        "gainsTable: a family exceeds 1e12 rows — the pico term " +
-          "DECIMAL(38) budget")
+      val tot = Refuse.rows(cells.groupBy(fam: _*)
+        .agg(sum(col("__n")).as("__N"), sum(col("__tp")).as("__P")),
+        (col("__N") > 1000000000000L) -> lit(
+          "gainsTable: a family exceeds 1e12 rows — the pico term " +
+            "DECIMAL(38) budget"))
       val w = Window.partitionBy(fam: _*).orderBy(col("__s").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cum = cells

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Refuse
+
 /** X90 — grid-bucketed proximity join: all point pairs within a radius,
   * without the cross product. The spatial primitive behind store/POI
   * conflation, sensor-cluster detection, GPS-trace co-location — and the
@@ -41,15 +43,16 @@ object Spatial {
     require(radius >= 1, s"radius must be positive, got $radius")
     require(radius <= 1000000000L,
       s"radius $radius exceeds the exact-Long distance budget (1e9)")
-    val pts = points.select(id.as("__id"), x.cast("long").as("__x"),
+    // both join sides read every point (a broadcast build or a shuffle),
+    // so the refusal fires on any read of the pairs
+    val pts = Refuse.rows(points.select(id.as("__id"), x.cast("long").as("__x"),
         y.cast("long").as("__y"))
       .filter(col("__id").isNotNull && col("__x").isNotNull &&
-        col("__y").isNotNull)
-    val neg = pts.filter(col("__x") < 0 || col("__y") < 0).limit(1).collect()
-    require(neg.isEmpty,
-      "proximityJoin: negative coordinate found — shift to non-negative " +
-        "units upstream (truncating DIV must be a floor for the cell " +
-        "neighborhood argument to hold)")
+        col("__y").isNotNull),
+      (col("__x") < 0 || col("__y") < 0) -> lit(
+        "proximityJoin: negative coordinate found — shift to non-negative " +
+          "units upstream (truncating DIV must be a floor for the cell " +
+          "neighborhood argument to hold)"))
     val homed = pts
       .withColumn("__cx", expr(s"__x DIV ${radius}L"))
       .withColumn("__cy", expr(s"__y DIV ${radius}L"))
@@ -71,6 +74,19 @@ object Spatial {
       .filter(col("d2") <= radius * radius)
       .select(col("id_a"), col("id_b"), col("d2"))
   }
+
+  /** The polygon-side refusals of both containment joins, one CASE over
+    * the bbox frame: a negative coordinate, then a bbox wider than
+    * `maxCells` grid cells. Every read of the join builds or shuffles the
+    * polygon cells, so it reads every polygon. */
+  private def polygonRules(bbox: DataFrame, op: String, cellSize: Long,
+      maxCells: Long, tooWide: String): DataFrame =
+    Refuse.rows(bbox,
+      (col("__xmin") < 0 || col("__ymin") < 0) -> lit(
+        s"$op: negative polygon coordinate — shift to non-negative units upstream"),
+      ((expr(s"__xmax DIV ${cellSize}L") - expr(s"__xmin DIV ${cellSize}L") + 1) *
+        (expr(s"__ymax DIV ${cellSize}L") - expr(s"__ymin DIV ${cellSize}L") + 1)
+        > maxCells) -> lit(tooWide))
 
   /** X95 — point-in-polygon containment test, exact integer ray casting:
     * the other half of the geo story [[proximityJoin]] started and the
@@ -157,21 +173,13 @@ object Spatial {
     val negP = p.filter(col("__px") < 0 || col("__py") < 0).limit(1).collect()
     require(negP.isEmpty, "containsJoin: negative point coordinate — " +
       "shift to non-negative units upstream")
-    val g = polys.select(gid.as("poly_id"), poly.as("__poly"))
+    val bbox = polys.select(gid.as("poly_id"), poly.as("__poly"))
       .filter(col("poly_id").isNotNull && size(col("__poly")) >= 3)
       .withColumn("__xmin", array_min(transform(col("__poly"), _.getField("x"))))
       .withColumn("__xmax", array_max(transform(col("__poly"), _.getField("x"))))
       .withColumn("__ymin", array_min(transform(col("__poly"), _.getField("y"))))
       .withColumn("__ymax", array_max(transform(col("__poly"), _.getField("y"))))
-    val negG = g.filter(col("__xmin") < 0 || col("__ymin") < 0)
-      .limit(1).collect()
-    require(negG.isEmpty, "containsJoin: negative polygon coordinate — " +
-      "shift to non-negative units upstream")
-    val tooWide = g.filter(
-      (expr(s"__xmax DIV ${cellSize}L") - expr(s"__xmin DIV ${cellSize}L") + 1) *
-        (expr(s"__ymax DIV ${cellSize}L") - expr(s"__ymin DIV ${cellSize}L") + 1)
-        > maxCellsPerPoly).limit(1).collect()
-    require(tooWide.isEmpty,
+    val g = polygonRules(bbox, "containsJoin", cellSize, maxCellsPerPoly,
       s"containsJoin: a polygon's bbox covers more than $maxCellsPerPoly " +
         s"cells at cellSize=$cellSize — raise cellSize (cells are a " +
         "prefilter, not a precision knob)")
@@ -215,7 +223,7 @@ object Spatial {
     val negP = p.filter(col("__px") < 0 || col("__py") < 0).limit(1).collect()
     require(negP.isEmpty, "containsJoinRings: negative point coordinate — " +
       "shift to non-negative units upstream")
-    val g = polys.select(gid.as("poly_id"), rings.as("__rings"))
+    val bbox = polys.select(gid.as("poly_id"), rings.as("__rings"))
       .filter(col("poly_id").isNotNull && size(col("__rings")) >= 1)
       .withColumn("__flat", flatten(col("__rings")))
       .filter(size(col("__flat")) >= 3)
@@ -224,15 +232,7 @@ object Spatial {
       .withColumn("__ymin", array_min(transform(col("__flat"), _.getField("y"))))
       .withColumn("__ymax", array_max(transform(col("__flat"), _.getField("y"))))
       .drop("__flat")
-    val negG = g.filter(col("__xmin") < 0 || col("__ymin") < 0)
-      .limit(1).collect()
-    require(negG.isEmpty, "containsJoinRings: negative polygon coordinate — " +
-      "shift to non-negative units upstream")
-    val tooWide = g.filter(
-      (expr(s"__xmax DIV ${cellSize}L") - expr(s"__xmin DIV ${cellSize}L") + 1) *
-        (expr(s"__ymax DIV ${cellSize}L") - expr(s"__ymin DIV ${cellSize}L") + 1)
-        > maxCellsPerPoly).limit(1).collect()
-    require(tooWide.isEmpty,
+    val g = polygonRules(bbox, "containsJoinRings", cellSize, maxCellsPerPoly,
       s"containsJoinRings: a polygon's bbox covers more than " +
         s"$maxCellsPerPoly cells at cellSize=$cellSize — raise cellSize " +
         "(cells are a prefilter, not a precision knob)")

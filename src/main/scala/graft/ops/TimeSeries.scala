@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.StepTable
+import graft.core.{Refuse, StepTable}
 import graft.core.StepTable.{Broken, Duplicate, Gap}
 
 /** Time-series densification (SURVEY.md §2.7 adjunct): aggregate per
@@ -305,13 +305,12 @@ object TimeSeries {
     require(hMicro > 0, s"hMicro must be positive, got $hMicro")
     val missing = (keys ++ (tsCol +: tieBreak)).filterNot(df.columns.contains)
     require(missing.isEmpty, s"column(s) not in frame: ${missing.mkString(",")}")
-    val nullProbe = df.filter(value.isNull).limit(1).collect()
-    require(nullProbe.isEmpty,
-      "cusum: NULL value found — a NULL gap would silently reset the " +
-        "statistic; impute (locf) or filter explicitly upstream")
     val w = keyedWindow(keys, tsCol, tieBreak).rowsBetween(Long.MinValue, 0)
     val p = sum(round(value * 1e6).cast("long") - lit(kMicro)).over(w)
-    df.withColumn("__p", p)
+    Refuse.rows(df, value.isNull -> lit(
+        "cusum: NULL value found — a NULL gap would silently reset the " +
+          "statistic; impute (locf) or filter explicitly upstream"))
+      .withColumn("__p", p)
       .withColumn("s_micro",
         col("__p") - least(lit(0L), min(col("__p")).over(w)))
       .withColumn("alarm", col("s_micro") > hMicro)
@@ -332,8 +331,8 @@ object TimeSeries {
     * bit-identical in any engine (`epoch_us(ts) // …`), with none of the
     * locale/week-start ambiguity `date_trunc('week')` drags across
     * engines. Pre-1970 timestamps would make the dividend negative
-    * (floor-vs-truncate divergence), so they are REFUSED by a bounded
-    * probe rather than silently mis-bucketed.
+    * (floor-vs-truncate divergence), so they are REFUSED rather than
+    * silently mis-bucketed.
     *
     * Scale shape: first-event periods are one user-keyed aggregation
     * (map-side combinable min); activity is a distinct over (user,
@@ -346,13 +345,12 @@ object TimeSeries {
   def cohortRetention(events: DataFrame, user: Column, ts: Column,
       periodSec: Long): DataFrame = {
     require(periodSec > 0, s"periodSec must be positive, got $periodSec")
-    val ev = events
+    val ev = Refuse.rows(events
       .select(user.as("__u"), unix_micros(ts.cast("timestamp")).as("__us"))
-      .filter(col("__u").isNotNull && col("__us").isNotNull)
-    val probe = ev.filter(col("__us") < 0).limit(1).collect()
-    require(probe.isEmpty,
-      "cohortRetention: pre-1970 timestamp found — negative epoch micros " +
-        "floor-divide differently across engines; shift or filter upstream")
+      .filter(col("__u").isNotNull && col("__us").isNotNull),
+      (col("__us") < 0) -> lit(
+        "cohortRetention: pre-1970 timestamp found — negative epoch micros " +
+          "floor-divide differently across engines; shift or filter upstream"))
     val period = ev.select(col("__u"),
       expr(s"__us DIV ${periodSec * 1000000L}").as("__p"))
     retentionTriangle(period)
@@ -414,19 +412,18 @@ object TimeSeries {
     * calendar months/quarters/Monday weeks ([[calendarPeriod]]) instead
     * of absolute epoch buckets — the form every real dashboard asks for,
     * kept oracle-replayable by construction. Same contracts: pre-1970
-    * refused by a bounded probe, NULL users/timestamps dropped, same
+    * refused, NULL users/timestamps dropped, same
     * triangle pipeline and scale shape. */
   def cohortRetentionCalendar(events: DataFrame, user: Column, ts: Column,
       unit: String): DataFrame = {
-    val ev = events
+    val ev = Refuse.rows(events
       .select(user.as("__u"), unix_micros(ts.cast("timestamp")).as("__us"),
         calendarPeriod(ts, unit).as("__p"))
-      .filter(col("__u").isNotNull && col("__us").isNotNull)
-    val probe = ev.filter(col("__us") < 0).limit(1).collect()
-    require(probe.isEmpty,
-      "cohortRetentionCalendar: pre-1970 timestamp found — negative " +
-        "periods break the shared calendar arithmetic; shift or filter " +
-        "upstream")
+      .filter(col("__u").isNotNull && col("__us").isNotNull),
+      (col("__us") < 0) -> lit(
+        "cohortRetentionCalendar: pre-1970 timestamp found — negative " +
+          "periods break the shared calendar arithmetic; shift or filter " +
+          "upstream"))
     retentionTriangle(ev.select(col("__u"), col("__p")))
   }
 
@@ -462,19 +459,18 @@ object TimeSeries {
       valueMicro: Column, stepSec: Long): DataFrame = {
     require(stepSec >= 1, s"stepSec must be positive, got $stepSec")
     val stepUs = stepSec * 1000000L
-    val o = obs.select(keys.map(col) :+
+    val raw = obs.select(keys.map(col) :+
         unix_micros(col(tsCol).cast("timestamp")).as("__t") :+
         valueMicro.cast("long").as("__v"): _*)
       .filter(col("__t").isNotNull && col("__v").isNotNull)
-    val dup = o.groupBy(keys.map(col) :+ col("__t"): _*)
+    val dup = raw.groupBy(keys.map(col) :+ col("__t"): _*)
       .agg(count(lit(1)).as("__c")).filter(col("__c") > 1).limit(1).collect()
     require(dup.isEmpty,
       "interpolateGrid: duplicate (key, ts) observation — two values at " +
         "one instant make the blend ambiguous; aggregate upstream")
-    val pre = o.filter(col("__t") < 0).limit(1).collect()
-    require(pre.isEmpty,
+    val o = Refuse.rows(raw, (col("__t") < 0) -> lit(
       "interpolateGrid: pre-1970 timestamp — negative epoch micros align " +
-        "grid instants differently across engines; shift or filter upstream")
+        "grid instants differently across engines; shift or filter upstream"))
     // each key's grid: step-aligned instants covering [min, max]; a key
     // whose range straddles no aligned instant contributes nothing
     val grid = o.groupBy(keys.map(col): _*)
@@ -544,13 +540,12 @@ object TimeSeries {
       windowDays: Int): DataFrame = {
     require(windowDays >= 1 && windowDays <= 400,
       s"windowDays must be in [1, 400], got $windowDays")
-    val ev = events
+    val ev = Refuse.rows(events
       .select(key.as("__k"), unix_micros(ts.cast("timestamp")).as("__us"))
-      .filter(col("__k").isNotNull && col("__us").isNotNull)
-    val pre = ev.filter(col("__us") < 0).limit(1).collect()
-    require(pre.isEmpty,
-      "rollingActive: pre-1970 timestamp — negative epoch micros " +
-        "floor-divide differently across engines; shift or filter upstream")
+      .filter(col("__k").isNotNull && col("__us").isNotNull),
+      (col("__us") < 0) -> lit(
+        "rollingActive: pre-1970 timestamp — negative epoch micros " +
+          "floor-divide differently across engines; shift or filter upstream"))
     val kd = ev.select(col("__k"),
       expr("__us DIV 86400000000").as("__d")).distinct()
     val observed = kd.select(col("__d").as("day")).distinct()
@@ -583,13 +578,12 @@ object TimeSeries {
     require(windowDays >= 1 && windowDays <= 400,
       s"windowDays must be in [1, 400], got $windowDays")
     require(lgK >= 4 && lgK <= 21, s"lgK must be in [4, 21], got $lgK")
-    val ev = events
+    val ev = Refuse.rows(events
       .select(key.as("__k"), unix_micros(ts.cast("timestamp")).as("__us"))
-      .filter(col("__k").isNotNull && col("__us").isNotNull)
-    val pre = ev.filter(col("__us") < 0).limit(1).collect()
-    require(pre.isEmpty,
-      "rollingActiveSketch: pre-1970 timestamp — negative epoch micros " +
-        "floor-divide differently across engines; shift or filter upstream")
+      .filter(col("__k").isNotNull && col("__us").isNotNull),
+      (col("__us") < 0) -> lit(
+        "rollingActiveSketch: pre-1970 timestamp — negative epoch micros " +
+          "floor-divide differently across engines; shift or filter upstream"))
     val daily = ev.select(col("__k"), expr("__us DIV 86400000000").as("__d"))
       .groupBy("__d")
       .agg(hll_sketch_agg(col("__k"), lit(lgK)).as("__sk"))
@@ -1288,6 +1282,21 @@ object TimeSeries {
       }
   }
 
+  /** `base` `(__g, __p, …)` with the two series refusals of the lag
+    * operators, read off `lag(__p)` over `w` (the lead battery's own
+    * group/period window, so they add no sort): a repeated period (a
+    * duplicate sorts next to its twin), then a gap. */
+  private def consecutive(base: DataFrame,
+      w: org.apache.spark.sql.expressions.WindowSpec, op: String): DataFrame =
+    Refuse.rows(base.withColumn("__prev", lag(col("__p"), 1).over(w)),
+      (col("__p") === col("__prev")) -> lit(s"$op: duplicate (group, " +
+        "period) observation — two values make every lag product " +
+        "ambiguous; aggregate upstream"),
+      (col("__p") =!= col("__prev") + 1) -> lit(s"$op: non-consecutive " +
+        "periods — a gap silently shifts every lag alignment; densify or " +
+        "re-index upstream"))
+      .drop("__prev")
+
   /** X151 — sample autocorrelation function + Ljung-Box portmanteau
     * (Box & Jenkins 1970 §2.1; Ljung & Box, Biometrika 1978): the
     * white-noise diagnostic every forecast residual is published with —
@@ -1318,11 +1327,11 @@ object TimeSeries {
     * the seasonal-ring stance, REFUSED); a constant series (den = 0)
     * emits NULL r/lb ("not measurable", never 0); a group emits rows
     * only for lags it can support (k ≤ n−1); maxLag ≤ 100. Budget: the
-    * n²-scaled sums must fit DECIMAL(38,0), so a per-group probe
-    * refuses when 3·log₁₀(n) + 2·log₁₀(max|y|) > 36.5 (conservative —
+    * n²-scaled sums must fit DECIMAL(38,0), so a per-group refusal
+    * fires when 3·log₁₀(n) + 2·log₁₀(max|y|) > 36.5 (conservative —
     * rescale y or shorten the window upstream).
     *
-    * Scale shape: probes, then ONE per-group window sort producing all
+    * Scale shape: ONE per-group window sort producing all
     * maxLag lead columns at once (posexplode stacks them — lag never
     * re-sorts), one (group, lag)-keyed aggregation with map-side
     * combine, one group-keyed stats aggregation, a broadcast-sized
@@ -1334,38 +1343,25 @@ object TimeSeries {
       s"maxLag must be in [1, 100], got $maxLag")
     val d = org.apache.spark.sql.types.DecimalType(38, 0)
     val base = series(df, group, period, valueMicro)
-      // one pass over the caller's frame: both probes, the stats
-      // aggregation, and the lead battery read the cache; the per-lag
-      // result is eagerly checkpointed before the cache drops
+      // one pass over the caller's frame: the stats aggregation and the
+      // lead battery read the cache; the per-lag result is eagerly
+      // checkpointed before the cache drops, and every refusal fires in
+      // that job
       .persist()
     try {
-    val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      "acfLjungBox: duplicate (group, period) observation — two values " +
-        "make every lag product ambiguous; aggregate upstream")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__g").orderBy("__p")
-    val gap = base.withColumn("__prev", lag(col("__p"), 1).over(w))
-      .filter(col("__prev").isNotNull && col("__p") =!= col("__prev") + 1)
-      .limit(1).collect()
-    require(gap.isEmpty,
-      "acfLjungBox: non-consecutive periods — a gap silently shifts " +
-        "every lag alignment; densify or re-index upstream")
-    val stats = base.groupBy("__g")
+    val stats = Refuse.rows(base.groupBy("__g")
       .agg(count(lit(1)).as("__n"),
         sum(col("__y").cast(d)).as("__S"),
         sum(col("__y").cast(d) * col("__y")).as("__S2"),
-        max(abs(col("__y"))).as("__m"))
-    val over = stats.filter(expr(
-        "3 * log10(CAST(__n AS DOUBLE)) " +
-          "+ 2 * log10(CAST(greatest(__m, 1) AS DOUBLE)) > 36.5"))
-      .limit(1).collect()
-    require(over.isEmpty,
-      "acfLjungBox: a group's n³·max|y|² exceeds the DECIMAL(38) budget " +
-        "for the n²-scaled sums — rescale y or shorten the window " +
-        "upstream")
-    val leads = base.withColumn("__ls",
+        max(abs(col("__y"))).as("__m")),
+      expr("3 * log10(CAST(__n AS DOUBLE)) " +
+        "+ 2 * log10(CAST(greatest(__m, 1) AS DOUBLE)) > 36.5") -> lit(
+        "acfLjungBox: a group's n³·max|y|² exceeds the DECIMAL(38) budget " +
+          "for the n²-scaled sums — rescale y or shorten the window " +
+          "upstream"))
+    val leads = consecutive(base, w, "acfLjungBox").withColumn("__ls",
       array((1 to maxLag).map(k => lead(col("__y"), k).over(w)): _*))
     val pairs = leads
       .select(col("__g"), col("__y"),
@@ -1542,9 +1538,9 @@ object TimeSeries {
     * Rules, each STATED: a row missing EITHER value drops whole (the
     * series must stay aligned); duplicate (group, period) REFUSES;
     * non-consecutive periods REFUSE (a gap silently shifts every
-    * alignment — the [[acfLjungBox]] stance); per-group budget probe
-    * refuses n³·max(|x|,|y|)² past the DECIMAL(38) headroom; lags emit
-    * only where the overlap is non-empty (|k| ≤ n−1).
+    * alignment — the [[acfLjungBox]] stance); a per-group budget
+    * refusal fires at n³·max(|x|,|y|)² past the DECIMAL(38) headroom;
+    * lags emit only where the overlap is non-empty (|k| ≤ n−1).
     *
     * Scale shape: ONE per-group window sort emits BOTH lead batteries
     * at once (posexplode stacks — no per-lag re-sort, no self-join),
@@ -1563,22 +1559,9 @@ object TimeSeries {
         col("__y").isNotNull)
       .persist()
     try {
-      val dup = base.groupBy("__g", "__p").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        "crossCorrelation: duplicate (group, period) observation — " +
-          "two values make every lag product ambiguous; aggregate " +
-          "upstream")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("__g").orderBy("__p")
-      val gap = base.withColumn("__prev", lag(col("__p"), 1).over(w))
-        .filter(col("__prev").isNotNull &&
-          col("__p") =!= col("__prev") + 1)
-        .limit(1).collect()
-      require(gap.isEmpty,
-        "crossCorrelation: non-consecutive periods — a gap silently " +
-          "shifts every lag alignment; densify or re-index upstream")
-      val stats = base.groupBy("__g")
+      val stats = Refuse.rows(base.groupBy("__g")
         .agg(count(lit(1)).as("__n"),
           sum(col("__x").cast(d)).as("__Sx"),
           sum(col("__y").cast(d)).as("__Sy"),
@@ -1586,15 +1569,12 @@ object TimeSeries {
           sum(col("__y").cast(d) * col("__y")).as("__Syy"),
           sum(col("__x").cast(d) * col("__y")).as("__Sxy"),
           greatest(max(abs(col("__x"))), max(abs(col("__y"))))
-            .as("__m"))
-      val over = stats.filter(expr(
-          "3 * log10(CAST(__n AS DOUBLE)) " +
-            "+ 2 * log10(CAST(greatest(__m, 1) AS DOUBLE)) > 36.5"))
-        .limit(1).collect()
-      require(over.isEmpty,
-        "crossCorrelation: a group's n³·max|v|² exceeds the DECIMAL(38) " +
-          "budget for the n²-scaled sums — rescale or shorten upstream")
-      val leads = base
+            .as("__m")),
+        expr("3 * log10(CAST(__n AS DOUBLE)) " +
+          "+ 2 * log10(CAST(greatest(__m, 1) AS DOUBLE)) > 36.5") -> lit(
+          "crossCorrelation: a group's n³·max|v|² exceeds the DECIMAL(38) " +
+            "budget for the n²-scaled sums — rescale or shorten upstream"))
+      val leads = consecutive(base, w, "crossCorrelation")
         .withColumn("__ly",
           array((1 to maxLag).map(k => lead(col("__y"), k).over(w)): _*))
         .withColumn("__lx",

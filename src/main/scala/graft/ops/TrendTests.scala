@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Refuse
+
 /** X121/X122 — the nonparametric trend kit: Theil-Sen's robust slope
   * and the Mann-Kendall trend test, the standard pairing for "is this
   * metric drifting, and how fast, when I can't trust a least-squares
@@ -174,59 +176,54 @@ object TrendTests {
     val base = df.select(groups.map(col) :+ x.cast("long").as("__x") :+
         y.cast("long").as("__y"): _*)
       .filter(col("__x").isNotNull && col("__y").isNotNull)
-    val census = base.groupBy(groups.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .persist()
-    try {
-      val over = census.filter(col("n") > 1000000000L).limit(1).collect()
-      require(over.isEmpty,
+    val census = Refuse.rows(base.groupBy(groups.map(col): _*)
+      .agg(count(lit(1)).as("n")),
+      (col("n") > 1000000000L) -> lit(
         "pettitt: a group exceeds 1e9 points — |U| <= n² must fit the " +
-          "Long statistic; aggregate to coarser periods first")
-      val dup = base.groupBy(groups.map(col) :+ col("__x"): _*)
-        .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-        .limit(1).collect()
-      require(dup.isEmpty,
+          "Long statistic; aggregate to coarser periods first"))
+    val wv = w.partitionBy(groups.map(col): _*).orderBy(col("__y"))
+    val wn = w.partitionBy(groups.map(col): _*)
+    val wt = w.partitionBy(groups.map(col): _*).orderBy(col("__x"))
+    // a duplicate x sorts next to its twin in the time window
+    val u = Refuse.rows(base
+      .withColumn("__lt", count(lit(1))
+        .over(wv.rangeBetween(w.unboundedPreceding, -1)))
+      .withColumn("__le", count(lit(1))
+        .over(wv.rangeBetween(w.unboundedPreceding, 0)))
+      .withColumn("__nn", count(lit(1)).over(wn))
+      .withColumn("__term",
+        (col("__lt") + col("__le") + 1 - col("__nn") - 1).cast(d))
+      .withColumn("__u", sum(col("__term"))
+        .over(wt.rowsBetween(w.unboundedPreceding, w.currentRow)))
+      .withColumn("__rn", row_number().over(wt))
+      .withColumn("__px", lag(col("__x"), 1).over(wt)),
+      (col("__x") === col("__px")) -> lit(
         "pettitt: duplicate (group, x) observation — one value per " +
-          "time point; aggregate upstream")
-      val wv = w.partitionBy(groups.map(col): _*).orderBy(col("__y"))
-      val wn = w.partitionBy(groups.map(col): _*)
-      val wt = w.partitionBy(groups.map(col): _*).orderBy(col("__x"))
-      val u = base
-        .withColumn("__lt", count(lit(1))
-          .over(wv.rangeBetween(w.unboundedPreceding, -1)))
-        .withColumn("__le", count(lit(1))
-          .over(wv.rangeBetween(w.unboundedPreceding, 0)))
-        .withColumn("__nn", count(lit(1)).over(wn))
-        .withColumn("__term",
-          (col("__lt") + col("__le") + 1 - col("__nn") - 1).cast(d))
-        .withColumn("__u", sum(col("__term"))
-          .over(wt.rowsBetween(w.unboundedPreceding, w.currentRow)))
-        .withColumn("__rn", row_number().over(wt))
-        .filter(col("__rn") < col("__nn"))
-      val best = u.groupBy(groups.map(col): _*)
-        .agg(min(struct((-abs(col("__u"))).as("__negk"),
-          col("__x").as("__cx"))).as("__b"))
-        .select(groups.map(col) :+
-          (-col("__b.__negk")).cast("long").as("k_stat") :+
-          col("__b.__cx").as("change_x"): _*)
-      val joined = {
-        val rr = best.select(groups.zipWithIndex.map { case (g, i) =>
-          col(g).as(s"__j$i") } :+ col("k_stat") :+ col("change_x"): _*)
-        val cond = groups.zipWithIndex
-          .map { case (g, i) => census(g) <=> rr(s"__j$i") }.reduce(_ && _)
-        census.join(rr, cond, "left")
-          .drop(groups.indices.map(i => s"__j$i"): _*)
-      }
-      joined
-        .withColumn("p_micro", when(col("k_stat").isNotNull, least(
-          lit(1000000L),
-          round(lit(2e6) * exp(lit(-6.0) *
-            col("k_stat").cast("double") * col("k_stat").cast("double") /
-            (col("n").cast("double") * col("n") * col("n") +
-              col("n").cast("double") * col("n")))).cast("long"))))
-        .select(groups.map(col) :+ col("n") :+ col("k_stat") :+
-          col("change_x") :+ col("p_micro"): _*)
-        .localCheckpoint(true)
-    } finally census.unpersist()
+          "time point; aggregate upstream"))
+      .filter(col("__rn") < col("__nn"))
+    val best = u.groupBy(groups.map(col): _*)
+      .agg(min(struct((-abs(col("__u"))).as("__negk"),
+        col("__x").as("__cx"))).as("__b"))
+      .select(groups.map(col) :+
+        (-col("__b.__negk")).cast("long").as("k_stat") :+
+        col("__b.__cx").as("change_x"): _*)
+    val joined = {
+      val rr = best.select(groups.zipWithIndex.map { case (g, i) =>
+        col(g).as(s"__j$i") } :+ col("k_stat") :+ col("change_x"): _*)
+      val cond = groups.zipWithIndex
+        .map { case (g, i) => census(g) <=> rr(s"__j$i") }.reduce(_ && _)
+      census.join(rr, cond, "left")
+        .drop(groups.indices.map(i => s"__j$i"): _*)
+    }
+    joined
+      .withColumn("p_micro", when(col("k_stat").isNotNull, least(
+        lit(1000000L),
+        round(lit(2e6) * exp(lit(-6.0) *
+          col("k_stat").cast("double") * col("k_stat").cast("double") /
+          (col("n").cast("double") * col("n") * col("n") +
+            col("n").cast("double") * col("n")))).cast("long"))))
+      .select(groups.map(col) :+ col("n") :+ col("k_stat") :+
+        col("change_x") :+ col("p_micro"): _*)
+      .localCheckpoint(true)
   }
 }

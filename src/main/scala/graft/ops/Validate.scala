@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Refuse
+
 /** Declarative data-quality expectations — the validation pass every
   * data-preparation pipeline runs between load and transform (the reference
   * delegates this to ad-hoc SQL task bodies; here it is a first-class
@@ -202,13 +204,12 @@ object Validate {
     * strongest red flag there is). */
   def benfordAudit(df: DataFrame, groups: Seq[String],
       value: Column): DataFrame = {
-    val base = df.select(groups.map(col) :+ value.cast("long").as("__v"): _*)
-      .filter(col("__v").isNotNull)
-    val bad = base.filter(col("__v") <= 0).limit(1).collect()
-    require(bad.isEmpty,
-      "benfordAudit: non-positive value — Benford digits exist only for " +
-        "positive amounts; filter or shift upstream (silently dropping " +
-        "them would hide the corruption being audited)")
+    val base = Refuse.rows(df.select(groups.map(col) :+ value.cast("long").as("__v"): _*)
+      .filter(col("__v").isNotNull),
+      (col("__v") <= 0) -> lit(
+        "benfordAudit: non-positive value — Benford digits exist only for " +
+          "positive amounts; filter or shift upstream (silently dropping " +
+          "them would hide the corruption being audited)"))
     val digited = base.withColumn("__d",
       substring(col("__v").cast("string"), 1, 1).cast("int"))
     val counts = digited.groupBy(groups.map(col) :+ col("__d"): _*)

@@ -1073,10 +1073,9 @@ object Relational {
     // day +30, delta 2 re-versions every 20th at day +60 — so the second
     // merge closes rows the FIRST merge opened (key %20: original closed
     // at +30, R version closed at +60, S version open), which is the
-    // interval-chaining behavior a single-delta row can't observe. The
-    // second merge runs with validate=true, putting the eager
-    // key-uniqueness and interval-ordering guards on the driver-checked
-    // path too. The oracle rebuilds both merges in SQL.
+    // interval-chaining behavior a single-delta row can't observe. Both
+    // merges carry the in-plan key-uniqueness and interval-ordering
+    // refusals. The oracle rebuilds both merges in SQL.
     Q("q159_scd2_lifecycle",
       (s, dir) => {
         val orders = t(s, dir, "orders")
@@ -1093,7 +1092,7 @@ object Relational {
             (col("o_totalprice") * 1.2).as("o_totalprice"),
             (col("o_orderdate") + expr("INTERVAL 60 DAYS")).as("valid_from"))
         val v1 = graft.ops.Ops.scd2Merge(hist, delta1, Seq("o_orderkey"))
-        graft.ops.Ops.scd2Merge(v1, delta2, Seq("o_orderkey"), validate = true)
+        graft.ops.Ops.scd2Merge(v1, delta2, Seq("o_orderkey"))
           .orderBy("o_orderkey", "valid_from")
       },
       Some("""WITH d1 AS (

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Refuse
+
 /** Keyword retrieval over a document corpus (SURVEY.md §2.9 X4's retrieval
   * face): BM25 scoring, the standard lexical ranking function for corpus
   * curation ("find the documents most about X") and RAG-style recall.
@@ -142,22 +144,19 @@ object Retrieval {
       r.select(col(id), col("rank").cast("long").as("__r"),
         lit(i).as("__sys"))
     }
-    tagged.reduce(_ unionAll _)
+    val fused = tagged.reduce(_ unionAll _)
       .groupBy(col(id))
-      .agg(sum(expr(s"1000000 DIV ($k0 + __r)")).as("__rrf"),
+      .agg(sum(expr(s"1000000 DIV ($k0 + __r)")).as("rrf_micro"),
         count(lit(1)).as("__n"),
         expr("bit_count(bit_or(shiftleft(1L, __sys)))").cast("long")
           .as("n_systems"))
-      // duplicate-id conviction in the SAME pass: a ranking listing an id
-      // twice contributes two rows but one bit, so __n > n_systems
-      .select(col(id),
-        when(col("__n") === col("n_systems"), col("__rrf"))
-          .otherwise(raise_error(concat(
-            lit("rrfFuse: id "), col(id).cast("string"),
-            lit(" is listed more than once within a single ranking — "),
-            lit("each input must rank a document at most once"))))
-          .as("rrf_micro"),
-        col("n_systems"))
+    // duplicate-id conviction in the SAME pass: a ranking listing an id
+    // twice contributes two rows but one bit, so __n > n_systems
+    Refuse.rows(fused, (col("__n") =!= col("n_systems")) -> concat(
+        lit("rrfFuse: id "), col(id).cast("string"),
+        lit(" is listed more than once within a single ranking — "),
+        lit("each input must rank a document at most once")))
+      .select(col(id), col("rrf_micro"), col("n_systems"))
       .orderBy(col("rrf_micro").desc, col(id).asc)
       .limit(topK)
   }

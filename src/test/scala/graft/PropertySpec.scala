@@ -75,7 +75,7 @@ class PropertySpec extends SparkSpec {
   test("versioned Table: history is append-only, contiguous, and time travel is stable") {
     import spark.implicits._
     val t = graft.core.Table(spark,
-      java.nio.file.Files.createTempDirectory("graft-prop-vt").toString, "pv")
+      graft.core.Scratch.workDir("prop-vt").toString, "pv")
     val batchGen = Gen.listOfN(5, Gen.chooseNum(0, 1000))
     val batches = samples(batchGen, 6)
     val written = scala.collection.mutable.ArrayBuffer[Seq[Int]]()

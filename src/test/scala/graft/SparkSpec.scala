@@ -10,6 +10,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Runs `action`, which must throw, and asserts that one message on the
+    * exception's cause chain holds every one of `parts`. An in-plan
+    * refusal surfaces wrapped in the failed job's exception. */
+  def refused(parts: String*)(action: => Any): Exception = {
+    val e = intercept[Exception](action)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => parts.forall(String.valueOf(t.getMessage).contains)),
+      s"wrong error: $e")
+    e
+  }
 }
 
 object SparkSpec {

@@ -16,7 +16,7 @@ class CheckpointingSpec extends SparkSpec {
   import spark.implicits._
 
   private def reliableDir() =
-    java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    Scratch.workDir("ckpt").toString
 
   test("truncate cuts lineage in both modes") {
     val base = (1L to 100L).toDF("x")

@@ -15,7 +15,7 @@ class ParquetSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-parquet").toString
+    Scratch.workDir("parquet").toString
 
   private def inferred(paths: String*): StructType = spark.read.parquet(paths: _*).schema
 

@@ -3,6 +3,7 @@ package graft.core
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -14,7 +15,7 @@ import graft.SparkSpec
 class TableSpec extends SparkSpec {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft-table").toString
+    Scratch.workDir("table").toString
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType),
@@ -370,6 +371,32 @@ class TableSpec extends SparkSpec {
     // and the next real commit is unaffected
     assert(t.writeVersion(df(2 -> "b")) == 1L)
     assert(t.readLatest.count() == 1)
+  }
+
+  test("versioned handle: a write refused in its plan commits nothing and leaves no staging dir") {
+    // the cdcApply-into-writeVersion shape of the streaming CDC queries:
+    // the malformed-row refusal fires inside the write job
+    import spark.implicits._
+    val t = Table(spark, freshDir(), "refused")
+    t.writeVersion(Seq((1L, "a")).toDF("k", "v"))
+    val log = Seq((2L, "b", 1L, "Z")).toDF("k", "v", "seq", "op")
+    refused("malformed CDC log row (op 'Z', keys 2)")(t.writeVersion(
+      graft.ops.Ops.cdcApply(t.readLatest, log, Seq("k"), "seq", "op")))
+    assert(t.versions == Seq(0L))
+    assert(new java.io.File(t.versionsRoot).list().toSeq.sorted ==
+      Seq(new java.io.File(t.versionPath(0L)).getName))
+    // a refusal in the write's own tasks (no shuffle before it) fails
+    // after the write made its staging dir: the dir goes too
+    refused("refused-write")(t.writeVersion(Refuse.rows(
+      Seq((3L, "c")).toDF("k", "v"), (col("k") > 2) -> lit("refused-write"))))
+    assert(t.versions == Seq(0L))
+    assert(new java.io.File(t.versionsRoot).list().toSeq.sorted ==
+      Seq(new java.io.File(t.versionPath(0L)).getName))
+    // the next clean apply commits as version 1
+    val ok = Seq((2L, "b", 1L, "I")).toDF("k", "v", "seq", "op")
+    assert(t.writeVersion(
+      graft.ops.Ops.cdcApply(t.readLatest, ok, Seq("k"), "seq", "op")) == 1L)
+    assert(t.readLatest.count() == 2)
   }
 
   test("version manifests: timestamp, row count, schema fingerprint ride the commit") {

@@ -13,7 +13,7 @@ import graft.core.Table
 class IngestSpec extends SparkSpec {
 
   test("unzip extracts entries and rejects zip-slip (S1)") {
-    val dir = Files.createTempDirectory("graft-zip")
+    val dir = graft.core.Scratch.workDir("zip")
     val zip = dir.resolve("a.zip")
     val zos = new ZipOutputStream(new FileOutputStream(zip.toFile))
     zos.putNextEntry(new ZipEntry("data/f1.csv")); zos.write("id\n1\n".getBytes); zos.closeEntry()
@@ -31,7 +31,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("csvLoad parses with explicit schema into a parquet table (S2)") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = graft.core.Scratch.workDir("csv").toString
     Files.writeString(Paths.get(s"$dir/in.csv"), "id;name\n1;alpha\n2;\n")
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("name", StringType)))
@@ -43,7 +43,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("orcLoad round-trips an ORC export into a parquet table (S2)") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = graft.core.Scratch.workDir("orc").toString
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.orc(s"$dir/export.orc")
@@ -54,7 +54,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("parquetEvolvedLoad unions schema versions by name; mismatched types fail (S2)") {
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = graft.core.Scratch.workDir("evolve").toString
     import spark.implicits._
     // v1 batch: (id, name); v2 batch adds score — a reload must surface
     // score as null on v1 rows, binding by name, dropping nothing
@@ -74,7 +74,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("textLoad lands one row per line with file provenance; wholetext per file (S2)") {
-    val dir = Files.createTempDirectory("graft-txt").toString
+    val dir = graft.core.Scratch.workDir("txt").toString
     Files.writeString(Paths.get(s"$dir/corpus.txt"), "doc one\ndoc two\n")
     val t = Ingest.textLoad(spark, s"$dir/corpus.txt", Table(spark, dir, "lines"))
     val rows = t.read.orderBy("value").collect()
@@ -86,7 +86,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("jsonlLoad lands JSON-lines as a parquet table; corrupt lines survive (S2)") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = graft.core.Scratch.workDir("jsonl").toString
     Files.writeString(Paths.get(s"$dir/docs.jsonl"),
       """{"doc_id": 1, "text": "alpha"}
         |{"doc_id": 2, "text": "beta"}
@@ -104,7 +104,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("LoadSpec declarative config drives the load end to end (S2 embulk config)") {
-    val dir = Files.createTempDirectory("graft-spec").toString
+    val dir = graft.core.Scratch.workDir("spec").toString
     Files.writeString(Paths.get(s"$dir/in.csv"), "id|price|ok\n1|2.5|true\n2|0.5|false\n")
     val spec = Ingest.LoadSpec(
       path = s"$dir/in.csv", dir = dir, table = "landed",
@@ -143,7 +143,7 @@ class IngestSpec extends SparkSpec {
       buf.putInt(off + 8, 1); buf.putDouble(off + 12, x); buf.putDouble(off + 20, y)
       off += 8 + contentBytes
     }
-    val dir = Files.createTempDirectory("graft-shp")
+    val dir = graft.core.Scratch.workDir("shp")
     val shp = dir.resolve("pts.shp")
     Files.write(shp, buf.array())
 
@@ -179,7 +179,7 @@ class IngestSpec extends SparkSpec {
     pts.foreach { case (x, y) =>
       buf.putDouble(off, x); buf.putDouble(off + 8, y); off += 16
     }
-    val dir = Files.createTempDirectory("graft-shp-mp")
+    val dir = graft.core.Scratch.workDir("shp-mp")
     val shp = dir.resolve("mp.shp")
     Files.write(shp, buf.array())
 
@@ -242,7 +242,7 @@ class IngestSpec extends SparkSpec {
     parts.flatten.foreach { case (x, y) =>
       buf.putDouble(off, x); buf.putDouble(off + 8, y); off += 16
     }
-    val dir = Files.createTempDirectory("graft-shp-poly")
+    val dir = graft.core.Scratch.workDir("shp-poly")
     val shp = dir.resolve("poly.shp")
     Files.write(shp, buf.array())
     val row = Shapefile.read(spark, shp.toString).collect().head
@@ -262,7 +262,7 @@ class IngestSpec extends SparkSpec {
     buf.order(ByteOrder.BIG_ENDIAN)
     buf.putInt(100, 1); buf.putInt(104, content.length / 2)
     System.arraycopy(content, 0, buf.array(), 108, content.length)
-    val shp = Files.createTempDirectory("graft-shp-zm").resolve("one.shp")
+    val shp = graft.core.Scratch.workDir("shp-zm").resolve("one.shp")
     Files.write(shp, buf.array())
     shp.toString
   }

@@ -61,11 +61,7 @@ class JsonProfileSpec extends SparkSpec {
     // the empty-input refusal rides the plan: the call returns, the
     // action refuses
     val empty = JsonProfile.pathProfile(Seq.empty[String].toDF("j"), col("j"))
-    val ex = intercept[Exception](empty.collect())
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
-    assert(msgs(ex).exists(m => m != null && m.contains("pathProfile: empty input")),
-      s"wrong error: $ex")
+    refused("pathProfile: empty input")(empty.collect())
   }
 
   test("pathProfile: the call starts no Spark job") {

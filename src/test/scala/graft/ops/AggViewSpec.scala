@@ -31,7 +31,7 @@ class AggViewSpec extends SparkSpec {
   }
 
   test("ledger lifecycle: exactly-once commit, fold-as-re-aggregation, view ≡ direct") {
-    val dir = java.nio.file.Files.createTempDirectory("aggview").toString
+    val dir = graft.core.Scratch.workDir("aggview").toString
     def batch(i: Int) = fixture.filter(pmod(xxhash64(col("x")), lit(2)) === i)
     assert(AggView.commitSegment(spark, dir, "v", 0L, batch(0), Seq("g"), ms))
     assert(AggView.commitSegment(spark, dir, "v", 1L, batch(1), Seq("g"), ms))
@@ -61,7 +61,7 @@ class AggViewSpec extends SparkSpec {
     ).toDF("g", "x")
     val m = Seq(AggView.Measure("x", 2))
     val out = AggView.merge(AggView.partials(df, Seq("g"), m), Seq("g"), m)
-    val dir = java.nio.file.Files.createTempDirectory("aggview-null").toString
+    val dir = graft.core.Scratch.workDir("aggview-null").toString
     assert(AggView.commitSegment(spark, dir, "v", 0L, df, Seq("g"), m))
     val view = AggView.read(spark, dir, "v", Seq("g"), m)
       .orderBy("g").collect()
@@ -74,7 +74,7 @@ class AggViewSpec extends SparkSpec {
   }
 
   test("a schema-changing ledger fold is refused") {
-    val dir = java.nio.file.Files.createTempDirectory("aggview-fold").toString
+    val dir = graft.core.Scratch.workDir("aggview-fold").toString
     val tbl = graft.core.Table(spark, dir, "v")
     assert(tbl.ledgerAppendIfAbsent(0L, Seq((1, "a")).toDF("k", "s")))
     val e = intercept[IllegalArgumentException](

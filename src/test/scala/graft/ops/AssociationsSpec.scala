@@ -94,12 +94,12 @@ class AssociationsSpec extends SparkSpec {
         col("it"), 500000L)
       .as[(String, String, String, Long, Long, Long, Long)].collect().toSet
     assert(again == got)
-    intercept[IllegalArgumentException](Associations.tripleRules(
+    refused("item 'x+y' contains the pseudo-item separator '+'")(Associations.tripleRules(
       Seq((1L, "x+y"), (1L, "z")).toDF("bk", "it"), col("bk"), col("it"), 1L))
     // reliable-checkpoint mode (the cluster setting where a lost executor
     // must not kill the mine): byte-identical output via the same knob
     // Graph.pageRank threads through Checkpointing.truncate
-    val ckpt = java.nio.file.Files.createTempDirectory("triple-ckpt").toString
+    val ckpt = graft.core.Scratch.workDir("triple-ckpt").toString
     val reliable = Associations.tripleRules(df, col("bk"), col("it"),
         minSupportMicro = 500000L, checkpointDir = Some(ckpt))
       .as[(String, String, String, Long, Long, Long, Long)].collect().toSet

@@ -8,7 +8,7 @@ class BloomSkipSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.core.Scratch.workDir(prefix).toString
 
   /** Four single-file shards with disjoint key ranges. */
   private def writeShards(dataDir: String): Unit =

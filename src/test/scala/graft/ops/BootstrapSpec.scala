@@ -78,9 +78,8 @@ class BootstrapSpec extends SparkSpec {
       Bootstrap.meanCI(df, col("id"), col("v"), 50, ""))
     val withNull = Seq((Some(1L), Some(1.0)), (Some(2L), None))
       .toDF("id", "v")
-    val e = intercept[IllegalArgumentException](
+    refused("NULL id or value")(
       Bootstrap.meanCI(withNull, col("id"), col("v"), 50, "s"))
-    assert(e.getMessage.contains("NULL id or value"))
     // a 1-row corpus all but surely draws a zero-weight replicate
     val tiny = Seq((1L, 1.0)).toDF("id", "v")
     val z = intercept[IllegalArgumentException](

@@ -59,10 +59,9 @@ class CalibrateSpec extends SparkSpec {
   }
 
   test("guards: label domain, bucket cap, empty input, null handling") {
-    val e = intercept[IllegalArgumentException](
+    refused("labels must be 0/1, found 2")(
       Calibrate.isotonicCalibrate(Seq((1, 2)).toDF("sc", "l"),
         col("sc"), col("l")))
-    assert(e.getMessage.contains("labels must be 0/1"))
     val cap = intercept[IllegalArgumentException](
       Calibrate.isotonicCalibrate(
         (1 to 10).map(i => (i, 1)).toDF("sc", "l"),
@@ -256,17 +255,16 @@ class CalibrateSpec extends SparkSpec {
     assert(perfect == Seq(("f", 0L, 1L, 0L, 0L, 0L, 0L),
       ("f", 9L, 1L, 1000000L, 1000000L, 0L, 0L)), s"got $perfect")
     // out-of-range probability and non-binary label refuse
-    val e1 = intercept[IllegalArgumentException](
+    refused("pipeline bug")(
       Calibrate.calibrationReport(
         Seq(("f", 1200000L, 1L)).toDF("fam", "p", "y"), Seq("fam"),
         col("p"), col("y")).collect())
-    assert(e1.getMessage.contains("pipeline bug"))
-    intercept[IllegalArgumentException](Calibrate.calibrationReport(
+    refused("pipeline bug")(Calibrate.calibrationReport(
       Seq(("f", 500000L, 2L)).toDF("fam", "p", "y"), Seq("fam"),
       col("p"), col("y")).collect())
     // a FRACTIONAL label refuses too — it must not truncate to 0/1 and
-    // slip past the probe (ADVICE r17)
-    intercept[IllegalArgumentException](Calibrate.calibrationReport(
+    // slip past the refusal (ADVICE r17)
+    refused("pipeline bug")(Calibrate.calibrationReport(
       Seq(("f", 500000L, 0.5)).toDF("fam", "p", "y"), Seq("fam"),
       col("p"), col("y")).collect())
     // determinism under repartition

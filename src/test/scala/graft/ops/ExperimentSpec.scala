@@ -101,7 +101,7 @@ class ExperimentSpec extends SparkSpec {
       (None, Some(9L))).toDF("x", "y")
     assert(Experiment.cupedAdjust(withNull, col("y"), col("x"))
       .filter(col("x").isNull).select("adj_micro").collect()(0).isNullAt(0))
-    intercept[IllegalArgumentException](Experiment.cupedTheta(
+    refused("cupedTheta: |metric| or |covariate| > 1e9")(Experiment.cupedTheta(
       Seq((2000000000L, 1L), (1L, 2L)).toDF("x", "y"), col("y"), col("x")))
     intercept[IllegalArgumentException](Experiment.cupedAdjust(
       df.withColumn("adj_micro", col("x")), col("y"), col("x")))

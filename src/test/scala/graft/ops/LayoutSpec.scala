@@ -58,7 +58,7 @@ class LayoutSpec extends SparkSpec {
 
   test("writeBucketed refuses to clobber a table rooted elsewhere") {
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val base = java.nio.file.Files.createTempDirectory("graft-layoutspec").toString
+    val base = graft.core.Scratch.workDir("layoutspec").toString
     try {
       Layout.writeBucketed(df, "layoutspec_t", s"$base/p1", Seq("k"), 2)
       // same name, same path: a plain refresh — allowed
@@ -78,7 +78,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact bin-packs many small files into few, preserving rows exactly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val base = graft.core.Scratch.workDir("compact").toString
     val df = (0L until 4000L).map(i => (i, s"row-$i-${"x" * 40}")).toDF("id", "v")
     // 40 tiny files — the post-incremental-append degradation
     df.repartition(40).write.parquet(s"$base/src")

@@ -187,21 +187,22 @@ class OpsSpec extends SparkSpec {
       Ops.scd2Merge(history, history, Seq("k")))
   }
 
-  test("scd2Merge validate=true rejects duplicate-key and out-of-order deltas") {
+  test("scd2Merge refuses duplicate-key and out-of-order deltas when the merge runs") {
     val history = Seq((1L, "v2", 10, None: Option[Int]))
       .toDF("k", "payload", "valid_from", "valid_to")
     val dupDelta = Seq((1L, "a", 20), (1L, "b", 25)).toDF("k", "payload", "valid_from")
-    val ex1 = intercept[IllegalArgumentException](
-      Ops.scd2Merge(history, dupDelta, Seq("k"), validate = true))
-    assert(ex1.getMessage.contains("duplicate key"))
+    refused("duplicate key", "e.g. k=1")(
+      Ops.scd2Merge(history, dupDelta, Seq("k")).collect())
+    // a duplicate key the history does not hold yet is refused too
+    val newDup = Seq((7L, "a", 20), (7L, "b", 25)).toDF("k", "payload", "valid_from")
+    refused("duplicate key")(Ops.scd2Merge(history, newDup, Seq("k")).count())
     // valid_from equal to the current row's valid_from → inverted interval
     val staleDelta = Seq((1L, "a", 10)).toDF("k", "payload", "valid_from")
-    val ex2 = intercept[IllegalArgumentException](
-      Ops.scd2Merge(history, staleDelta, Seq("k"), validate = true))
-    assert(ex2.getMessage.contains("inverted"))
-    // a well-formed delta passes validation and merges normally
+    refused("inverted", "for key(s) k=1")(
+      Ops.scd2Merge(history, staleDelta, Seq("k")).collect())
+    // a well-formed delta merges normally
     val okDelta = Seq((1L, "v3", 20)).toDF("k", "payload", "valid_from")
-    val out = Ops.scd2Merge(history, okDelta, Seq("k"), validate = true)
+    val out = Ops.scd2Merge(history, okDelta, Seq("k"))
       .orderBy("valid_from").as[(Long, String, Int, Option[Int])].collect().toSeq
     assert(out == Seq((1L, "v2", 10, Some(20)), (1L, "v3", 20, None)))
   }
@@ -414,7 +415,7 @@ class OpsSpec extends SparkSpec {
     // parquet-backed sides: ConvertToLocalRelation folds filters over
     // in-memory fixtures into the LocalTableScan, which would hide the
     // probe this test exists to locate
-    val base = java.nio.file.Files.createTempDirectory("graft-bloomjoin").toString
+    val base = graft.core.Scratch.workDir("bloomjoin").toString
     (0L until 2000L).map(i => (i % 500, i)).toDF("k", "v")
       .write.parquet(s"$base/big")
     (0L until 50L).map(i => (i * 7, s"s$i")).toDF("k", "name")
@@ -451,20 +452,20 @@ class OpsSpec extends SparkSpec {
     assert(got == Set((1L, "a2"), (4L, "d"), (5L, "e"), (6L, "f2")))
     // malformed op is a producer bug, not a silent reinterpretation
     val badLog = Seq((1L, "x", 1L, "Z")).toDF("k", "v", "seq", "op")
-    intercept[IllegalArgumentException](
-      Ops.cdcApply(base, badLog, Seq("k"), "seq", "op"))
+    refused("malformed CDC log row (op 'Z', keys 1)")(
+      Ops.cdcApply(base, badLog, Seq("k"), "seq", "op").collect())
     // a NULL op would sort NULLS FIRST (winning compaction) then silently
     // delete the key through the null filter — refused instead
     val nullOp = Seq((1L, "x", 9L, null.asInstanceOf[String]))
       .toDF("k", "v", "seq", "op")
-    intercept[IllegalArgumentException](
-      Ops.cdcApply(base, nullOp, Seq("k"), "seq", "op"))
+    refused("malformed CDC log row (op 'null', keys 1)")(
+      Ops.cdcApply(base, nullOp, Seq("k"), "seq", "op").collect())
     // a NULL key row could never be updated or deleted by a later apply
     // (equality anti-join skips nulls) — refused
     val nullKey = Seq((null.asInstanceOf[java.lang.Long], "x", 1L, "I"))
       .toDF("k", "v", "seq", "op")
-    intercept[IllegalArgumentException](
-      Ops.cdcApply(base, nullKey, Seq("k"), "seq", "op"))
+    refused("malformed CDC log row (op 'I', keys null)")(
+      Ops.cdcApply(base, nullKey, Seq("k"), "seq", "op").collect())
     // log missing a base column is refused (the apply can't invent values)
     intercept[IllegalArgumentException](
       Ops.cdcApply(base, log.drop("v"), Seq("k"), "seq", "op"))
@@ -596,9 +597,9 @@ class OpsSpec extends SparkSpec {
       col("w"), Seq("p50" -> 500000L)).collect().toSeq ==
       Ops.weightedPercentiles(df, Seq("g"), col("v"), col("w"),
         Seq("p50" -> 500000L)).collect().toSeq)
-    intercept[IllegalArgumentException](Ops.weightedPercentiles(
+    refused("weightedPercentiles: non-positive weight 0")(Ops.weightedPercentiles(
       Seq(("g", 1L, 0L)).toDF("g", "v", "w"), Seq("g"), col("v"), col("w"),
-      Seq("p50" -> 500000L)))
+      Seq("p50" -> 500000L)).collect())
     intercept[IllegalArgumentException](Ops.weightedPercentiles(
       df, Seq("g"), col("v"), col("w"), Nil))
     intercept[IllegalArgumentException](Ops.weightedPercentiles(
@@ -759,9 +760,9 @@ class OpsSpec extends SparkSpec {
     assert(n.filter(col("bin") === "(null)").count() == 1 &&
       n.agg(sum(col("n_pos") + col("n_neg"))).collect()(0).getLong(0) == 4)
     // guards: infinite WOE, one-class label, key-like bins, determinism
-    intercept[IllegalArgumentException](Ops.woeIv(
+    refused("has zero positives or negatives")(Ops.woeIv(
       Seq(("A", true), ("B", false)).toDF("bin0", "l"),
-      col("bin0"), col("l")))
+      col("bin0"), col("l")).collect())
     intercept[IllegalArgumentException](Ops.woeIv(
       Seq(("A", true), ("A", true)).toDF("bin0", "l"),
       col("bin0"), col("l")))
@@ -805,9 +806,9 @@ class OpsSpec extends SparkSpec {
     assert(Ops.bhAdjust(df.repartition(5), Seq("fam"), col("p"), 50000L)
       .select("id", "bh_rank", "m_tests", "rejected")
       .as[(Long, Long, Long, Boolean)].collect().toMap2 == got)
-    intercept[IllegalArgumentException](Ops.bhAdjust(
+    refused("p-value outside [0, 1e6] micros")(Ops.bhAdjust(
       Seq(("f", 1L, 1000001L)).toDF("fam", "id", "p"),
-      Seq("fam"), col("p"), 50000L))
+      Seq("fam"), col("p"), 50000L).collect())
     intercept[IllegalArgumentException](Ops.bhAdjust(df, Seq("fam"),
       col("p"), 0L))
     intercept[IllegalArgumentException](Ops.bhAdjust(
@@ -887,11 +888,11 @@ class OpsSpec extends SparkSpec {
     assert(Ops.proportionReport(
       Seq(("f", true), ("f", false)).toDF("fam", "y"), Seq("fam"),
       col("y")).select("k_pos").as[Long].collect().toSeq == Seq(1L))
-    intercept[IllegalArgumentException](Ops.proportionReport(
+    refused("proportionReport: label must be exactly 0/1")(Ops.proportionReport(
       Seq(("f", 2L)).toDF("fam", "y"), Seq("fam"), col("y")).collect())
     // a FRACTIONAL label refuses too — it must not truncate to 0/1 and
-    // slip past the probe (ADVICE r17)
-    intercept[IllegalArgumentException](Ops.proportionReport(
+    // slip past the refusal (ADVICE r17)
+    refused("proportionReport: label must be exactly 0/1")(Ops.proportionReport(
       Seq(("f", 0.5)).toDF("fam", "y"), Seq("fam"), col("y")).collect())
     intercept[IllegalArgumentException](Ops.proportionReport(df,
       Seq("fam"), col("y"), zMicro = 0L))

@@ -200,9 +200,8 @@ class TimeSeriesSpec extends SparkSpec {
       .count() == 0)
     // pre-1970 timestamps are refused, not mis-bucketed
     val pre = Seq((1L, at(-5))).toDF("u", "t")
-    val e = intercept[IllegalArgumentException](
-      TimeSeries.cohortRetention(pre, col("u"), col("t"), 100L))
-    assert(e.getMessage.contains("pre-1970"))
+    refused("pre-1970")(
+      TimeSeries.cohortRetention(pre, col("u"), col("t"), 100L).collect())
     intercept[IllegalArgumentException](
       TimeSeries.cohortRetention(ev, col("u"), col("t"), 0L))
   }
@@ -242,9 +241,8 @@ class TimeSeriesSpec extends SparkSpec {
     // guards: NULL value refused, h positive
     val withNull = Seq(("a", at(0L), Some(1.0)), ("a", at(1L), None))
       .toDF("k", "t", "x")
-    val e = intercept[IllegalArgumentException](
-      TimeSeries.cusum(withNull, Seq("k"), "t", col("x"), 1L, 1L))
-    assert(e.getMessage.contains("NULL value"))
+    refused("NULL value")(
+      TimeSeries.cusum(withNull, Seq("k"), "t", col("x"), 1L, 1L).collect())
     intercept[IllegalArgumentException](
       TimeSeries.cusum(df, Seq("k"), "t", col("x"), 1L, 0L))
   }
@@ -349,8 +347,8 @@ class TimeSeriesSpec extends SparkSpec {
       TimeSeries.interpolateGrid(dup, Seq("k"), "t", col("v"), 10L))
     assert(e.getMessage.contains("duplicate"))
     val pre = Seq(("a", at(-5), 1L)).toDF("k", "t", "v")
-    intercept[IllegalArgumentException](
-      TimeSeries.interpolateGrid(pre, Seq("k"), "t", col("v"), 10L))
+    refused("interpolateGrid: pre-1970 timestamp")(
+      TimeSeries.interpolateGrid(pre, Seq("k"), "t", col("v"), 10L).collect())
     val ok = Seq(("a", at(10), 1L)).toDF("k", "t", "v")
     intercept[IllegalArgumentException](
       TimeSeries.interpolateGrid(ok, Seq("k"), "t", col("v"), 0L))
@@ -390,8 +388,8 @@ class TimeSeriesSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap == got)
     intercept[IllegalArgumentException](
       TimeSeries.rollingActive(ev, col("u"), col("t"), 0))
-    intercept[IllegalArgumentException](TimeSeries.rollingActive(
-      Seq((1L, at(-2))).toDF("u", "t"), col("u"), col("t"), 3))
+    refused("rollingActive: pre-1970 timestamp")(TimeSeries.rollingActive(
+      Seq((1L, at(-2))).toDF("u", "t"), col("u"), col("t"), 3).collect())
     assert(TimeSeries.rollingActive(
       Seq((Option.empty[Long], Some(at(1)))).toDF("u", "t"),
       col("u"), col("t"), 3).count() == 0)
@@ -420,8 +418,8 @@ class TimeSeriesSpec extends SparkSpec {
       TimeSeries.rollingActiveSketch(ev, col("u"), col("t"), 0))
     intercept[IllegalArgumentException](
       TimeSeries.rollingActiveSketch(ev, col("u"), col("t"), 3, lgK = 2))
-    intercept[IllegalArgumentException](TimeSeries.rollingActiveSketch(
-      Seq((1L, at(-2))).toDF("u", "t"), col("u"), col("t"), 3))
+    refused("rollingActiveSketch: pre-1970 timestamp")(TimeSeries.rollingActiveSketch(
+      Seq((1L, at(-2))).toDF("u", "t"), col("u"), col("t"), 3).collect())
   }
 
   test("calendarPeriod + cohortRetentionCalendar: engine-shared buckets (X76)") {
@@ -458,9 +456,9 @@ class TimeSeriesSpec extends SparkSpec {
     // guards: unknown unit, pre-1970
     intercept[IllegalArgumentException](
       TimeSeries.calendarPeriod(col("t"), "fortnight"))
-    intercept[IllegalArgumentException](TimeSeries.cohortRetentionCalendar(
+    refused("cohortRetentionCalendar: pre-1970 timestamp")(TimeSeries.cohortRetentionCalendar(
       Seq((1L, Timestamp.valueOf("1969-12-31 23:59:59"))).toDF("u", "t"),
-      col("u"), col("t"), "month"))
+      col("u"), col("t"), "month").collect())
     // determinism under repartition
     assert(TimeSeries.cohortRetentionCalendar(ev.repartition(5), col("u"),
         col("t"), "month").orderBy("cohort", "offset")
@@ -847,20 +845,17 @@ class TimeSeriesSpec extends SparkSpec {
     assert(run(ys.zipWithIndex.map { case (y, i) =>
       ("f", i.toLong + 100, y) }, maxLag = 3) == expect)
     // gap refuses
-    val e1 = intercept[IllegalArgumentException] {
+    refused("consecutive") {
       run(Seq(("g", 1L, 1L), ("g", 3L, 2L)))
     }
-    assert(e1.getMessage.contains("consecutive"))
     // duplicate refuses
-    val e2 = intercept[IllegalArgumentException] {
+    refused("duplicate") {
       run(Seq(("g", 1L, 1L), ("g", 1L, 2L)))
     }
-    assert(e2.getMessage.contains("duplicate"))
-    // budget probe refuses n³·max|y|² past the DECIMAL(38) headroom
-    val e3 = intercept[IllegalArgumentException] {
+    // budget refusal: n³·max|y|² past the DECIMAL(38) headroom
+    refused("budget") {
       run((1 to 150).map(i => ("b", i.toLong, 1000000000000000L)))
     }
-    assert(e3.getMessage.contains("budget"))
     // maxLag guard
     intercept[IllegalArgumentException](run(lin, maxLag = 0))
     // determinism under repartition
@@ -1086,10 +1081,10 @@ class TimeSeriesSpec extends SparkSpec {
       col("x"), col("y"), maxLag = 2).select("r_micro").collect()
     assert(nulls.forall(_.isNullAt(0)))
     // duplicate and gap refusals
-    intercept[IllegalArgumentException](TimeSeries.crossCorrelation(
+    refused("crossCorrelation: duplicate (group, period)")(TimeSeries.crossCorrelation(
       Seq(("g", 1L, 1L, 1L), ("g", 1L, 2L, 2L)).toDF("gr", "p", "x", "y"),
       col("gr"), col("p"), col("x"), col("y")))
-    intercept[IllegalArgumentException](TimeSeries.crossCorrelation(
+    refused("crossCorrelation: non-consecutive periods")(TimeSeries.crossCorrelation(
       Seq(("g", 1L, 1L, 1L), ("g", 3L, 2L, 2L)).toDF("gr", "p", "x", "y"),
       col("gr"), col("p"), col("x"), col("y")))
     // determinism under repartition

@@ -110,7 +110,7 @@ class TrendTestsSpec extends SparkSpec {
       .as[(Long, Long)].collect()(0)
     assert(one == (bruteK, bruteX), s"got $one, brute ($bruteK, $bruteX)")
     // duplicate-x refusal; determinism under repartition
-    intercept[IllegalArgumentException](TrendTests.pettitt(
+    refused("pettitt: duplicate (group, x) observation")(TrendTests.pettitt(
       Seq(("g", 1L, 1L), ("g", 1L, 2L)).toDF("gr", "x", "y"),
       Seq("gr"), col("x"), col("y")))
     assert(TrendTests.pettitt(df.repartition(5), Seq("gr"), col("x"),

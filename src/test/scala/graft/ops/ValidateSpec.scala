@@ -143,9 +143,9 @@ class ValidateSpec extends SparkSpec {
       .orderBy("digit")
       .as[(String, Int, Long, Long, Long, Long, Long, Long)]
       .collect().toSeq == got)
-    intercept[IllegalArgumentException](Validate.benfordAudit(
-      Seq(("g", 0L)).toDF("grp", "v"), Seq("grp"), col("v")))
-    intercept[IllegalArgumentException](Validate.benfordAudit(
-      Seq(("g", -7L)).toDF("grp", "v"), Seq("grp"), col("v")))
+    refused("benfordAudit: non-positive value")(Validate.benfordAudit(
+      Seq(("g", 0L)).toDF("grp", "v"), Seq("grp"), col("v")).collect())
+    refused("benfordAudit: non-positive value")(Validate.benfordAudit(
+      Seq(("g", -7L)).toDF("grp", "v"), Seq("grp"), col("v")).collect())
   }
 }

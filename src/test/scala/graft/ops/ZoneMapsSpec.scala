@@ -10,7 +10,7 @@ class ZoneMapsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).resolve("t").toString
+    graft.core.Scratch.workDir(prefix).resolve("t").toString
 
   // 100 rows, v = 0..99, written as 10 range-clustered files of 10 rows:
   // file i covers exactly v ∈ [10i, 10i+9]

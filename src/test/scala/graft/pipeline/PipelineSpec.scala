@@ -21,7 +21,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("materialize checkpoints a stage as parquet (task-boundary analog)") {
-    val dir = Files.createTempDirectory("graft-pipe").toString
+    val dir = graft.core.Scratch.workDir("pipe").toString
     val p = new Pipeline(Seq(
       Stage("src", Nil, _ => Seq(1, 2, 3).toDF("v")),
       Stage("doubled", Seq("src"), d => d("src").withColumn("v2", col("v") * 2))))

@@ -694,8 +694,8 @@ class PlanAuditSpec extends SparkSpec {
     // re-applied — parquet's own row-group stats then prune WITHIN
     // survivors, which only works if the predicate is PUSHED
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("plan-zm").resolve("t").toString
-    val man = java.nio.file.Files.createTempDirectory("plan-zm-man").resolve("m").toString
+    val dir = graft.core.Scratch.workDir("plan-zm").resolve("t").toString
+    val man = graft.core.Scratch.workDir("plan-zm-man").resolve("m").toString
     graft.ops.ZoneMaps.writeRangeSharded(
       (0L until 100L).map(v => (v, s"r$v")).toDF("v", "tag"),
       dir, Seq("v"), rowsPerFile = 10)
@@ -1010,8 +1010,8 @@ class PlanAuditSpec extends SparkSpec {
     // reach the parquet scan so row-group stats prune WITHIN survivors —
     // the two skipping layers compose only if the predicate is pushed
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("plan-bs").toString
-    val man = java.nio.file.Files.createTempDirectory("plan-bs-man").toString
+    val dir = graft.core.Scratch.workDir("plan-bs").toString
+    val man = graft.core.Scratch.workDir("plan-bs-man").toString
     Seq.tabulate(40)(i => (i.toLong, i.toLong / 10, s"row$i"))
       .toDF("k", "__shard", "payload").repartition(1)
       .write.partitionBy("__shard").mode("overwrite").parquet(dir)

@@ -51,12 +51,10 @@ class StagingSpec extends SparkSpec {
     val during = new java.util.concurrent.atomic.AtomicReference[String]
     val stream = Staging.fileStream(graft.core.Scratch.workDir("spec-throw"),
       batches: _*)
-    val e = intercept[Exception](stream.drain { (_, _) =>
+    refused("boom in batch")(stream.drain { (_, _) =>
       during.set(spark.conf.get(key))
       throw new IllegalStateException("boom in batch")
     })
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("boom in batch")), e)
     assert(during.get == "8")
     assert(spark.conf.get(key) == before)
     assert(spark.streams.active.isEmpty)

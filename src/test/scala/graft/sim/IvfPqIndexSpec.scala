@@ -1,6 +1,5 @@
 package graft.sim
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -31,7 +30,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("append adds files without touching a byte of the existing index") {
-    val root = Files.createTempDirectory("graft-ivfpq").toString
+    val root = graft.core.Scratch.workDir("ivfpq").toString
     val idx = s"$root/index"
     IvfPqIndex.build(vecs(0 until 40), "vec_id", "embedding",
       codebooks, centroids, idx)
@@ -60,7 +59,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("search prunes to probed cell partitions and never reads floats from the index") {
-    val root = Files.createTempDirectory("graft-ivfpq3").toString
+    val root = graft.core.Scratch.workDir("ivfpq3").toString
     val all = vecs(0 until 60)
     IvfPqIndex.build(all.filter(col("vec_id") % 2 === 0), "vec_id",
       "embedding", codebooks, centroids, s"$root/idx")
@@ -87,7 +86,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("search re-rank fetch pushes candidate ids into the corpus scan") {
-    val root = Files.createTempDirectory("graft-ivfpq5").toString
+    val root = graft.core.Scratch.workDir("ivfpq5").toString
     IvfPqIndex.build(vecs(0 until 60), "vec_id", "embedding",
       codebooks, centroids, s"$root/idx")
     // parquet-backed corpus: an in-memory fixture would fold the filter
@@ -106,7 +105,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("maintain compacts only fragmented cells; retrieval unchanged") {
-    val root = Files.createTempDirectory("graft-ivfpq4").toString
+    val root = graft.core.Scratch.workDir("ivfpq4").toString
     val idx = s"$root/idx"
     IvfPqIndex.build(vecs(0 until 20), "vec_id", "embedding",
       codebooks, centroids, idx)
@@ -149,7 +148,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("build+append retrieval == single full build retrieval") {
-    val root = Files.createTempDirectory("graft-ivfpq2").toString
+    val root = graft.core.Scratch.workDir("ivfpq2").toString
     val all = vecs(0 until 60).cache()
     IvfPqIndex.build(all.filter(col("vec_id") % 2 === 0), "vec_id",
       "embedding", codebooks, centroids, s"$root/incr")
@@ -167,7 +166,7 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("searchAll == per-probe search, off ONE pruned index scan") {
-    val root = Files.createTempDirectory("graft-ivfpq4").toString
+    val root = graft.core.Scratch.workDir("ivfpq4").toString
     val all = vecs(0 until 60).cache()
     IvfPqIndex.build(all, "vec_id", "embedding", codebooks, centroids,
       s"$root/idx")

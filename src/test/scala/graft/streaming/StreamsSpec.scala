@@ -87,7 +87,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("file-source streaming: parquet dir -> windowed counts -> sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = graft.core.Scratch.workDir("stream").toString
     Seq((ts(1), "a", 1.0), (ts(2), "a", 2.0), (ts(40), "b", 3.0))
       .toDF("ts", "event_type", "value")
       .write.mode("overwrite").parquet(dir)

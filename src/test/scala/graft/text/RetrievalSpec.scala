@@ -91,7 +91,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("inverted index: indexed BM25 ≡ scan BM25; term filter pushed (X72)") {
-    val dir = java.nio.file.Files.createTempDirectory("ii").resolve("idx").toString
+    val dir = graft.core.Scratch.workDir("ii").resolve("idx").toString
     InvertedIndex.build(docs, "doc_id", "text", dir, shards = 2)
     // postings carry the denormalized doc length and exact tfs
     val postings = spark.read.parquet(s"$dir/postings")
@@ -126,7 +126,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("segmented index: exactly-once commits, merge-stable, ≡ scan (X72⊗X59)") {
-    val dir = java.nio.file.Files.createTempDirectory("iiseg").toString
+    val dir = graft.core.Scratch.workDir("iiseg").toString
     val b0 = docs.filter(col("doc_id") <= 2)
     val b1 = docs.filter(col("doc_id") > 2)
     assert(InvertedIndex.indexSegment(spark, dir, 0L, b0, "doc_id", "text"))
@@ -156,7 +156,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("index tombstones: mask-at-query, physical drop at merge, lifetime scalars (X72)") {
-    val dir = java.nio.file.Files.createTempDirectory("iidel").toString
+    val dir = graft.core.Scratch.workDir("iidel").toString
     assert(InvertedIndex.indexSegment(spark, dir, 0L,
       docs.filter(col("doc_id") <= 2), "doc_id", "text"))
     assert(InvertedIndex.indexSegment(spark, dir, 1L,
@@ -201,7 +201,7 @@ class RetrievalSpec extends SparkSpec {
     // and its clearing fold must SURVIVE the clear (else its docs are
     // permanently resurrected) — replayed here with an explicit applied
     // bound: the clear saw only delta 0 applied, delta 1 raced in
-    val dir = java.nio.file.Files.createTempDirectory("iirace").toString
+    val dir = graft.core.Scratch.workDir("iirace").toString
     val t = graft.core.Table(spark, dir, "ii_deletes")
     assert(t.ledgerAppendIfAbsent(0L, Seq(1L, 2L).toDF("doc_id")))
     assert(t.ledgerAppendIfAbsent(1L, Seq(3L).toDF("doc_id")))
@@ -229,12 +229,11 @@ class RetrievalSpec extends SparkSpec {
     // system-bit popcount), so it costs zero extra jobs and surfaces at
     // the action, naming the id
     val dup = Seq((7L, 1), (7L, 2), (2L, 3)).toDF("doc_id", "rank")
-    val ex = intercept[Exception](
+    refused("id 7", "more than once")(
       Retrieval.rrfFuse(Seq(clean, dup), "doc_id").collect())
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
-    assert(msgs(ex).exists(m => m != null && m.contains("id 7") &&
-      m.contains("more than once")), s"wrong error: $ex")
+    // the refusal survives a projection that drops the fused score
+    refused("id 7", "more than once")(
+      Retrieval.rrfFuse(Seq(clean, dup), "doc_id").select("doc_id").collect())
     // clean inputs fuse normally, and ids shared ACROSS rankings are fine
     assert(Retrieval.rrfFuse(Seq(clean, clean), "doc_id").count() == 2)
     // the 63-ranking bitmask cap is an eager contract
